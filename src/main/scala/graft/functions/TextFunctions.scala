@@ -13,7 +13,7 @@ object TextFunctions {
 
   /** Whitespace tokens (empty string → single empty token, like DuckDB's
    * string_split_regex — keeps oracle parity). */
-  def tokens(text: Column): Column = split(trim(text), "\\s+")
+  def tokens(text: Column): Column = SplitWhitespace(trim(text))
 
   /** C11: token count. */
   def tokenCount(text: Column): Column = size(tokens(text))

@@ -1,6 +1,6 @@
 package graft.logs
 
-import graft.functions.RegexGroups
+import graft.functions.{ApacheTimestamp, RegexGroups, SplitWhitespace}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
@@ -23,7 +23,13 @@ import java.nio.charset.StandardCharsets
  * the format string compiles on the driver to (schema, regex, a tree of
  * Catalyst column expressions); execution is a map-only scan — text
  * source → one codegen'd regex exec per line ([[RegexGroups]]) → built-in
- * expressions for every typed column. Zero shuffle in the non-raw path;
+ * expressions for the typed columns. Two conversions that cost more than
+ * the match itself run as byte kernels instead: the Apache `%t` through
+ * [[graft.functions.ApacheTimestamp]], with the `DateTimeFormatter`
+ * (`try_to_timestamp`) as the fallback for the lines it leaves
+ * undecided, and the `%r` token split through
+ * [[graft.functions.SplitWhitespace]] (exactly `split(_, "\\s+")`,
+ * falling back to it on invalid UTF-8). Zero shuffle in the non-raw path;
  * raw mode adds a per-file `row_number` over Hadoop byte offsets for
  * split-correct `line_number`.
  *
@@ -429,14 +435,14 @@ object HttpdLog {
 
     // Materialize the %r token split once: its sub-columns reference the
     // array several times inside conditionals, where whole-stage codegen's
-    // subexpression elimination does not reach — without this the regex
-    // split would re-run per sub-column per row (measured 10x the cost of
-    // the line-match regex itself).
+    // subexpression elimination does not reach — without this the split
+    // would re-run per sub-column per row (as a regex split it measured
+    // 10x the cost of the line-match regex itself).
     val reqIdx = fmt.fields.indices.find(i => !fmt.fields(i).skip && fmt.fields(i).isRequestLine)
     val base = reqIdx match {
       case Some(i) =>
         filtered
-          .withColumn("__req_toks", split(cap(i), "\\s+"))
+          .withColumn("__req_toks", SplitWhitespace(cap(i)))
           .withColumn("__req_fp", element_at(col("__req_toks"), 2))
           .withColumn("__req_qpos", instr(col("__req_fp"), "?"))
       case None => filtered
@@ -578,7 +584,9 @@ object HttpdLog {
 
     for ((f, v) <- fields.zip(caps)) f.tsKind match {
       case TsKind.Apache =>
-        baseExprs += unix_micros(try_to_timestamp(v, lit("dd/MMM/yyyy:HH:mm:ss xx")))
+        // the formatter runs only on lines the byte kernel leaves undecided
+        baseExprs += coalesce(ApacheTimestamp(v),
+          unix_micros(try_to_timestamp(v, lit("dd/MMM/yyyy:HH:mm:ss xx"))))
       case TsKind.EpochSec =>
         baseExprs += v.try_cast(LongType) * 1000000L
       case TsKind.EpochMsec =>

@@ -542,11 +542,11 @@ object CorpusPipeline {
       textCol: String,
       maxTokens: Int): DataFrame = {
     require(maxTokens > 0, "maxTokens must be positive")
-    // trim+split leaves at most one stray "" (all-whitespace text);
+    // tokens() leaves stray "" tokens (e.g. all-whitespace text);
     // array_remove drops it codegen'd — no interpreted HOF in this
     // map-only hot path (CLAUDE.md: HOF lambdas run interpreted)
     docs
-      .withColumn("__toks", array_remove(split(trim(col(textCol)), "\\s+"), ""))
+      .withColumn("__toks", array_remove(TF.tokens(col(textCol)), ""))
       .withColumn("__n", size(col("__toks")))
       .filter(col("__n") > 0)
       .withColumn("chunk_id",

@@ -1060,10 +1060,6 @@ object Dedup {
   private def md5GramHash: Column =
     conv(substring(md5(col("g")), 1, 13), 16, 10).cast(LongType)
 
-  private def md5SlotMin(j: Int): Column =
-    min(conv(substring(md5(concat(col("h").cast(StringType), lit(s"_$j"))),
-      1, 13), 16, 10).cast(LongType)).as(s"s$j")
-
   private def sigBandStructs(sigs: Int, bands: Int): Seq[Column] = {
     val rpb = sigs / bands
     (0 until bands).map { b =>

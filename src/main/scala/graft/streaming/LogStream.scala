@@ -977,7 +977,7 @@ object LogStream {
       .select(
         col("source"),
         col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("ntok"))
+        graft.functions.TextFunctions.tokenCount(col("text")).cast("long").as("ntok"))
       .as[BudgetTok]
       .groupByKey(_.source)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(

@@ -75,4 +75,51 @@ class ScanStatsSpec extends SparkSpec {
     assert(r.getLong(1) == 2L && r.getLong(2) == 1L)
     assert(r.getLong(3) == good.length + 17L + 2L)
   }
+
+  // Self-contained twins of the two reference-backed cases above: the
+  // same properties over a synthesized malformed file (valid lines,
+  // regex misses — truncated, garbage, invalid UTF-8 — and an empty
+  // line), so they run wherever the reference fixtures are absent.
+  private lazy val synthMalformed: (String, Seq[Array[Byte]]) = {
+    val tmp = Files.createTempDirectory("graft_scanstats_synth")
+    val lines: Seq[Array[Byte]] = Seq(
+      "1.1.1.1 - - [10/Oct/2000:13:55:36 -0700] \"GET /x HTTP/1.0\" 200 10",
+      "2.2.2.2 - bob [11/Oct/2000:01:02:03 +0000] \"POST /y?q=1 HTTP/1.1\" 404 -",
+      "3.3.3.3 - - [12/Oct/2000:00:00:00 +0545] \"GET\t/z\u000bHTTP/1.1\" 500 7",
+      "1.1.1.1 - - [10/Oct/2000:13:55:36 -0700] \"GET /x HTTP/1.0\" 200",
+      "this is not a log line",
+      "",
+      "4.4.4.4 - - [10/Oct/2000 13:55:36] \"GET / HTTP/1.0\" 200 1 extra")
+      .map(_.getBytes(StandardCharsets.UTF_8)) :+
+      Array[Byte]('5', '.', '5', ' ', 0xff.toByte, 0xc3.toByte, '[', ']')
+    val p = tmp.resolve("malformed.log")
+    Files.write(p, lines.map(l => l :+ '\n'.toByte).reduce(_ ++ _))
+    (p.toString, lines)
+  }
+
+  test("scanStats on a synthesized malformed file: rows / errors, bytes = \u03a3(len+1)") {
+    val (path, lines) = synthMalformed
+    val st = HttpdLog.scanStats(spark, path, formatType = "common").collect()
+    assert(st.length == 1)
+    val r = st.head
+    // 7 non-empty lines (the empty one is skipped), 4 of them regex misses
+    assert(r.getLong(1) == 7L && r.getLong(2) == 4L)
+    assert(r.getLong(3) == lines.filter(_.nonEmpty).map(_.length + 1L).sum)
+    // the reference formula cross-checked against the raw-mode parse
+    // (its String round trip turns the invalid bytes into U+FFFD, so the
+    // two invalid bytes read back as 3 + 3)
+    val raw = HttpdLog.read(spark, path, formatType = "common", raw = true)
+    val expBytes = raw.agg(sum(octet_length(col("raw_line")) + 1)).collect()(0).getLong(0)
+    assert(r.getLong(3) == expBytes - 4L)
+  }
+
+  test("observeAs counters equal scanStats on a synthesized malformed file, in non-raw mode") {
+    val (path, _) = synthMalformed
+    val df = HttpdLog.read(spark, path, formatType = "common", observeAs = "synth")
+    assert(df.collect().length == 3)
+    val m = df.queryExecution.observedMetrics("synth")
+    val exp = HttpdLog.scanStats(spark, path, formatType = "common").collect()(0)
+    assert(m.getLong(0) == exp.getLong(1) && m.getLong(1) == exp.getLong(2))
+    assert(m.getLong(2) == exp.getLong(3))
+  }
 }
