@@ -1644,24 +1644,9 @@ object CorpusPipeline {
       .transform(Scoped.persistTracked)
     fps.count() // pin before the three consumers (sourceDivergence note)
     val totals = fps.groupBy("__id").agg(count(lit(1)).as("nfp"))
-    // Pair generation (r19): one pass over the fingerprint postings —
-    // same-key window df count on a single fp-key exchange, the
-    // maxDocsPerFp gate, then the ≤ maxDocsPerFp sorted owner list per
-    // fp collected WITHOUT a new exchange and the i<j combinations
-    // exploded map-side (the containmentPairs/dupGramStats device; the
-    // old kept = fps⋈dfTbl SELF-join evaluated the df aggregate once
-    // per pair side and re-exchanged the posting frame).
-    val wfp = W.partitionBy("fp")
-    val grpFp = fps
-      .withColumn("__df", count(lit(1)).over(wfp))
-      .filter(col("__df") <= maxDocsPerFp)
-      .groupBy("fp").agg(sort_array(collect_list(col("__id"))).as("__ids"))
-    val pairs = grpFp
-      .select(col("__ids"), posexplode(col("__ids")).as(Seq("__pa", "doc_a")))
-      .select(col("doc_a"),
-        explode(slice(col("__ids"), col("__pa") + lit(2), size(col("__ids"))))
-          .as("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("shared_fps"))
+    val pairs = Dedup.sharedKeyPairs(fps, "fp", "__id", maxDocsPerFp)
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+        col("n").as("shared_fps"))
       .filter(col("shared_fps") >= minShared)
     pairs
       .join(totals.select(col("__id").as("doc_a"), col("nfp").as("fps_a")), "doc_a")

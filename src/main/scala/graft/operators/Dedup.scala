@@ -368,16 +368,14 @@ object Dedup {
     // are), per-task fixed cost dominates — loopPartitions sizes the
     // loop's shuffles to the state, q_d2-style, and restores the conf
     // after (0 = leave the session setting alone).
-    val spark = edges.sparkSession
-    val prevConf =
-      if (loopPartitions > 0) {
-        val p = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", loopPartitions)
-        Some(p)
-      } else None
-    try connectedComponentsLoop(edges, srcCol, dstCol, maxIter)
-    finally prevConf.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
+    Scoped.withConf(edges.sparkSession, loopConf(loopPartitions): _*)(
+      connectedComponentsLoop(edges, srcCol, dstCol, maxIter))
   }
+
+  /** The shuffle-partition override `loopPartitions` asks for (none for 0). */
+  private def loopConf(loopPartitions: Int): Seq[(String, String)] =
+    if (loopPartitions > 0) Seq("spark.sql.shuffle.partitions" -> loopPartitions.toString)
+    else Nil
 
   /**
    * C54: quality-aware dedup — when a near-dup family is found, keep
@@ -492,15 +490,8 @@ object Dedup {
       dstCol: String = "id_b",
       maxIter: Int = 20,
       loopPartitions: Int = 0): DataFrame = {
-    val spark = edges.sparkSession
-    val prevConf =
-      if (loopPartitions > 0) {
-        val p = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", loopPartitions)
-        Some(p)
-      } else None
-    try starLoop(edges, srcCol, dstCol, maxIter)._1
-    finally prevConf.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
+    Scoped.withConf(edges.sparkSession, loopConf(loopPartitions): _*)(
+      starLoop(edges, srcCol, dstCol, maxIter)._1)
   }
 
   /** Test hook: star components plus the number of rounds taken. */
@@ -1012,34 +1003,7 @@ object Dedup {
       .transform(Scoped.persistTracked)
     sh.count() // pin: feeds sizes and the posting-group pass
     val sizes = sh.groupBy("__id").agg(count(lit(1)).as("sz"))
-    // Pair generation (r19): ONE pass over the postings instead of the
-    // kept = sh⋈dfTbl SELF-join — that shape evaluated dfTbl and the
-    // join once PER pair side (the df⋈agg(df) recompute class,
-    // CLAUDE.md) and moved the 25M-row ×100 posting frame through ~5
-    // full-size exchanges for a pair stream that is only Σ df(df−1)/2
-    // ≈ 1.7M rows (measured /tmp/sf10: Σ df² 28.8M vs Σ df 25.4M —
-    // nearly all grams are df=1). Now: one exchange on the gram key, a
-    // same-key window df count (near-unique keys — the window ≈
-    // aggregate regime of the BASELINE r16 appendix, and it saves the
-    // join's second exchange), the dfCap gate, then the dupGramStats
-    // device — collect the ≤ dfCap sorted owner list per gram WITHOUT
-    // a new exchange and explode the i<j combinations map-side.
-    // Per-gram state is bounded by dfCap ids (the cap gate runs before
-    // the collect). Pair multiplicity per gram is exactly 1 (postings
-    // are doc-distinct), so the count-per-(a,b) aggregate is the same
-    // capped intersection as the old self-join's.
-    val wg = org.apache.spark.sql.expressions.Window.partitionBy("__g")
-    val grp = sh
-      .withColumn("__df", count(lit(1)).over(wg))
-      .filter(col("__df") <= dfCap)
-      .groupBy("__g").agg(sort_array(collect_list(col("__id"))).as("__ids"))
-    val pairs = grp
-      .select(col("__ids"), posexplode(col("__ids")).as(Seq("__pa", "id_a")))
-      .select(col("id_a"),
-        explode(slice(col("__ids"), col("__pa") + lit(2), size(col("__ids"))))
-          .as("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    pairs
+    sharedKeyPairs(sh, "__g", "__id", dfCap).withColumnRenamed("n", "inter")
       .join(sizes.select(col("__id").as("id_a"), col("sz").as("sz_a")), "id_a")
       .join(sizes.select(col("__id").as("id_b"), col("sz").as("sz_b")), "id_b")
       .withColumn("contain_a_ppm", expr("inter * 1000000L div sz_a"))
@@ -1048,6 +1012,45 @@ object Dedup {
       .select("id_a", "id_b", "inter", "sz_a", "sz_b",
         "contain_a_ppm", "contain_b_ppm")
   }
+
+  /**
+   * The posting-group pair device (containmentPairs, lshRecallAudit,
+   * CorpusPipeline.winnowFingerprints): over doc-distinct `postings`
+   * (`owner`, `key`), every owner pair sharing a key whose df ≤ `cap`,
+   * with the number of such shared keys.
+   *
+   * r19: ONE pass over the postings instead of the kept = p⋈dfTbl
+   * SELF-join — that shape evaluated dfTbl and the join once PER pair
+   * side (the df⋈agg(df) recompute class) and moved the
+   * 25M-row ×100 posting frame through ~5 full-size exchanges for a
+   * pair stream that is only Σ df(df−1)/2 ≈ 1.7M rows (measured at
+   * sf10: Σ df² 28.8M vs Σ df 25.4M — nearly all grams are df=1).
+   * Now: one exchange on the key, a same-key window df count
+   * (near-unique keys — the window ≈ aggregate regime of the BASELINE
+   * r16 appendix, and it saves the join's second exchange), the cap
+   * gate, then the dupGramStats device — collect the ≤ cap sorted
+   * owner list per key WITHOUT a new exchange and explode the i<j
+   * combinations map-side. Per-key state is bounded by cap ids (the
+   * gate runs before the collect). Pair multiplicity per key is
+   * exactly 1 (postings are doc-distinct), so the count-per-(a,b)
+   * aggregate is the same capped intersection as the old self-join's.
+   * editDistancePairs keeps its own struct-payload variant: its gate
+   * comes from a joined stats table its star path also needs.
+   *
+   * @return (id_a, id_b, n) with id_a < id_b
+   */
+  private[operators] def sharedKeyPairs(
+      postings: DataFrame, key: String, owner: String, cap: Int): DataFrame =
+    postings
+      .withColumn("__df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(key)))
+      .filter(col("__df") <= cap)
+      .groupBy(key).agg(sort_array(collect_list(col(owner))).as("__ids"))
+      .select(col("__ids"), posexplode(col("__ids")).as(Seq("__pa", "id_a")))
+      .select(col("id_a"),
+        explode(slice(col("__ids"), col("__pa") + lit(2), size(col("__ids"))))
+          .as("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n"))
 
   /** Shared md5 signature-chain device (C68/C93/C95 — the bit-for-bit
    * replay the DuckDB oracles depend on, kept in ONE place so the
@@ -1153,24 +1156,7 @@ object Dedup {
     hs.count() // pin: sizes, df table and the pair path (the sig
                // path is map-only over the sampled docs since r20)
     val sizes = hs.groupBy("id").agg(count(lit(1)).as("sz"))
-    // Pair generation (r19): one pass over the postings — same-key
-    // window df count on a single gram-key exchange, dfCap gate, then
-    // the ≤ dfCap sorted owner list per gram collected WITHOUT a new
-    // exchange and the i<j combinations exploded map-side (the
-    // containmentPairs/dupGramStats device; the old kept = hs⋈dfT
-    // SELF-join evaluated dfT once per pair side and re-exchanged the
-    // full posting frame — the df⋈agg(df) recompute class).
-    val wh = org.apache.spark.sql.expressions.Window.partitionBy("h")
-    val grpP = hs
-      .withColumn("__df", count(lit(1)).over(wh))
-      .filter(col("__df") <= dfCap)
-      .groupBy("h").agg(sort_array(collect_list(col("id"))).as("__ids"))
-    val pairs = grpP
-      .select(col("__ids"), posexplode(col("__ids")).as(Seq("__pa", "id_a")))
-      .select(col("id_a"),
-        explode(slice(col("__ids"), col("__pa") + lit(2), size(col("__ids"))))
-          .as("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+    val pairs = sharedKeyPairs(hs, "h", "id", dfCap).withColumnRenamed("n", "inter")
       .join(sizes.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
       .join(sizes.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
       .withColumn("j_ppm", expr("inter * 1000000L div (sz_a + sz_b - inter)"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -32,6 +32,9 @@ import org.apache.spark.storage.StorageLevel
  * degrades to a plain persist — the documented
  * "`spark.catalog.clearCache()` between corpora" contract still
  * applies to bare operator calls.
+ *
+ * [[withConf]] is the same scope for session confs an operator or
+ * stream driver narrows (shuffle partitions, no-data micro-batches).
  */
 object Scoped {
   private val collector = new ThreadLocal[ListBuffer[DataFrame]]
@@ -43,6 +46,20 @@ object Scoped {
     val buf = collector.get()
     if (buf != null) buf += p
     p
+  }
+
+  /** Set each session conf in `kv`, run `body`, then restore every
+   * prior value (unsetting keys that had none) — also when `body`
+   * throws. An empty `kv` leaves the session untouched. */
+  private[graft] def withConf[T](spark: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Build a DataFrame, run `action` on it (the materialization —

@@ -1,12 +1,13 @@
 package graft.queries
 
 import graft.functions.{TextFunctions => TF}
+import graft.operators.Scoped
 import graft.streaming.{AnnStream, AttrEvent, BudgetDoc, CorpusDoc, CusumEvent, FunnelEvent, KAnonEvent, LogStream, MediaDoc, QueryVec, QuotaEvent, SessionEvent}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import java.nio.file.Files
 import java.sql.Timestamp
@@ -36,12 +37,69 @@ import java.util.concurrent.atomic.AtomicInteger
  * The memory sink + driver-fed MemoryStream are the verification
  * harness; the production path is the same topology over
  * `readStream.text/parquet` (or Kafka) into [[graft.sources.PartitionedSink]].
+ *
+ * Every query runs its stream through ONE driver: [[drive]] starts a
+ * writer inside a [[graft.operators.Scoped.withConf]] scope (the
+ * [[Narrow]] / [[NoDataOff]] conf sets), runs its [[Feed]] — [[drained]]
+ * for AvailableNow, [[chunked]] / [[fed]] for MemoryStream input — and
+ * always stops the query; [[toMemory]] is the memory-sink form that
+ * returns the sink's table.
  */
 object DQueries {
 
   private val nameSeq = new AtomicInteger(0)
   private def mkName(prefix: String): String =
     s"graft_${prefix}_${nameSeq.incrementAndGet()}"
+
+  /** How a started stream is driven until its result is complete: the
+   * trigger it starts with (None = the default micro-batch trigger)
+   * and what the driver does with the running query. */
+  private[queries] final class Feed(
+      val trigger: Option[Trigger], val run: StreamingQuery => Unit)
+
+  /** AvailableNow: drain every input present at start; the query then
+   * ends itself. */
+  private[queries] val drained = new Feed(Some(Trigger.AvailableNow()), _.awaitTermination())
+
+  /** Driver-fed input under the default trigger: `push` adds data and
+   * waits for it to be processed. */
+  private[queries] def fed(push: StreamingQuery => Unit): Feed = new Feed(None, push)
+
+  /** The MemoryStream feed: each chunk, in order, is one addData and
+   * one fully processed micro-batch. */
+  private[queries] def chunked[T](mem: MemoryStream[T], chunks: Iterable[Array[T]]): Feed =
+    fed(q => chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() })
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** Small-state streams run narrow: the state store's partition count
+   * is the shuffle-partition count when the stream starts, and its
+   * cost is per partition per micro-batch (files + commits). */
+  private[queries] val Narrow = Seq(ShufflePartitions -> "4")
+
+  /** Streams whose output comes only from data batches (no timeout or
+   * window emit to fire) skip no-data micro-batches, which would only
+   * evict or commit state. */
+  private[queries] val NoDataOff =
+    Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** The D-tier stream driver: start `writer` with `conf` set, drive it
+   * with `feed`, always stop it; the session conf is restored after. */
+  private[queries] def drive[T](s: SparkSession, writer: DataStreamWriter[T], feed: Feed,
+      conf: Seq[(String, String)] = Nil): Unit =
+    Scoped.withConf(s, conf: _*) {
+      val q = feed.trigger.fold(writer)(writer.trigger).start()
+      try feed.run(q) finally q.stop()
+    }
+
+  /** [[drive]] `ds` into a fresh memory sink in output `mode`; returns
+   * the sink's table. */
+  private[queries] def toMemory[T](s: SparkSession, prefix: String, ds: Dataset[T],
+      mode: String, feed: Feed, conf: Seq[(String, String)] = Nil): DataFrame = {
+    val qn = mkName(prefix)
+    drive(s, ds.writeStream.format("memory").queryName(qn).outputMode(mode), feed, conf)
+    s.table(qn)
+  }
 
   /** q_d18's NEW-docs frame, shared with its dynamic oracle so the two
    * sides can never drift: exact copies of every 7th base doc
@@ -56,6 +114,22 @@ object DQueries {
         concat(col("text"), lit(" novel marker "), col("doc_id").cast(StringType)))
       .select((col("doc_id") + 300000L).as("doc_id"), col("text2").as("text"))
     copies.union(novel)
+  }
+
+  /** q_d31/q_d32's streamed docs (ids corpus+10M): 1-in-3 exact corpus
+   * copies, 1-in-3 shared text + fresh tails, 1-in-3 wholly fresh —
+   * the same CASE both oracles' `su` CTE spells. */
+  private def plantedCandidates(d: DataFrame): DataFrame = {
+    val idsS = col("doc_id").cast(StringType)
+    d.select(
+      (col("doc_id") + 10000000L).as("doc_id"),
+      when(col("doc_id") % 3 === 0, col("text"))
+        .when(col("doc_id") % 3 === 1, concat(col("text"),
+          lit(" zzfresh"), idsS, lit(" qqtail"), idsS))
+        .otherwise(concat(lit("wholly fresh streamed document ufresh"),
+          idsS, lit(" vfresh"), idsS, lit(" wfresh"), idsS,
+          lit(" xfresh"), idsS))
+        .as("text"))
   }
 
   // q_d1 synthesized fields; status formula + SQL mirror shared with the
@@ -84,17 +158,9 @@ object DQueries {
       val parsed = LogStream.read(s, tmp, "%h %t %>s")
       val agg = LogStream.windowedStatusCounts(parsed,
         watermark = "1 hour", windowLen = "1 hour")
-      val qn = mkName("d1")
       // windowed-agg state is tiny (720 windows × statuses): run the
-      // state store narrow, q_d2-style, and restore the conf after
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn)
+      // state store narrow, q_d2-style
+      toMemory(s, "d1", agg, "complete", drained, Narrow)
         .select(date_format(col("window_start"), "yyyy-MM-dd HH:00").as("hour"),
           col("status"), col("hits"))
         .orderBy("hour", "status")
@@ -116,15 +182,7 @@ object DQueries {
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("loglevel"))
         .agg(count(lit(1)).as("cnt"), sum("pid").as("sum_pid"))
-      val qn = mkName("d11")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn)
+      toMemory(s, "d11", agg, "complete", drained, Narrow)
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:00").as("hour"),
           col("loglevel"), col("cnt"), col("sum_pid"))
         .orderBy("hour", "loglevel")
@@ -147,31 +205,18 @@ object DQueries {
       val mem = MemoryStream[SessionEvent]
       val updates = LogStream.sessionize(mem.toDS(),
         gapSeconds = 1800, watermarkDelay = "0 seconds")
-      val qn = mkName("d2")
+      val maxMs = rows.iterator.map(_.ts.getTime).max
+      // sentinel 1 pushes the watermark past every session's timeout;
+      // sentinel 2's batch then fires those timeouts (data beats
+      // timeout, so a batch with only sentinel data closes the rest)
+      val sentinels = Seq(10L, 20L).map(days =>
+        Array(SessionEvent("__sentinel", new Timestamp(maxMs + days * 86400000L))))
       // state-store partition count = shuffle partitions when the stream
       // starts; per-micro-batch overhead (one state + delta file per
       // partition per batch) dwarfs the actual data here, so run the
-      // stream narrow and restore the session conf once it stops
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = updates.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          byChunk.keys.toSeq.sorted.foreach { c =>
-            mem.addData(byChunk(c).toIndexedSeq); q.processAllAvailable()
-          }
-          val maxMs = rows.iterator.map(_.ts.getTime).max
-          // sentinel 1 pushes the watermark past every session's timeout;
-          // sentinel 2's batch then fires those timeouts (data beats
-          // timeout, so a batch with only sentinel data closes the rest)
-          mem.addData(SessionEvent("__sentinel", new Timestamp(maxMs + 10L * 86400000L)))
-          q.processAllAvailable()
-          mem.addData(SessionEvent("__sentinel", new Timestamp(maxMs + 20L * 86400000L)))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn)
+      // stream narrow
+      toMemory(s, "d2", updates, "append",
+        chunked(mem, byChunk.keys.toSeq.sorted.map(byChunk) ++ sentinels), Narrow)
         .filter(col("closed") && col("clientHost") =!= "__sentinel")
         .select(col("clientHost").as("client"),
           date_format(col("sessionStart"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -204,11 +249,7 @@ object DQueries {
           TF.langIdPadded(col("text"), col("__padded")).as("predicted"),
           TF.tokenCount(col("text")).cast(LongType).as("toks"),
           graft.functions.Bpe.tokenCount(col("text"), codec).cast(LongType).as("bpe_toks"))
-      val qn = mkName("d4")
-      val q = stream.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(qn)
+      toMemory(s, "d4", stream, "append", drained)
         .groupBy("source", "predicted")
         .agg(count(lit(1)).as("docs"), sum(col("toks")).as("tokens"),
           sum(col("bpe_toks")).as("bpe_learned"))
@@ -237,15 +278,7 @@ object DQueries {
           CountMin.sketchAgg(CountMin.buckets(col("w"), depth, width), depth, width)
             .as("sk"),
           count(lit(1)).as("n_tokens"))
-      val qn = mkName("d13")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn).select(
+      toMemory(s, "d13", agg, "complete", drained, Narrow).select(
         date_format(col("win.start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
         col("n_tokens"),
         CountMin.estimateCol(col("sk"), lit("scan"), depth, width).as("est_scan"),
@@ -276,14 +309,7 @@ object DQueries {
         .select(col("ts"), bucket)
         .groupBy(window(col("ts"), "10 minutes").as("win"), col("b"))
         .agg(count(lit(1)).as("c"))
-      val qn = mkName("d14")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = agg.writeStream.format("memory").queryName(qn)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val counts = toMemory(s, "d14", agg, "complete", drained, Narrow)
       // Finalize without self-joining the memory-sink view (conflicting
       // references under plan dedup): per-window totals via a window
       // function, and the 16-row reference distribution collected to
@@ -298,7 +324,7 @@ object DQueries {
       val rppm = Array.fill[Long](B)(0L)
       refRows.foreach(r => rppm(r.getLong(0).toInt) = r.getLong(1) * 1000000L / nr)
       val overWin = org.apache.spark.sql.expressions.Window.partitionBy("win")
-      s.table(qn)
+      counts
         .withColumn("nw", sum("c").over(overWin))
         .withColumn("rppm", element_at(typedlit(rppm.toSeq), col("b").cast("int") + 1))
         .withColumn("term",
@@ -320,17 +346,9 @@ object DQueries {
           timestamp_micros(lit(1704067200000000L) + col("doc_id") * 1000000L))
       val kept = LogStream.dedupStream(stream, "text", "ts", "30 days",
         keepFingerprintAs = "fp").select(col("fp"))
-      val qn = mkName("d3")
       // dedup state is one fingerprint per distinct doc: narrow state
-      // store (q_d2 pattern), conf restored after the stream stops
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = kept.writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn).agg(
+      // store (q_d2 pattern)
+      toMemory(s, "d3", kept, "append", drained, Narrow).agg(
         count(lit(1)).as("kept"),
         min(col("fp")).as("min_fp"),
         max(col("fp")).as("max_fp"))
@@ -348,11 +366,7 @@ object DQueries {
         .withColumn("nk", pmod(col("doc_id"), lit(25)).cast(IntegerType))
         .join(broadcast(dim), col("nk") === col("n_nationkey"))
         .select(col("n_name"), col("n_chars"))
-      val qn = mkName("d6")
-      val q = joined.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(qn)
+      toMemory(s, "d6", joined, "append", drained)
         .groupBy("n_name")
         .agg(count(lit(1)).as("docs"), sum(col("n_chars")).as("chars"))
         .orderBy("n_name")
@@ -379,9 +393,8 @@ object DQueries {
         .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
         .withColumn("ts",
           timestamp_seconds(lit(1704067200L) + pmod(col("doc_id"), lit(7)) * 86400L))
-      val q = graft.sources.PartitionedSink.streamWriterByDate(stream, out, "ts")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      drive(s, graft.sources.PartitionedSink.streamWriterByDate(stream, out, "ts"),
+        drained)
       graft.sources.PartitionedSink.read(s, out)
         .groupBy(col("p_date").cast(StringType).as("day"))
         .agg(count(lit(1)).as("docs"), sum(col("n_chars")).as("chars"),
@@ -416,11 +429,9 @@ object DQueries {
         .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
         .select(col("doc_id"), col("source"),
           TF.tokenCount(col("text")).cast(LongType).as("tokens"))
-      val q = graft.sources.Snapshots.publishStream(stream, snap, ckpt,
-          everyBatches = 2, statsCols = Seq("source"),
-          sumCols = Seq("tokens"))
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      drive(s, graft.sources.Snapshots.publishStream(stream, snap, ckpt,
+        everyBatches = 2, statsCols = Seq("source"), sumCols = Seq("tokens")),
+        drained)
       graft.sources.Snapshots.read(s, snap, verify = true)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("tokens").as("tokens"))
@@ -468,10 +479,8 @@ object DQueries {
           col("r.record_id"), col("r.warc_date"),
           HtmlExtract(PayloadDecode(col("r.payload_bytes"),
             col("r.http_content_type"))).getField("main_text")).as("rec"))
-      val q = graft.sources.Warc.streamMemberWriter(wet, "rec", out, "wet")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      drive(s, graft.sources.Warc.streamMemberWriter(wet, "rec", out, "wet")
+        .option("checkpointLocation", ckpt), drained)
       graft.sources.Warc.read(s, out)
         .filter(col("warc_type") === "conversion")
         .select(substring_index(col("target_uri"), "/", -1)
@@ -504,11 +513,9 @@ object DQueries {
         .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
         .select(col("doc_id"), col("source"),
           TF.tokenCount(col("text")).cast(LongType).as("tokens"))
-      val q = graft.sources.Snapshots.publishStreamDelta(stream, snap, ckpt,
-          compactEvery = 4, statsCols = Seq("source"),
-          sumCols = Seq("tokens"))
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      drive(s, graft.sources.Snapshots.publishStreamDelta(stream, snap, ckpt,
+        compactEvery = 4, statsCols = Seq("source"), sumCols = Seq("tokens")),
+        drained)
       graft.sources.Snapshots.readAt(s, snap, verify = true)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("tokens").as("tokens"))
@@ -562,17 +569,10 @@ object DQueries {
       val recs = LogStream.archiveDedupStream(fetches, "url", "rid",
         "fdate", "status", "mime", "payload", "ord")
       // small-state stream: state-store cost is per partition per
-      // micro-batch — single-digit partitions, restored after stop()
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.sources.Warc.streamMemberWriter(
-            recs.select(col("rec")), "rec", out, "arc")
-          .option("checkpointLocation", ckpt).start()
-        try chunks.foreach { c =>
-          mem.addData(c.toIndexedSeq); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      // micro-batch — single-digit partitions
+      drive(s, graft.sources.Warc.streamMemberWriter(
+          recs.select(col("rec")), "rec", out, "arc")
+        .option("checkpointLocation", ckpt), chunked(mem, chunks), Narrow)
       val back = graft.sources.Warc.read(s, out)
         .select(substring_index(col("target_uri"), "/", -1)
             .cast(LongType).as("doc_id"),
@@ -615,29 +615,16 @@ object DQueries {
       val clicks = MemoryStream[AttrEvent]
       val purchases = MemoryStream[AttrEvent]
       val joined = LogStream.attributionJoin(clicks.toDF(), purchases.toDF(), 3600L)
-      val qn = mkName("d5")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
+      val lockStep = fed(q => byChunk.keys.toSeq.sorted.foreach { ck =>
+        clicks.addData(side(byChunk(ck), "click"))
+        purchases.addData(side(byChunk(ck), "purchase"))
+        q.processAllAvailable()
+      })
       // inner-join append emits pairs on data batches; the no-data batches
       // only evict state (a timeout/window-emit concern, not a join one),
       // so skipping them halves the per-chunk state-store commits
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = joined.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          byChunk.keys.toSeq.sorted.foreach { ck =>
-            clicks.addData(side(byChunk(ck), "click"))
-            purchases.addData(side(byChunk(ck), "purchase"))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      toMemory(s, "d5", joined, "append", lockStep,
+        Seq(ShufflePartitions -> "2") ++ NoDataOff)
         .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
         .orderBy("purchase_id", "click_id")
     }),
@@ -647,7 +634,7 @@ object DQueries {
     // (ms-floored ts, id) chunks, so the admitted set is exactly the
     // batch per-key top-N the oracle ranks directly; no watermark or
     // timeout exists, so no-data micro-batches have nothing to do and
-    // are skipped (conf restored).
+    // are skipped.
     "q_d8_stream_quota" -> ((s, dir) => {
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
@@ -661,22 +648,8 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 5 + 1)).toSeq
       val mem = MemoryStream[QuotaEvent]
       val admitted = LogStream.quotaStream(mem.toDS(), maxPerKey = 20)
-      val qn = mkName("d8")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = admitted.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      toMemory(s, "d8", admitted, "append", chunked(mem, chunks),
+        Narrow ++ NoDataOff)
         .select(col("key"), col("id").as("event_id"), col("quota_rank"))
         .orderBy("key", "quota_rank")
     }),
@@ -703,11 +676,7 @@ object DQueries {
       val kept = graft.operators.Similarity
         .semanticDecontaminate(stream, bench, "qv", tau = 0.98)
         .select("vec_id", "label")
-      val qn = mkName("d17")
-      val q = kept.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(qn).groupBy("label")
+      toMemory(s, "d17", kept, "append", drained).groupBy("label")
         .agg(count(lit(1)).as("survivors"), sum("vec_id").as("sum_ids"))
         .orderBy("label")
     }),
@@ -726,11 +695,8 @@ object DQueries {
       val sch = s.read.parquet(s"$dir/documents.parquet").schema
       val stream = s.readStream.schema(sch).parquet(s"$dir/documents.*")
       val scored = LogStream.scoreStream(stream, "doc_id", "text", w, b)
-      val qn = mkName("d16")
-      val q = scored.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(qn).select("doc_id", "margin", "admit").orderBy("doc_id")
+      toMemory(s, "d16", scored, "append", drained)
+        .select("doc_id", "margin", "admit").orderBy("doc_id")
     }),
 
     // D15: streaming per-source bottom-k content sample — the
@@ -750,24 +716,11 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 5 + 1)).toSeq
       val mem = MemoryStream[graft.streaming.SampleDoc]
       val admitted = LogStream.sampleStream(mem.toDS(), k = 32)
-      val qn = mkName("d15")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = admitted.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
+      val sample = toMemory(s, "d15", admitted, "append", chunked(mem, chunks),
+        Narrow ++ NoDataOff)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy(col("h"), col("doc_id"))
-      s.table(qn)
+      sample
         .withColumn("rank", row_number().over(w).cast(LongType))
         .filter(col("rank") <= 32)
         .select("source", "rank", "doc_id", "h")
@@ -785,22 +738,8 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 5 + 1)).toSeq
       val mem = MemoryStream[BudgetDoc]
       val admitted = LogStream.budgetStream(mem.toDS(), budgetTokens = 2000L)
-      val qn = mkName("d12")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = admitted.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      toMemory(s, "d12", admitted, "append", chunked(mem, chunks),
+        Narrow ++ NoDataOff)
         .select(col("source"), col("doc_id"), col("ntok"), col("cum_tokens"))
         .orderBy("source", "doc_id")
     }),
@@ -823,22 +762,8 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
       val mem = MemoryStream[CorpusDoc]
       val verdicts = LogStream.nearDupStream(mem.toDF(), "doc_id", "text")
-      val qn = mkName("d9")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = verdicts.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      toMemory(s, "d9", verdicts, "append", chunked(mem, chunks),
+        Narrow ++ NoDataOff)
         .groupBy("doc_id")
         .agg(min("owner").as("owner"))
         .select(col("doc_id"),
@@ -862,21 +787,8 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
       val mem = MemoryStream[MediaDoc]
       val verdicts = LogStream.imageNearDupStream(mem.toDF(), "doc_id", "img")
-      val qn = mkName("d21")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = verdicts.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      toMemory(s, "d21", verdicts, "append", chunked(mem, chunks),
+        Narrow ++ NoDataOff)
         .groupBy("doc_id")
         .agg(min("owner").as("owner"))
         .select(col("doc_id"),
@@ -901,22 +813,8 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
       val mem = MemoryStream[CorpusDoc]
       val verdicts = LogStream.nearDupStreamWarm(mem.toDF(), base, "doc_id", "text")
-      val qn = mkName("d18")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = verdicts.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      toMemory(s, "d18", verdicts, "append", chunked(mem, chunks),
+        Narrow ++ NoDataOff)
         .groupBy("doc_id")
         .agg(min("owner").as("owner"))
         .select(col("doc_id"),
@@ -943,13 +841,7 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
       val mem = MemoryStream[CorpusDoc]
       val verdicts = LogStream.repetitionGateStream(mem.toDF(), "doc_id", "text")
-      val qn = mkName("d19")
-      val q = verdicts.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).orderBy("doc_id")
+      toMemory(s, "d19", verdicts, "append", chunked(mem, chunks)).orderBy("doc_id")
     }),
 
     // D26: streaming encoding firewall — the C103 gate at the ingest
@@ -974,13 +866,7 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
       val mem = MemoryStream[CorpusDoc]
       val verdicts = LogStream.encodingGateStream(mem.toDF(), "doc_id", "text")
-      val qn = mkName("d26")
-      val q = verdicts.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).orderBy("doc_id")
+      toMemory(s, "d26", verdicts, "append", chunked(mem, chunks)).orderBy("doc_id")
     }),
 
     // D27: streaming ingest of a hive-partitioned log tree (the A14
@@ -1000,11 +886,7 @@ object DQueries {
       val parsed = LogStream.readPartitioned(
           s, tmp, tmp + "/shard=*/*.txt", graft.logs.HttpdLog.CommonFormat)
         .filter(col("shard") =!= "s3")
-      val qn = mkName("d27")
-      val q = parsed.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(qn)
+      toMemory(s, "d27", parsed, "append", fed(_.processAllAvailable()))
         .groupBy("shard")
         .agg(
           count(lit(1)).as("cnt"),
@@ -1030,13 +912,7 @@ object DQueries {
       val mem = MemoryStream[CorpusDoc]
       val verdicts = LogStream.htmlExtractStream(
         mem.toDF().toDF("doc_id", "html"))
-      val qn = mkName("d28")
-      val q = verdicts.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).orderBy("doc_id")
+      toMemory(s, "d28", verdicts, "append", chunked(mem, chunks)).orderBy("doc_id")
     }),
 
     // D30: streaming training-example builder — documents arrive in
@@ -1052,13 +928,7 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
       val mem = MemoryStream[CorpusDoc]
       val out = LogStream.exampleStream(mem.toDF())
-      val qn = mkName("d30")
-      val q = out.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).orderBy("doc_id")
+      toMemory(s, "d30", out, "append", chunked(mem, chunks)).orderBy("doc_id")
     }),
 
     // D29: streaming WARC ingest — the C111 synthetic segments
@@ -1078,13 +948,7 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
       val mem = MemoryStream[(Long, Array[Byte])]
       val recs = LogStream.warcStream(mem.toDF().toDF("doc_id", "warc"))
-      val qn = mkName("d29")
-      val q = recs.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).groupBy("doc_id")
+      toMemory(s, "d29", recs, "append", chunked(mem, chunks)).groupBy("doc_id")
         .agg(
           count(lit(1)).cast(IntegerType).as("n_records"),
           max(when(col("warc_type") === "response", col("warc_type")))
@@ -1114,33 +978,15 @@ object DQueries {
       implicit val sqlCtx = s.sqlContext
       val d = s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "text")
-      val idsS = col("doc_id").cast(StringType)
-      val streamDocs = d.select(
-        (col("doc_id") + 10000000L).as("doc_id"),
-        when(col("doc_id") % 3 === 0, col("text"))
-          .when(col("doc_id") % 3 === 1, concat(col("text"),
-            lit(" zzfresh"), idsS, lit(" qqtail"), idsS))
-          .otherwise(concat(lit("wholly fresh streamed document ufresh"),
-            idsS, lit(" vfresh"), idsS, lit(" wfresh"), idsS,
-            lit(" xfresh"), idsS))
-          .as("text"))
+      val streamDocs = plantedCandidates(d)
       val rows = streamDocs.collect()
         .map(r => graft.streaming.CorpusDoc(r.getLong(0), r.getString(1)))
         .sortBy(_.doc_id)
       val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
       val mem = MemoryStream[CorpusDoc]
       val verdicts = LogStream.exactSubstrStream(mem.toDF(), d)
-      val qn = mkName("d31")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = verdicts.toDF().writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try chunks.foreach { c =>
-          mem.addData(c.toIndexedSeq); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      val starts = s.table(qn).groupBy("doc_id")
+      val starts = toMemory(s, "d31", verdicts, "append", chunked(mem, chunks), Narrow)
+        .groupBy("doc_id")
         .agg(sort_array(collect_list(col("pos"))).as("__starts"))
       streamDocs
         .select(col("doc_id"), TF.tokens(col("text")).as("__t"))
@@ -1168,33 +1014,15 @@ object DQueries {
       implicit val sqlCtx = s.sqlContext
       val d = s.read.parquet(s"$dir/documents.parquet")
         .select("doc_id", "text")
-      val idsS = col("doc_id").cast(StringType)
-      val cands = d.select(
-        (col("doc_id") + 10000000L).as("doc_id"),
-        when(col("doc_id") % 3 === 0, col("text"))
-          .when(col("doc_id") % 3 === 1, concat(col("text"),
-            lit(" zzfresh"), idsS, lit(" qqtail"), idsS))
-          .otherwise(concat(lit("wholly fresh streamed document ufresh"),
-            idsS, lit(" vfresh"), idsS, lit(" wfresh"), idsS,
-            lit(" xfresh"), idsS))
-          .as("text"))
+      val cands = plantedCandidates(d)
       val rows = cands.collect()
         .map(r => graft.streaming.CorpusDoc(r.getLong(0), r.getString(1)))
         .sortBy(-_.doc_id)
       val chunks = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
       val mem = MemoryStream[CorpusDoc]
       val hits = LogStream.leakageGateStream(mem.toDF(), d)
-      val qn = mkName("d32")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = hits.toDF().writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try chunks.foreach { c =>
-          mem.addData(c.toIndexedSeq); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      val agg = s.table(qn).groupBy("doc_id")
+      val agg = toMemory(s, "d32", hits, "append", chunked(mem, chunks), Narrow)
+        .groupBy("doc_id")
         .agg(countDistinct(col("band")).as("nh"))
       cands.select("doc_id").join(agg, Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -1219,17 +1047,7 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
       val mem = MemoryStream[FunnelEvent]
       val transitions = LogStream.funnelStream(mem.toDS())
-      val qn = mkName("d23")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = transitions.toDF().writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn)
+      toMemory(s, "d23", transitions, "append", chunked(mem, chunks), Narrow)
         .groupBy("user_id").agg(max("stage").as("st"))
         .agg(
           count(lit(1)).as("users"),
@@ -1260,17 +1078,7 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 5 + 1)).toSeq
       val mem = MemoryStream[CusumEvent]
       val pts = LogStream.cusumStream(mem.toDS(), kUp = 60L, kDn = 45L, h = 120L)
-      val qn = mkName("d24")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = pts.toDF().writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn).orderBy("source", "doc_id")
+      toMemory(s, "d24", pts, "append", chunked(mem, chunks), Narrow).orderBy("source", "doc_id")
     }),
 
     // D25: streaming k-anonymity release gate — C85's finest QI level
@@ -1293,17 +1101,7 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 5 + 1)).toSeq
       val mem = MemoryStream[KAnonEvent]
       val released = LogStream.kAnonStream(mem.toDS(), k = 10)
-      val qn = mkName("d25")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = released.toDF().writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      s.table(qn).orderBy("key", "seq")
+      toMemory(s, "d25", released, "append", chunked(mem, chunks), Narrow).orderBy("key", "seq")
     }),
 
     // D22: streaming blocklist firewall — the C88 automaton as a
@@ -1321,13 +1119,7 @@ object DQueries {
       val mem = MemoryStream[CorpusDoc]
       val verdicts = LogStream.blocklistStream(
         mem.toDF(), PipeQueries.blocklistPats)
-      val qn = mkName("d22")
-      val q = verdicts.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      try {
-        chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-      } finally q.stop()
-      s.table(qn).orderBy("doc_id")
+      toMemory(s, "d22", verdicts, "append", chunked(mem, chunks)).orderBy("doc_id")
     }),
 
     // D10: online ANN serving — query vectors STREAM against the static
@@ -1351,21 +1143,8 @@ object DQueries {
       val chunks = rows.grouped(math.max(1, rows.length / 4 + 1)).toSeq
       val mem = MemoryStream[QueryVec]
       val events = AnnStream.ivfGrowthMonitor(mem.toDF(), corpus, "vec_id", "qv", nSeeds = 16)
-      val qn = mkName("d20")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = events.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try chunks.foreach { c => mem.addData(c.toIndexedSeq); q.processAllAvailable() }
-        finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn).orderBy("cell", "level")
+      toMemory(s, "d20", events, "append", chunked(mem, chunks),
+        Narrow ++ NoDataOff).orderBy("cell", "level")
     }),
 
     "q_d10_stream_ann" -> ((s, dir) => {
@@ -1378,24 +1157,8 @@ object DQueries {
       val mem = MemoryStream[QueryVec]
       val served = AnnStream.ivfServe(mem.toDF(), corpus, "vec_id", "qv",
         k = 5, nSeeds = 16, probes = 2)
-      val qn = mkName("d10")
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = served.writeStream.format("memory").queryName(qn)
-          .outputMode("append").start()
-        try {
-          Seq(qRows.take(3), qRows.drop(3)).foreach { c =>
-            mem.addData(c.toIndexedSeq); q.processAllAvailable()
-          }
-        } finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn)
+      toMemory(s, "d10", served, "append",
+        chunked(mem, Seq(qRows.take(3), qRows.drop(3))), Narrow ++ NoDataOff)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cosine"), 6).as("cosine"), col("rank"))
         .orderBy("query_id", "rank")

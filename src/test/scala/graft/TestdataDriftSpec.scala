@@ -40,16 +40,15 @@ class TestdataDriftSpec extends SparkSpec {
     assume(available, s"$sfDir not present")
     // Catch analysis-time schema drift for ALL tables in one cheap pass:
     // build every registered query's plan against the real testdata and
-    // force analysis (no execution). Streaming-backed queries execute
-    // eagerly on build, so only include batch ones here; the streaming
-    // tier is exercised end-to-end by its own specs and Verify.
-    val streaming = Set("q_d1_stream_ingest", "q_d2_stream_sessions",
-      "q_d3_stream_dedup", "q_d4_stream_annotate", "q_d5_stream_join",
-      "q_d6_stream_static", "q_d7_stream_sink", "q_d8_stream_quota",
-      "q_d9_stream_neardup", "q_d10_stream_ann")
+    // force analysis (no execution of batch queries). The D tier's
+    // builders run their streams to completion eagerly, so every one of
+    // its 36 stream drivers executes here too — and must leave the
+    // session's conf as it found it and no stream running.
+    val shuffle = "spark.sql.shuffle.partitions"
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val confBefore = (spark.conf.get(shuffle), spark.conf.get(noData))
     val failures =
       try SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot { case (n, _) => streaming.contains(n) }
         .flatMap { case (name, fn) =>
           try { fn(spark, sfDir).queryExecution.analyzed; None }
           catch { case e: Throwable => Some(s"$name: ${e.getMessage.linesIterator.next()}") }
@@ -64,5 +63,9 @@ class TestdataDriftSpec extends SparkSpec {
     assert(failures.isEmpty,
       s"${failures.size} queries failed analysis on real testdata:\n" +
         failures.mkString("\n"))
+    assert((spark.conf.get(shuffle), spark.conf.get(noData)) == confBefore,
+      "a query builder leaked a session conf change")
+    assert(spark.streams.active.isEmpty,
+      s"streams still running: ${spark.streams.active.map(_.name).mkString(", ")}")
   }
 }
