@@ -20,6 +20,14 @@ import org.apache.spark.sql.types._
  *  6. exact dedup (one hash shuffle on the fingerprint)
  *  7. near dedup (MinHash-LSH bucket shuffle + verify join)
  *  8. stable md5 bucketing for train/val/test splits (map-only)
+ *
+ * Hashed keys: every corpus operator here (and `Dedup.containmentPairs`)
+ * keys its wide shuffles by the 8-byte `xxhash64` of the gram, chunk or
+ * term string instead of the string itself — one plan per operator, no
+ * string-key twin. Two of k distinct keys collide with odds about
+ * k²/2⁶⁵ (a collision merges their counts). Outputs carry counts,
+ * scores and ids, never the hashed keys, so the DuckDB oracle's replay
+ * over exact strings still hash-matches.
  */
 object CorpusPipeline {
 
@@ -268,32 +276,26 @@ object CorpusPipeline {
    * runs twice (projection pushdown through RoundRobin specializes the
    * scan per consumer, defeating ReusedExchange) — on real pre-split
    * input no repartition is injected and the second pass is a cheap
-   * pruned-column scan.
-   * `hashKeys=true` (the 100 TB default) shuffles 8-byte xxhash64 keys
-   * instead of gram strings — 2x faster at 1M docs (40 s → 20 s,
-   * local[32]) with collision odds ~grams²/2^65; `hashKeys=false`
-   * keeps exact strings (what the DuckDB oracle checks).
+   * pruned-column scan. Hashing the gram keys (see the object header)
+   * made this 2x faster at 1M docs (40 s → 20 s, local[32]).
    */
   def dupGramStats(
       docs: DataFrame,
       n: Int = 8,
       sourceCol: String = "source",
-      textCol: String = "text",
-      hashKeys: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     // The source label set is tiny (a mixture has dozens of corpora, not
     // thousands) and column pruning makes fetching it a metadata-scale
     // scan; ≤62 non-null sources unlock the bitmask plan below.
     val srcRows = docs.select(col(sourceCol).cast(StringType)).distinct()
       .limit(63).collect().map(r => if (r.isNullAt(0)) null else r.getString(0))
     if (srcRows.length > 62 || srcRows.contains(null))
-      return dupGramStatsGeneral(docs, n, sourceCol, textCol, hashKeys)
+      return dupGramStatsGeneral(docs, n, sourceCol, textCol)
 
     val srcList = srcRows.sorted
-    val grams0 = docs.select(
+    val grams = docs.select(
       col(sourceCol).as("source"), explode(TF.shingles(col(textCol), n)).as("gs"))
-    val grams =
-      if (hashKeys) grams0.select(col("source"), xxhash64(col("gs")).as("g"))
-      else grams0.withColumnRenamed("gs", "g")
+      .select(col("source"), xxhash64(col("gs")).as("g"))
     // Per-gram state is (instance count, source BITMASK) — two longs,
     // zero allocation, pure codegen — instead of a per-gram collected
     // (source, count) list. A corpus-count-1 gram has exactly one
@@ -344,13 +346,10 @@ object CorpusPipeline {
       docs: DataFrame,
       n: Int,
       sourceCol: String,
-      textCol: String,
-      hashKeys: Boolean): DataFrame = {
-    val grams0 = docs.select(
+      textCol: String): DataFrame = {
+    val grams = docs.select(
       col(sourceCol).as("source"), explode(TF.shingles(col(textCol), n)).as("gs"))
-    val grams =
-      if (hashKeys) grams0.select(col("source"), xxhash64(col("gs")).as("g"))
-      else grams0.withColumnRenamed("gs", "g")
+      .select(col("source"), xxhash64(col("gs")).as("g"))
     val sg = grams.groupBy("source", "g").agg(count(lit(1)).as("sc"))
       .transform(Scoped.persistTracked)
     sg.count() // pin before the two consumers (sourceDivergence note)
@@ -766,23 +765,20 @@ object CorpusPipeline {
    * map-only codegen pass; corpus chunk counts are one map-side-
    * combining aggregate; the join back is chunk-co-partitioned (AQE
    * splits a hot boilerplate chunk); the finish is one doc-keyed
-   * combining aggregate. `hashKeys=true` (100 TB default) shuffles
-   * 8-byte xxhash64 chunk keys; `hashKeys=false` keeps the exact
-   * strings the DuckDB oracle checks.
+   * combining aggregate.
    */
   def cdcDedupStats(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       window: Int = 4,
-      modulus: Int = 8,
-      hashKeys: Boolean = true): DataFrame = {
+      modulus: Int = 8): DataFrame = {
     val chunks = docs.select(
       col(idCol),
       explode(graft.functions.CdcChunks(TF.tokens(col(textCol)), window, modulus))
         .as("__chunk"))
       .withColumn("__ctoks", size(split(col("__chunk"), " ", -1)).cast(LongType))
-      .withColumn("__k", if (hashKeys) xxhash64(col("__chunk")) else col("__chunk"))
+      .withColumn("__k", xxhash64(col("__chunk")))
       .select(col(idCol), col("__k"), col("__ctoks"))
     val counts = chunks.groupBy("__k").agg(count(lit(1)).as("__c"))
     chunks.join(counts, "__k")
@@ -869,8 +865,8 @@ object CorpusPipeline {
    * one combining aggregate, persisted+pinned ([[sourceDivergence]]
    * pattern) because the context marginal and the instance join both
    * consume it; per-bigram surprisal is a small-table join, and the
-   * instance stream joins it on the bigram key — with `hashKeys` an
-   * 8-byte xxhash64 — then one doc-keyed combining aggregate.
+   * instance stream joins it on the bigram key, then one doc-keyed
+   * combining aggregate.
    * Output: idCol, n_bigrams, surprisal_sum, rarity (= sum div n).
    * The cached count table outlives this call — wrap in
    * [[Scoped.withCached]] or clearCache() between corpora.
@@ -878,18 +874,14 @@ object CorpusPipeline {
   def lmBigramSurprisal(
       docs: DataFrame,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      hashKeys: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     // WordShingles emits one whole-doc shingle when tokens < n (the
     // q_c22 contract); a 1-token doc has no bigram, so gate first
-    val inst0 = docs
+    val inst = docs
       .filter(size(TF.tokens(col(textCol))) >= 2)
       .select(col(idCol), explode(TF.shingles(col(textCol), 2)).as("bg"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
-    val inst =
-      if (hashKeys)
-        inst0.select(col(idCol), xxhash64(col("bg")).as("bg"), xxhash64(col("w1")).as("w1"))
-      else inst0
+      .select(col(idCol), xxhash64(col("bg")).as("bg"), xxhash64(col("w1")).as("w1"))
     val bc = inst.groupBy("bg").agg(first(col("w1")).as("w1"), count(lit(1)).as("cb"))
       .transform(Scoped.persistTracked)
     bc.count() // pin before the concurrent consumers (sourceDivergence note)
@@ -928,9 +920,9 @@ object CorpusPipeline {
    * pinned because the three LM marginals AND the scoring join all
    * consume it — without the pin each consumer re-runs the explode.
    * LM tables are gram-vocabulary-bounded; the scoring pass is three
-   * LEFT joins on 8-byte hashed keys (`hashKeys`) plus one broadcast
-   * one-row total, then a doc-keyed combining aggregate. No driver
-   * state, no global sort. Output per doc: n_trigrams, level counts
+   * LEFT joins on 8-byte hashed keys plus one broadcast one-row
+   * total, then a doc-keyed combining aggregate. No driver state, no
+   * global sort. Output per doc: n_trigrams, level counts
    * (n_hit/n_bo/n_uni/n_oov), surprisal_sum, rarity (= sum div n).
    * The cached dtf outlives this call — clearCache() between corpora.
    */
@@ -938,8 +930,7 @@ object CorpusPipeline {
       docs: DataFrame,
       trainFilter: Column,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      hashKeys: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     // WordShingles emits one whole-doc shingle when tokens < n (the
     // q_c22 contract); gate docs without a true trigram first
     val inst = docs
@@ -948,19 +939,14 @@ object CorpusPipeline {
         explode(TF.shingles(col(textCol), 3)).as("tri"))
     // ONE combining aggregate to per-(doc, trigram) counts, on the
     // SLIMMEST instance rows (the dominant shuffle of the whole
-    // operator): in hash mode an 8-byte xxhash64 keys the exchange and
+    // operator): an 8-byte xxhash64 keys the exchange and
     // the trigram string rides once as a combined first(); the
     // context/backoff/unigram keys derive AFTER aggregation, over
     // ≤ instance-count rows — deriving them per instance doubled the
     // instance bytes for nothing (measured at the ×100 tier)
-    val base =
-      if (hashKeys)
-        inst.groupBy(col(idCol), xxhash64(col("tri")).as("__tk"))
-          .agg(first(col("tri")).as("tri0"),
-            first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
-      else
-        inst.groupBy(col(idCol), col("tri").as("tri0"))
-          .agg(first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
+    val base = inst.groupBy(col(idCol), xxhash64(col("tri")).as("__tk"))
+      .agg(first(col("tri")).as("tri0"),
+        first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
     val derived = base.select(col(idCol), col("__train"), col("cnt"),
       col("tri0"),
       substring_index(col("tri0"), " ", 2).as("ctx0"),
@@ -969,15 +955,10 @@ object CorpusPipeline {
       substring_index(col("tri0"), " ", -1).as("w30"))
     // dtf feeds the LM marginals AND the scoring join (persist+pin:
     // the df⋈agg(df) rule)
-    val dtf = (if (hashKeys)
-        derived.select(col(idCol), col("__train"), col("cnt"),
-          xxhash64(col("tri0")).as("tri"), xxhash64(col("ctx0")).as("ctx2"),
-          xxhash64(col("bo0")).as("bo"), xxhash64(col("w20")).as("w2"),
-          xxhash64(col("w30")).as("w3"))
-      else
-        derived.select(col(idCol), col("__train"), col("cnt"),
-          col("tri0").as("tri"), col("ctx0").as("ctx2"),
-          col("bo0").as("bo"), col("w20").as("w2"), col("w30").as("w3")))
+    val dtf = derived.select(col(idCol), col("__train"), col("cnt"),
+        xxhash64(col("tri0")).as("tri"), xxhash64(col("ctx0")).as("ctx2"),
+        xxhash64(col("bo0")).as("bo"), xxhash64(col("w20")).as("w2"),
+        xxhash64(col("w30")).as("w3"))
       .transform(Scoped.persistTracked)
     dtf.count() // pin before the concurrent consumers (sourceDivergence note)
     val train = dtf.filter(col("__train"))
@@ -1047,31 +1028,21 @@ object CorpusPipeline {
       docs: DataFrame,
       trainFilter: Column,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      hashKeys: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val inst = docs
       .filter(size(TF.tokens(col(textCol))) >= 2)
       .select(col(idCol), trainFilter.as("__train"),
         explode(TF.shingles(col(textCol), 2)).as("bi"))
-    val base =
-      if (hashKeys)
-        inst.groupBy(col(idCol), xxhash64(col("bi")).as("__bk"))
-          .agg(first(col("bi")).as("bi0"),
-            first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
-      else
-        inst.groupBy(col(idCol), col("bi").as("bi0"))
-          .agg(first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
+    val base = inst.groupBy(col(idCol), xxhash64(col("bi")).as("__bk"))
+      .agg(first(col("bi")).as("bi0"),
+        first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
     val derived = base.select(col(idCol), col("__train"), col("cnt"),
       col("bi0"),
       substring_index(col("bi0"), " ", 1).as("w10"),
       substring_index(col("bi0"), " ", -1).as("w20"))
-    val dtf = (if (hashKeys)
-        derived.select(col(idCol), col("__train"), col("cnt"),
-          xxhash64(col("bi0")).as("bi"), xxhash64(col("w10")).as("w1"),
-          xxhash64(col("w20")).as("w2"))
-      else
-        derived.select(col(idCol), col("__train"), col("cnt"),
-          col("bi0").as("bi"), col("w10").as("w1"), col("w20").as("w2")))
+    val dtf = derived.select(col(idCol), col("__train"), col("cnt"),
+        xxhash64(col("bi0")).as("bi"), xxhash64(col("w10")).as("w1"),
+        xxhash64(col("w20")).as("w2"))
       .transform(Scoped.persistTracked)
     dtf.count() // pin before the concurrent consumers (sourceDivergence note)
     val train = dtf.filter(col("__train"))
@@ -1148,7 +1119,7 @@ object CorpusPipeline {
    *
    * Plan shape is the C84/C101 slim-instance rule verbatim: ONE
    * combining aggregate to per-(doc, trigram) counts keys the
-   * dominant shuffle (8-byte xxhash64 under `hashKeys`); ctx/bo/w2/w3
+   * dominant shuffle (8-byte xxhash64 keys); ctx/bo/w2/w3
    * derive AFTER aggregation; the trigram-TYPE table persists once
    * and feeds all marginals; scoring is five LEFT equi-joins on
    * vocabulary-bounded LM tables plus one broadcast total.
@@ -1157,35 +1128,24 @@ object CorpusPipeline {
       docs: DataFrame,
       trainFilter: Column,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      hashKeys: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val inst = docs
       .filter(size(TF.tokens(col(textCol))) >= 3)
       .select(col(idCol), trainFilter.as("__train"),
         explode(TF.shingles(col(textCol), 3)).as("tri"))
-    val base =
-      if (hashKeys)
-        inst.groupBy(col(idCol), xxhash64(col("tri")).as("__tk"))
-          .agg(first(col("tri")).as("tri0"),
-            first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
-      else
-        inst.groupBy(col(idCol), col("tri").as("tri0"))
-          .agg(first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
+    val base = inst.groupBy(col(idCol), xxhash64(col("tri")).as("__tk"))
+      .agg(first(col("tri")).as("tri0"),
+        first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
     val derived = base.select(col(idCol), col("__train"), col("cnt"),
       col("tri0"),
       substring_index(col("tri0"), " ", 2).as("ctx0"),
       substring_index(col("tri0"), " ", -2).as("bo0"),
       substring_index(substring_index(col("tri0"), " ", -2), " ", 1).as("w20"),
       substring_index(col("tri0"), " ", -1).as("w30"))
-    val dtf = (if (hashKeys)
-        derived.select(col(idCol), col("__train"), col("cnt"),
-          xxhash64(col("tri0")).as("tri"), xxhash64(col("ctx0")).as("ctx2"),
-          xxhash64(col("bo0")).as("bo"), xxhash64(col("w20")).as("w2"),
-          xxhash64(col("w30")).as("w3"))
-      else
-        derived.select(col(idCol), col("__train"), col("cnt"),
-          col("tri0").as("tri"), col("ctx0").as("ctx2"),
-          col("bo0").as("bo"), col("w20").as("w2"), col("w30").as("w3")))
+    val dtf = derived.select(col(idCol), col("__train"), col("cnt"),
+        xxhash64(col("tri0")).as("tri"), xxhash64(col("ctx0")).as("ctx2"),
+        xxhash64(col("bo0")).as("bo"), xxhash64(col("w20")).as("w2"),
+        xxhash64(col("w30")).as("w3"))
       .transform(Scoped.persistTracked)
     dtf.count() // pin before the concurrent consumers (sourceDivergence note)
     val train = dtf.filter(col("__train"))
@@ -1273,7 +1233,7 @@ object CorpusPipeline {
    *
    * Plan shape is the C84/C101/C110 slim-instance rule at order n:
    * ONE combining per-(doc, n-gram) aggregate keys the dominant
-   * shuffle (8-byte xxhash64 keys under `hashKeys`); the 2n−2 derived
+   * shuffle (8-byte xxhash64 keys); the 2n−2 derived
    * suffix/context keys are computed AFTER aggregation from the gram
    * string; the type chain is n−1 vocab-bounded aggregates (each
    * persisted once — every link feeds its context marginal, the next
@@ -1287,22 +1247,16 @@ object CorpusPipeline {
       trainFilter: Column,
       order: Int,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      hashKeys: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(order >= 3, "order must be >= 3 (use kneserNeyBigramSurprisal for n = 2)")
     val n = order
     val inst = docs
       .filter(size(TF.tokens(col(textCol))) >= n)
       .select(col(idCol), trainFilter.as("__train"),
         explode(TF.shingles(col(textCol), n)).as("g0"))
-    val base =
-      if (hashKeys)
-        inst.groupBy(col(idCol), xxhash64(col("g0")).as("__gk"))
-          .agg(first(col("g0")).as("g0"),
-            first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
-      else
-        inst.groupBy(col(idCol), col("g0").as("g0"))
-          .agg(first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
+    val base = inst.groupBy(col(idCol), xxhash64(col("g0")).as("__gk"))
+      .agg(first(col("g0")).as("g0"),
+        first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
     // derived keys AFTER the combining aggregate (C84 rule): m-token
     // suffix s_m and its (m−1)-token prefix c_m = the order-m context
     def suffix(k: Int): Column = substring_index(col("g0"), " ", -k)
@@ -1311,10 +1265,8 @@ object CorpusPipeline {
       Seq("g" -> col("g0"), "ctop" -> substring_index(col("g0"), " ", n - 1)) ++
         ((n - 1) to 1 by -1).map(m => s"s$m" -> suffix(m)) ++
         ((n - 1) to 2 by -1).map(m => s"c$m" -> ctxOf(m))
-    val hk: Column => Column =
-      if (hashKeys) xxhash64(_) else identity
     val dtf = base.select(col(idCol) +: col("__train") +: col("cnt") +:
-        keyCols.map { case (nm, c) => hk(c).as(nm) }: _*)
+        keyCols.map { case (nm, c) => xxhash64(c).as(nm) }: _*)
       .transform(Scoped.persistTracked)
     dtf.count() // pin before the concurrent consumers (sourceDivergence note)
     val train = dtf.filter(col("__train"))
@@ -1471,15 +1423,12 @@ object CorpusPipeline {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 8,
-      hashKeys: Boolean = true): DataFrame = {
+      n: Int = 8): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
-    val grams0 = docs
+    val grams = docs
       .filter(size(TF.tokens(col(textCol))) >= n)
       .select(col(idCol), posexplode(TF.shingles(col(textCol), n)).as(Seq("pos", "g")))
-    val grams =
-      if (hashKeys) grams0.select(col(idCol), col("pos"), xxhash64(col("g")).as("g"))
-      else grams0
+      .select(col(idCol), col("pos"), xxhash64(col("g")).as("g"))
     val gc = grams.groupBy("g").agg(count(lit(1)).as("c"))
     val dup = grams.join(gc, "g").filter(col("c") > 1).select(col(idCol), col("pos"))
     val wDoc = W.partitionBy(col(idCol)).orderBy(col("pos"))
@@ -1522,10 +1471,9 @@ object CorpusPipeline {
    * (id·2³² + pos, the semDedupHierarchical packing device), so
    * ownership costs no second shuffle and the aggregate stays a
    * codegen HashAggregate. The join back is gram-co-partitioned (AQE
-   * skew-splits boilerplate grams; 8-byte xxhash64 keys under
-   * `hashKeys`); per-doc scrub starts collapse to one sorted int
-   * array on an id-keyed aggregate (bounded by the doc's own token
-   * count); the removal itself is the [[graft.functions.ScrubSpans]]
+   * skew-splits boilerplate grams; 8-byte xxhash64 keys); per-doc
+   * scrub starts collapse to one sorted int array on an id-keyed
+   * aggregate (bounded by the doc's own token count); the removal itself is the [[graft.functions.ScrubSpans]]
    * codegen kernel — two pointers, O(tokens + starts) per row, no
    * per-position explode. Packing contract: ids and positions < 2³¹.
    * Docs shorter than n tokens produce no gram and pass through
@@ -1543,7 +1491,6 @@ object CorpusPipeline {
       idCol: String,
       textCol: String,
       n: Int = 8,
-      hashKeys: Boolean = true,
       carryCols: Seq[String] = Nil): DataFrame = {
     import graft.functions.{ScrubSpans, WordShingles}
     require(n > 0, "gram length must be positive")
@@ -1562,12 +1509,11 @@ object CorpusPipeline {
         s"exactSubstrScrub packs owners as id*2^32+pos and needs " +
           s"0 <= $idCol < 2^31; got [${idRange.getLong(1)}, ${idRange.getLong(2)}]")
     }
-    val grams0 = base
+    val grams = base
       .filter(size(col("__t")) >= n)
       .select(col(idCol),
         posexplode(WordShingles(col("__t"), n)).as(Seq("pos", "g")))
-    val grams =
-      if (hashKeys) grams0.withColumn("g", xxhash64(col("g"))) else grams0
+      .withColumn("g", xxhash64(col("g")))
     val packed = col(idCol).cast(LongType) * (1L << 32) + col("pos")
     val gstats = grams.groupBy("g")
       .agg(count(lit(1)).as("__c"), min(packed).as("__own"))
@@ -1708,14 +1654,11 @@ object CorpusPipeline {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 8,
-      hashKeys: Boolean = true): DataFrame = {
-    val grams0 = docs
+      n: Int = 8): DataFrame = {
+    val grams = docs
       .filter(size(TF.tokens(col(textCol))) >= n)
       .select(col(idCol), explode(TF.shingles(col(textCol), n)).as("g"))
-    val grams =
-      if (hashKeys) grams0.select(col(idCol), xxhash64(col("g")).as("g"))
-      else grams0
+      .select(col(idCol), xxhash64(col("g")).as("g"))
     val firstDoc = grams.groupBy("g").agg(min(col(idCol)).as("__first"))
     grams.join(firstDoc, "g")
       .groupBy(col(idCol))
@@ -1742,29 +1685,21 @@ object CorpusPipeline {
    * corpus explode 4× (blocks live until the session evicts them, as
    * in `Dedup.semDedup` — loop callers should wrap the call in
    * [[Scoped.withCached]] or `spark.catalog.clearCache()` between
-   * corpora). `hashKeys` (the
-   * 100 TB default, as [[lmSurprisal]]) aggregates 8-byte xxhash64
-   * token keys instead of strings; the result is identical unless
-   * 64-bit hashes collide. 1M docs × 10 sources: 33 s naive → 23 s
-   * persist+pin → 9.8 s hashed keys (local[32]). The
-   * vocab × sources grid (linear in vocab — sources are enumerable,
-   * so this is the deliberate broadcast cross product) left-joins the
-   * per-source counts token-co-partitioned, so absent terms contribute
-   * their full corpus mass. Output: source, n_tokens, distinct_terms,
-   * tv_ppm.
+   * corpora). 1M docs × 10 sources: 33 s naive → 23 s persist+pin →
+   * 9.8 s hashed keys (local[32]). The vocab × sources grid (linear
+   * in vocab — sources are enumerable, so this is the deliberate
+   * broadcast cross product) left-joins the per-source counts
+   * token-co-partitioned, so absent terms contribute their full corpus
+   * mass. Output: source, n_tokens, distinct_terms, tv_ppm.
    */
   def sourceDivergence(
       docs: DataFrame,
       sourceCol: String = "source",
-      textCol: String = "text",
-      hashKeys: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val M = 1000000L
-    val tok0 = docs
+    val sw = docs
       .select(col(sourceCol).as("source"), explode(TF.tokens(col(textCol))).as("w"))
-    val tok =
-      if (hashKeys) tok0.select(col("source"), xxhash64(col("w")).as("w"))
-      else tok0
-    val sw = tok
+      .select(col("source"), xxhash64(col("w")).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
       .transform(Scoped.persistTracked)
     // materialize NOW: the four consumers evaluate concurrently inside
@@ -1816,19 +1751,15 @@ object CorpusPipeline {
       n: Int = 3,
       sourceCol: String = "source",
       textCol: String = "text",
-      hashKeys: Boolean = true,
       maxSourcesPerGram: Int = 64): DataFrame = {
     val srcRows = docs.select(col(sourceCol).cast(StringType)).distinct()
       .limit(63).collect().map(r => if (r.isNullAt(0)) null else r.getString(0))
     if (srcRows.length > 62 || srcRows.length < 2 || srcRows.contains(null))
-      return sourceOverlapGeneral(docs, n, sourceCol, textCol, hashKeys,
-        maxSourcesPerGram)
+      return sourceOverlapGeneral(docs, n, sourceCol, textCol, maxSourcesPerGram)
     val srcList = srcRows.sorted
-    val grams0 = docs.select(
+    val grams = docs.select(
       col(sourceCol).as("source"), explode(TF.shingles(col(textCol), n)).as("gs"))
-    val grams =
-      if (hashKeys) grams0.select(col("source"), xxhash64(col("gs")).as("g"))
-      else grams0.withColumnRenamed("gs", "g")
+      .select(col("source"), xxhash64(col("gs")).as("g"))
     val bit = srcList.zipWithIndex.foldLeft(lit(0L)) { case (acc, (s, i)) =>
       when(col("source") === s, lit(1L << i)).otherwise(acc)
     }
@@ -1945,15 +1876,12 @@ object CorpusPipeline {
       n: Int,
       sourceCol: String,
       textCol: String,
-      hashKeys: Boolean,
       maxSourcesPerGram: Int = 64): DataFrame = {
-    val grams0 = docs.select(
+    val sp = docs.select(
       col(sourceCol).cast(StringType).as("source"),
       explode(TF.shingles(col(textCol), n)).as("gs"))
-    val grams =
-      if (hashKeys) grams0.select(col("source"), xxhash64(col("gs")).as("g"))
-      else grams0.withColumnRenamed("gs", "g")
-    val sp = grams.distinct().transform(Scoped.persistTracked)
+      .select(col("source"), xxhash64(col("gs")).as("g"))
+      .distinct().transform(Scoped.persistTracked)
     sp.count() // pin: consumed by the pair join and the per-source totals
     val sets = sp.groupBy("g").agg(sort_array(collect_set(col("source"))).as("ss"))
       .observe("source_overlap_cap",
@@ -2045,21 +1973,14 @@ object CorpusPipeline {
    *
    * Plan: one (source, term) combining aggregate, then one per-source
    * aggregate — the same two-level shape as [[sourceDivergence]].
-   * `hashKeys` replaces term strings with xxhash64 before the wide
-   * shuffle (8-byte keys; every output stat depends only on the
-   * count multiset, so the oracle's raw-string replay matches).
    */
   def diversityStats(
       docs: DataFrame,
       sourceCol: String = "source",
-      textCol: String = "text",
-      hashKeys: Boolean = true): DataFrame = {
-    val tok0 = docs
+      textCol: String = "text"): DataFrame = {
+    docs
       .select(col(sourceCol).as("source"), explode(TF.tokens(col(textCol))).as("w"))
-    val tok =
-      if (hashKeys) tok0.select(col("source"), xxhash64(col("w")).as("w"))
-      else tok0
-    tok
+      .select(col("source"), xxhash64(col("w")).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
       .groupBy("source")
       .agg(
@@ -2091,15 +2012,12 @@ object CorpusPipeline {
   def corpusDrift(
       oldDocs: DataFrame,
       newDocs: DataFrame,
-      textCol: String = "text",
-      hashKeys: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     val M = 1000000L
-    def counts(df: DataFrame): DataFrame = {
-      val tok0 = df.select(explode(TF.tokens(col(textCol))).as("w"))
-      val tok =
-        if (hashKeys) tok0.select(xxhash64(col("w")).as("w")) else tok0
-      tok.groupBy("w").agg(count(lit(1)).as("c"))
-    }
+    def counts(df: DataFrame): DataFrame =
+      df.select(explode(TF.tokens(col(textCol))).as("w"))
+        .select(xxhash64(col("w")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("c"))
     val oc = counts(oldDocs).withColumnRenamed("c", "co")
     val nc = counts(newDocs).withColumnRenamed("c", "cn")
     val joined = oc.join(nc, Seq("w"), "full_outer")
@@ -2549,23 +2467,19 @@ object CorpusPipeline {
    * Plan shape (identical to a real KenLM-scored CCNet stage): the LM
    * build is one map-side-combining count aggregate over the exploded
    * token stream; scoring joins the stream back to the LM
-   * token-co-partitioned — with `hashKeys` both shuffles carry 8-byte
-   * xxhash64 keys instead of strings (the count table is identical
-   * unless 64-bit hashes collide). The token stream is recomputed for
-   * each consumer (a map-only explode) rather than cached — at corpus
-   * scale the explode is far cheaper than materializing it.
+   * token-co-partitioned, both shuffles on 8-byte xxhash64 keys. The
+   * token stream is recomputed for each consumer (a map-only explode)
+   * rather than cached — at corpus scale the explode is far cheaper
+   * than materializing it.
    *
    * @return (idCol, ntok, surprisal_sum, rarity = surprisal_sum div ntok)
    */
   def lmSurprisal(
       docs: DataFrame,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      hashKeys: Boolean = true): DataFrame = {
-    val tok0 = docs.select(col(idCol), explode(TF.tokens(col(textCol))).as("w"))
-    val tok =
-      if (hashKeys) tok0.select(col(idCol), xxhash64(col("w")).as("w"))
-      else tok0
+      textCol: String = "text"): DataFrame = {
+    val tok = docs.select(col(idCol), explode(TF.tokens(col(textCol))).as("w"))
+      .select(col(idCol), xxhash64(col("w")).as("w"))
     // the LM table is vocab-bounded; persist it and DERIVE the token
     // total from it (sum of counts) — the tot = tok.agg formulation
     // re-exploded the whole corpus for one number, and the unpersisted
@@ -2778,10 +2692,10 @@ object CorpusPipeline {
    * deterministic md5 split (content-hashed → stable under
    * reprocessing and portable across engines).
    *
-   * With `persistIntermediate=true` the returned DataFrame references a
-   * cached intermediate that stays cached until the caller unpersists
-   * or the session ends — use [[runAndRelease]] when the result is
-   * consumed once and the cache should not outlive it.
+   * The returned DataFrame references a cached intermediate that stays
+   * cached until the caller unpersists or the session ends — use
+   * [[runAndRelease]] when the result is consumed once and the cache
+   * should not outlive it.
    */
   def run(
       docs: DataFrame,
@@ -2791,10 +2705,9 @@ object CorpusPipeline {
       blocklist: Option[Array[Byte]] = None,
       benchmark: Option[DataFrame] = None,
       trainPct: Int = 90,
-      valPct: Int = 5,
-      persistIntermediate: Boolean = true): DataFrame =
+      valPct: Int = 5): DataFrame =
     build(docs, idCol, textCol, nearDupThreshold, blocklist, benchmark,
-      trainPct, valPct, persistIntermediate)._1
+      trainPct, valPct)._1
 
   /**
    * Like [[run]], but scoped: materializes the result through `action`
@@ -2813,9 +2726,9 @@ object CorpusPipeline {
       trainPct: Int = 90,
       valPct: Int = 5)(action: DataFrame => T): T = {
     val (result, cached) = build(docs, idCol, textCol, nearDupThreshold,
-      blocklist, benchmark, trainPct, valPct, persistIntermediate = true)
+      blocklist, benchmark, trainPct, valPct)
     try action(result)
-    finally cached.foreach(_.unpersist(blocking = false))
+    finally cached.unpersist(blocking = false)
   }
 
   /**
@@ -3328,20 +3241,17 @@ object CorpusPipeline {
       blocklist: Option[Array[Byte]],
       benchmark: Option[DataFrame],
       trainPct: Int,
-      valPct: Int,
-      persistIntermediate: Boolean): (DataFrame, Option[DataFrame]) = {
+      valPct: Int): (DataFrame, DataFrame) = {
     val gated = qualityFilter(annotate(redactPii(docs, textCol), textCol))
     val blocked = blocklist.fold(gated)(bloomBlocklist(gated, _, textCol))
     val clean = benchmark.fold(blocked)(decontaminate(blocked, _, idCol, textCol))
-    val exact0 = Dedup.exact(clean, "fingerprint", idCol)
     // near-dedup references its input several times (signatures, two
     // verify joins, the final anti-join); without persistence each
     // reference re-runs the whole upstream chain (~4x the work)
-    val exact = if (persistIntermediate)
-      exact0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else exact0
+    val exact = Dedup.exact(clean, "fingerprint", idCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val near = Dedup.dropNearDuplicates(exact, idCol, textCol, nearDupThreshold)
     val out = near.withColumn("split", TF.hashSplit(col(textCol), trainPct, valPct))
-    (out, if (persistIntermediate) Some(exact) else None)
+    (out, exact)
   }
 }

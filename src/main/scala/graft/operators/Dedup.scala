@@ -972,12 +972,10 @@ object Dedup {
    * exact). Pair cost is bounded by Σ_g df(g)² ≤ dfCap · |postings|.
    * Docs with fewer than `n` tokens are gated out (a whole-doc
    * degenerate shingle is not containment evidence — the inverse of
-   * q_c22's WordShingles contract). With `hashKeys` the posting
-   * shuffles carry 8-byte xxhash64 keys instead of shingle strings
-   * (the stupidBackoffSurprisal lesson: string join keys alone cost
-   * 1.3-2×) — identical results unless 64-bit hashes collide
-   * (spec-pinned equal; since r19 the oracle-checked query runs
-   * hashKeys=true too, hash-verified at all three SFs).
+   * q_c22's WordShingles contract). The posting shuffles carry 8-byte
+   * xxhash64 keys instead of shingle strings (the
+   * stupidBackoffSurprisal lesson: string join keys alone cost 1.3-2×;
+   * see `CorpusPipeline` for the collision trade).
    *
    * @return (id_a, id_b, inter, sz_a, sz_b, contain_a_ppm,
    *         contain_b_ppm) for pairs with max-side containment ≥
@@ -989,8 +987,7 @@ object Dedup {
       textCol: String = "text",
       n: Int = 5,
       dfCap: Int = 50,
-      minContainPpm: Long = 500000L,
-      hashKeys: Boolean = true): DataFrame = {
+      minContainPpm: Long = 500000L): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     require(dfCap >= 2, s"dfCap must be >= 2 (pairs need both sides), got $dfCap")
     val keyed = docs
@@ -998,8 +995,7 @@ object Dedup {
       .filter(size(col("__t")) >= n)
       .select(col("__id"),
         explode(array_distinct(graft.functions.WordShingles(col("__t"), n))).as("__g"))
-    val sh = (if (hashKeys) keyed.select(col("__id"), xxhash64(col("__g")).as("__g"))
-      else keyed)
+    val sh = keyed.select(col("__id"), xxhash64(col("__g")).as("__g"))
       .transform(Scoped.persistTracked)
     sh.count() // pin: feeds sizes and the posting-group pass
     val sizes = sh.groupBy("__id").agg(count(lit(1)).as("sz"))

@@ -92,17 +92,14 @@ object CQueries {
     // C91: asymmetric containment — every 13th doc gets a planted
     // 12-token-prefix excerpt twin (+700000): the excerpt's shingles
     // are a subset of the original's, so contain_a/b hits 10⁶ where
-    // Jaccard would be diluted by the size gap. hashKeys=true (r19):
-    // 8-byte xxhash64 shingle keys ride the dominant exchange — the
-    // 100 TB plan the operator ships; spec-pinned output-identical to
-    // the string-key mode, and the md5-keyed oracle still replays the
-    // same result.
+    // Jaccard would be diluted by the size gap. The md5-keyed oracle
+    // replays the same result over shingle strings.
     "q_c91_containment" -> ((s, dir) => {
       val base = docs(s, dir).select("doc_id", "text")
       val excerpts = base.filter(col("doc_id") % 13 === 0)
         .select((col("doc_id") + 700000L).as("doc_id"),
           concat_ws(" ", slice(TF.tokens(col("text")), 1, 12)).as("text"))
-      Dedup.containmentPairs(base.union(excerpts), hashKeys = true)
+      Dedup.containmentPairs(base.union(excerpts))
         .orderBy("id_a", "id_b")
     }),
 

@@ -218,10 +218,9 @@ object PipeQueries {
 
     // C53: content-defined-chunk dedup — SHIFTED copies (prefix
     // prepended, 1-of-6 docs) still share every chunk after the first
-    // re-aligned boundary; fixed blocks would share nothing.
-    // hashKeys=true (r19): 8-byte chunk keys on the dedup aggregate;
-    // the oracle replays boundaries over exact strings and the counts
-    // hash-match (spec-pinned equal, CdcSpec).
+    // re-aligned boundary; fixed blocks would share nothing. The
+    // oracle replays boundaries over exact strings and the counts
+    // hash-match.
     "q_c53_cdc_dedup" -> ((s, dir) => {
       val d = docsPar(s, dir).select("doc_id", "text")
       val planted = d.filter(col("doc_id") % 6 === 0)
@@ -229,7 +228,7 @@ object PipeQueries {
           concat(lit("shifted prefix goes here "), col("text")).as("text"))
       graft.operators.CorpusPipeline
         .cdcDedupStats(d.union(planted), "doc_id", "text",
-          window = 4, modulus = 8, hashKeys = true)
+          window = 4, modulus = 8)
         .groupBy(when(col("doc_id") >= 500000L, "planted").otherwise("orig")
           .as("bucket"))
         .agg(
@@ -579,7 +578,7 @@ object PipeQueries {
     "q_c84_stupid_backoff" -> ((s, dir) => {
       graft.operators.CorpusPipeline
         .stupidBackoffSurprisal(docsPar(s, dir), col("doc_id") % 5 === 0,
-          "doc_id", "text", hashKeys = true)
+          "doc_id", "text")
         .orderBy("doc_id")
     }),
 
@@ -591,35 +590,31 @@ object PipeQueries {
     "q_c101_kneser_ney" -> ((s, dir) => {
       graft.operators.CorpusPipeline
         .kneserNeyBigramSurprisal(docsPar(s, dir), col("doc_id") % 5 === 0,
-          "doc_id", "text", hashKeys = true)
+          "doc_id", "text")
         .orderBy("doc_id")
     }),
 
     // C110: interpolated Kneser–Ney TRIGRAM scoring — C101 one order
-    // up (the CCNet-reference recursion). hashKeys=true (r19): the
-    // oracle still replays the whole ladder (type tables, continuation
-    // counts, three separately-rounded terms) genuinely in SQL over
-    // string keys; the Spark side keys its exchanges on 8-byte
-    // xxhash64 — spec-pinned output-identical, oracle-verified at all
-    // three SFs.
+    // up (the CCNet-reference recursion). The oracle replays the whole
+    // ladder (type tables, continuation counts, three separately-
+    // rounded terms) genuinely in SQL over string keys.
     "q_c110_kneser_ney_tri" -> ((s, dir) => {
       graft.operators.CorpusPipeline
         .kneserNeyTrigramSurprisal(docsPar(s, dir), col("doc_id") % 5 === 0,
-          "doc_id", "text", hashKeys = true)
+          "doc_id", "text")
         .orderBy("doc_id")
     }),
 
     // C115: interpolated Kneser–Ney at order 5 — the Wenzek 2020 CCNet
     // configuration, from the generic order-n ladder (generic(3) is
-    // spec-pinned bit-identical to C110). hashKeys=true (r19, the C84/
-    // C106 precedent): 8-byte exchange keys are the measured 100 TB
-    // plan (x100: 163.3 s string-keyed vs 33.5 s hashed, BASELINE r15);
-    // the oracle replays the full 5-deep suffix-type chain genuinely in
-    // SQL over strings and the results hash-match at all three SFs.
+    // spec-pinned bit-identical to C110). 8-byte exchange keys are the
+    // measured 100 TB plan (x100: 163.3 s string-keyed vs 33.5 s
+    // hashed, BASELINE r15); the oracle replays the full 5-deep
+    // suffix-type chain genuinely in SQL over strings.
     "q_c115_kneser_ney_5" -> ((s, dir) => {
       graft.operators.CorpusPipeline
         .kneserNeyNgramSurprisal(docsPar(s, dir), col("doc_id") % 5 === 0,
-          order = 5, "doc_id", "text", hashKeys = true)
+          order = 5, "doc_id", "text")
         .orderBy("doc_id")
     }),
 
@@ -2022,8 +2017,7 @@ object PipeQueries {
             lit(" shared boilerplate gram alpha beta gamma delta epsilon zeta eta")))
           .otherwise(col("text")))
       graft.operators.CorpusPipeline
-        .gramNovelty(planted.select(col("doc_id"), col("text2")), "doc_id", "text2",
-          hashKeys = true)
+        .gramNovelty(planted.select(col("doc_id"), col("text2")), "doc_id", "text2")
         .select(col("doc_id"), col("grams"), col("novel_grams"), col("novelty_pct"))
         .orderBy("doc_id")
     }),
@@ -2039,8 +2033,7 @@ object PipeQueries {
             lit(" shared boilerplate gram alpha beta gamma delta epsilon zeta eta")))
           .otherwise(col("text")))
       graft.operators.CorpusPipeline
-        .duplicatedSpans(planted.select(col("doc_id"), col("text2")), "doc_id", "text2",
-          hashKeys = true)
+        .duplicatedSpans(planted.select(col("doc_id"), col("text2")), "doc_id", "text2")
         .select(col("doc_id"), col("n_spans"), col("dup_grams"), col("max_span_tokens"))
         .orderBy("doc_id")
     }),
@@ -2059,8 +2052,7 @@ object PipeQueries {
             lit(" shared boilerplate gram alpha beta gamma delta epsilon zeta eta")))
           .otherwise(col("text")))
       graft.operators.CorpusPipeline
-        .exactSubstrScrub(planted, "doc_id", "text2",
-          hashKeys = true, carryCols = Seq("source"))
+        .exactSubstrScrub(planted, "doc_id", "text2", carryCols = Seq("source"))
         .select(col("doc_id"), col("source"),
           col("kept_tokens"), col("removed_tokens"), col("n_spans"),
           md5(col("kept_text")).as("kept_md5"))
@@ -2145,7 +2137,7 @@ object PipeQueries {
     // LM with a lead() window.
     "q_c42_bigram_lm" -> ((s, dir) => {
       graft.operators.CorpusPipeline
-        .lmBigramSurprisal(docsPar(s, dir), "doc_id", "text", hashKeys = true)
+        .lmBigramSurprisal(docsPar(s, dir), "doc_id", "text")
         .select(col("doc_id"), col("n_bigrams"), col("surprisal_sum"), col("rarity"))
         .orderBy("doc_id")
     }),
@@ -2154,7 +2146,7 @@ object PipeQueries {
     // mix — integer total-variation in ppm, exact on both engines.
     "q_c41_source_divergence" -> ((s, dir) => {
       graft.operators.CorpusPipeline
-        .sourceDivergence(docsPar(s, dir), "source", "text", hashKeys = true)
+        .sourceDivergence(docsPar(s, dir), "source", "text")
         .select(col("source"), col("n_tokens"), col("distinct_terms"), col("tv_ppm"))
         .orderBy("source")
     }),

@@ -374,29 +374,19 @@ object LogStream {
           posexplode(array(bandCols: _*)).as(Seq("band", "bk")))
         .as[BandKey]
     }
-    // ONE row per bucket: initialState rejects duplicate keys (the
-    // D18 pre-aggregate rule)
     if (hashKeys) {
-      // r20 (the batch hashKeys rule at the stream edge): the state
+      // The batch hashed-key rule at the stream edge: the state
       // key is xxhash64(band, bk) — 8 bytes on the grouping exchange
       // and in the state store instead of the "band:slot,slot" string.
-      // Output-identical modulo a 64-bit collision (the accepted
-      // batch-wide trade since r19's hashKeys flips; LogStreamSpec
-      // pins hashed ≡ string verdicts).
+      // Output-identical modulo a 64-bit collision (LogStreamSpec pins
+      // hashed ≡ string verdicts).
       def keyed(d: Dataset[BandKey]): Dataset[BandKeyK] = d
         .select(col("doc_id"), col("band"),
           xxhash64(col("band"), col("bk")).as("k")).as[BandKeyK]
-      val init = keyed(bandKeys(corpus)
-          .groupBy(col("band"), col("bk"))
-          .agg(min(col("doc_id")).as("doc_id"))
-          .select(col("doc_id"), col("band"), col("bk")).as[BandKey])
-        .groupByKey(_.k)
-        .mapValues(_ => TrainMark(1))
-      keyed(bandKeys(docs))
-        .groupByKey(_.k)
-        .flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.NoTimeout, init)(leakGateFuncK)
+      leakGateKeyed(keyed(bandKeys(docs)), keyed(bandKeys(corpus)))
     } else {
+      // ONE row per bucket: initialState rejects duplicate keys (the
+      // D18 pre-aggregate rule)
       val init = bandKeys(corpus)
         .groupBy(col("band"), col("bk"))
         .agg(min(col("doc_id")).as("doc_id"))
@@ -408,6 +398,26 @@ object LogStream {
         .flatMapGroupsWithState(
           OutputMode.Append, GroupStateTimeout.NoTimeout, init)(leakGateFunc)
     }
+  }
+
+  /** D32's hashed warm-start step: `corpus` bucket keys seed the
+   * read-only state, `docs` bucket keys probe it. The seed is one row
+   * per DISTINCT hashed key `k` (the D31 rule): initialState rejects
+   * duplicate keys, and two (band, bk) buckets whose xxhash64 collide
+   * share a `k`, so grouping by (band, bk) before hashing would fail
+   * the query. A collision instead merges the two buckets — a
+   * candidate in either one is gated (fail-soft, never a crash). */
+  private[streaming] def leakGateKeyed(
+      docs: Dataset[BandKeyK],
+      corpus: Dataset[BandKeyK]): Dataset[LeakHit] = {
+    import docs.sparkSession.implicits._
+    val init = corpus.select(col("k")).distinct().as[Long]
+      .groupByKey(identity)
+      .mapValues(_ => TrainMark(1))
+    docs
+      .groupByKey(_.k)
+      .flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.NoTimeout, init)(leakGateFuncK)
   }
 
   private val leakGateFunc:

@@ -123,8 +123,8 @@ class PlanAuditSpec extends SparkSpec {
     // own scan; executed documents reads stay 2 (q_c50-note class).
     // q_c60 = 2 (r19, was 1): planned ALONE the query is one scan; in
     // this suite's shared session the q_c41 sourceDivergence builder
-    // (hashKeys=true since r19) has already registered its persisted
-    // per-(source, xxhash64 term) count frame, and q_c60's first
+    // has already registered its persisted per-(source, xxhash64
+    // term) count frame, and q_c60's first
     // aggregate is plan-identical, so the cache manager substitutes the
     // InMemoryRelation — both printed refs sit INSIDE its cached
     // subplan (printed twice per InMemoryRelation); at runtime the

@@ -106,23 +106,31 @@ class CdcSpec extends SparkSpec {
     }
   }
 
-  test("C53: cdcDedupStats marks shifted duplicates, hashKeys parity") {
+  test("C53: cdcDedupStats marks shifted duplicates, matches brute force") {
     val base = (0 until 40).map { i =>
       (i.toLong, (1 to 120).map(j => s"w${(i * 31 + j * 7) % 53}n$j").mkString(" "))
     }
     val shifted = base.filter(_._1 % 4 == 0)
       .map { case (id, t) => (id + 1000L, "shift pre amble " + t) }
     val docs = (base ++ shifted).toDF("doc_id", "text")
-    val exact = CorpusPipeline.cdcDedupStats(docs, hashKeys = false)
-    val hashed = CorpusPipeline.cdcDedupStats(docs, hashKeys = true)
-    // identical stats under string and xxhash64 keys
-    assert(exact.except(hashed).isEmpty && hashed.except(exact).isEmpty)
-    val planted = exact.filter(col("doc_id") >= 1000L).collect()
+    val stats = CorpusPipeline.cdcDedupStats(docs)
+    // brute force: the same CdcChunks cut, chunk strings counted in Scala
+    val chunks = docs.select(col("doc_id"), CdcChunks(TF.tokens(col("text")), 4, 8))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toSeq
+    val corpusCount = chunks.flatMap(_._2).groupBy(identity).map { case (c, v) => c -> v.size }
+    val expected = chunks.filter(_._2.nonEmpty).map { case (id, cs) =>
+      val dup = cs.filter(corpusCount(_) > 1)
+      (id, cs.size.toLong, dup.size.toLong, dup.map(_.split(" ", -1).length.toLong).sum)
+    }.toSet
+    val got = stats.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(got == expected)
+    val planted = stats.filter(col("doc_id") >= 1000L).collect()
     assert(planted.nonEmpty)
     planted.foreach { r =>
       assert(r.getLong(3) > 0, s"shifted copy ${r.getLong(0)} shares no tokens") }
     // unshifted unique docs share nothing
-    val unique = exact.filter(col("doc_id") < 1000L && col("doc_id") % 4 =!= 0)
+    val unique = stats.filter(col("doc_id") < 1000L && col("doc_id") % 4 =!= 0)
     assert(unique.filter(col("dup_tokens") > 0).count() == 0)
   }
 }

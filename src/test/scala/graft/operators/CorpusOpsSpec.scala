@@ -143,12 +143,22 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("lmBigramSurprisal: hashed and string keys agree") {
-    val docs = Seq((1L, "x y x y z"), (2L, "y z q")).toDF("doc_id", "text")
-    val a = CorpusPipeline.lmBigramSurprisal(docs, "doc_id", "text", hashKeys = true)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val b = CorpusPipeline.lmBigramSurprisal(docs, "doc_id", "text", hashKeys = false)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(a == b)
+    val rows = Seq((1L, "x y x y z"), (2L, "y z q")) ++ (3L to 40L).map(i =>
+      (i, s"w${i % 5} w${i % 3} w${i % 5} w${i % 7} w${i % 2}"))
+    // brute force over the bigram strings: c(w1 ·) div c(w1 w2) per instance
+    val bgs = rows.map { case (id, t) => id -> t.trim.split("\\s+").toSeq }
+      .filter(_._2.length >= 2)
+      .map { case (id, ts) => id -> ts.sliding(2).toSeq }
+    val cb = bgs.flatMap(_._2).groupBy(identity).map { case (b, v) => b -> v.size.toLong }
+    val cw = cb.toSeq.groupBy(_._1.head).map { case (w, v) => w -> v.map(_._2).sum }
+    val expected = bgs.map { case (id, bs) =>
+      val s = bs.map(b => cw(b.head) / cb(b)).sum
+      (id, bs.size.toLong, s, s / bs.size)
+    }
+    val got = CorpusPipeline.lmBigramSurprisal(rows.toDF("doc_id", "text"), "doc_id", "text")
+      .orderBy("doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got == expected)
   }
 
   test("duplicatedSpans merges consecutive duplicated gram positions into maximal spans") {

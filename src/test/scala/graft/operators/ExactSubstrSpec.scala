@@ -11,8 +11,7 @@ class ExactSubstrSpec extends SparkSpec {
 
   private def run(rows: Seq[(Long, String)], n: Int) =
     CorpusPipeline
-      .exactSubstrScrub(rows.toDF("id", "text"), "id", "text", n = n,
-        hashKeys = false)
+      .exactSubstrScrub(rows.toDF("id", "text"), "id", "text", n = n)
       .orderBy("id")
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3),
@@ -72,26 +71,11 @@ class ExactSubstrSpec extends SparkSpec {
       (2L, "", 0, 3, 1)))
   }
 
-  test("hashKeys mode matches string mode") {
-    val rows = Seq(
-      1L -> "a b c d e f", 2L -> "x a b c d y", 3L -> "p q r s p q r t",
-      4L -> "m n o", 5L -> "m n o")
-    val s = run(rows, 3)
-    val h = CorpusPipeline
-      .exactSubstrScrub(rows.toDF("id", "text"), "id", "text", n = 3,
-        hashKeys = true)
-      .orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3),
-        r.getInt(4))).toSeq
-    assert(s == h)
-  }
-
   test("carryCols ride through without a second join") {
     val df = Seq((1L, "s1", "m n o"), (2L, "s2", "m n o"))
       .toDF("id", "src", "text")
     val out = CorpusPipeline
-      .exactSubstrScrub(df, "id", "text", n = 3, hashKeys = false,
-        carryCols = Seq("src"))
+      .exactSubstrScrub(df, "id", "text", n = 3, carryCols = Seq("src"))
       .orderBy("id").select("id", "src", "kept_text").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
     assert(out == Seq((1L, "s1", "m n o"), (2L, "s2", "")))
@@ -138,15 +122,7 @@ class ExactSubstrSpec extends SparkSpec {
       (id, kept.mkString(" "), ts.length - covered.count(identity),
         covered.count(identity), spans)
     }
-    for (hashed <- Seq(false, true)) {
-      val got = CorpusPipeline
-        .exactSubstrScrub(docs.toDF("id", "text"), "id", "text", n = n,
-          hashKeys = hashed)
-        .orderBy("id").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3),
-          r.getInt(4))).toSeq
-      assert(got == expected, s"hashKeys=$hashed")
-    }
+    assert(run(docs, n) == expected)
   }
 
   test("packing contract: ids outside [0, 2^31) fail loudly, not corrupt owners") {

@@ -111,7 +111,7 @@ class ImportanceSpec extends SparkSpec {
     val docs = ((0 until 200).map(i => (s"s$i", "univ boiler plate")) ++
       Seq(("s0", "real shared gram"), ("s1", "real shared gram"))).toDF("source", "text")
     val capped = CorpusPipeline.sourceOverlapGeneral(
-      docs, 3, "source", "text", true, maxSourcesPerGram = 64)
+      docs, 3, "source", "text", maxSourcesPerGram = 64)
     val rows = capped
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
     // the universal gram is dropped (|set|=200 > 64) → the ONLY pair is
@@ -124,7 +124,7 @@ class ImportanceSpec extends SparkSpec {
     // and with the cap raised above the label count, the universal gram
     // contributes: every pair shares it.
     val uncapped = CorpusPipeline.sourceOverlapGeneral(
-      docs, 3, "source", "text", true, maxSourcesPerGram = 200)
+      docs, 3, "source", "text", maxSourcesPerGram = 200)
     assert(uncapped.count() == 19900L)
   }
 
@@ -134,19 +134,27 @@ class ImportanceSpec extends SparkSpec {
       .toDF("source", "text")
     val fast = CorpusPipeline.sourceOverlap(docs, n = 3)
       .orderBy("src_a", "src_b").collect().toSeq
-    val gen = CorpusPipeline.sourceOverlapGeneral(docs, 3, "source", "text", true)
+    val gen = CorpusPipeline.sourceOverlapGeneral(docs, 3, "source", "text")
       .orderBy("src_a", "src_b").collect().toSeq
     assert(fast == gen)
   }
 
   test("C60: hashed and raw term keys produce identical stats") {
-    val docs = (1L to 30L)
+    val rows = (1L to 30L)
       .map(i => (s"s${i % 3}", s"tok${i % 7} tok${i % 5} tok${i % 7} filler$i"))
-      .toDF("source", "text")
-    val a = CorpusPipeline.diversityStats(docs, hashKeys = true)
-      .orderBy("source").collect().toSeq
-    val b = CorpusPipeline.diversityStats(docs, hashKeys = false)
-      .orderBy("source").collect().toSeq
-    assert(a == b)
+    // brute force over the raw term strings
+    val expected = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (src, ds) =>
+      val c = ds.flatMap(_._2.trim.split("\\s+")).groupBy(identity)
+        .map(_._2.size.toLong)
+      val n = c.sum
+      (src, n, c.size.toLong, c.count(_ == 1L).toLong,
+        c.size * 1000000L / n,
+        if (n > 1) c.map(x => x * (x - 1)).sum * 1000000L / (n * (n - 1)) else 0L)
+    }
+    val got = CorpusPipeline.diversityStats(rows.toDF("source", "text"))
+      .orderBy("source").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5))).toSeq
+    assert(got == expected)
   }
 }

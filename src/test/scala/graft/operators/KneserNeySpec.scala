@@ -31,7 +31,7 @@ class KneserNeySpec extends SparkSpec {
     val docs = Seq(train, (1L, "a c x b"), (2L, "b c b c"))
       .toDF("doc_id", "text")
     val out = CorpusPipeline
-      .kneserNeyBigramSurprisal(docs, col("doc_id") === 0, hashKeys = false)
+      .kneserNeyBigramSurprisal(docs, col("doc_id") === 0)
       .orderBy("doc_id")
       .select("doc_id", "n_bigrams", "n_hit", "n_cont", "n_uctx", "n_oov",
         "p_sum_ppm", "mean_p_ppm")
@@ -49,21 +49,10 @@ class KneserNeySpec extends SparkSpec {
   test("empty train slice degrades to all-OOV with p 0, not null") {
     val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
     val r = CorpusPipeline
-      .kneserNeyBigramSurprisal(docs, lit(false), hashKeys = false)
+      .kneserNeyBigramSurprisal(docs, lit(false))
       .collect().head
     assert(r.getAs[Long]("n_oov") == 2L && r.getAs[Long]("p_sum_ppm") == 0L)
     spark.catalog.clearCache()
-  }
-
-  test("hashed and string keys agree") {
-    val docs = Seq(train, (1L, "a c x b"), (2L, "b c b c")).toDF("doc_id", "text")
-    val a = CorpusPipeline.kneserNeyBigramSurprisal(docs, col("doc_id") === 0, hashKeys = false)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    spark.catalog.clearCache()
-    val b = CorpusPipeline.kneserNeyBigramSurprisal(docs, col("doc_id") === 0, hashKeys = true)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    spark.catalog.clearCache()
-    assert(a == b)
   }
 
   // ---- C110: trigram interpolated KN ----
@@ -75,6 +64,63 @@ class KneserNeySpec extends SparkSpec {
   // tmid: b→(nmid 2, n1fw2 2), c→(1, 1), a→(1, 1).
   // tbw: a/b/c/d → 1 each.
   private val train3 = (0L, "a b c a b c a b d")
+
+  private type KnRow = (Long, Long, Long, Long, Long, Long, Long, Long, Long)
+
+  private def knTrigramRows(df: org.apache.spark.sql.DataFrame): Seq[KnRow] =
+    df.orderBy("doc_id")
+      .select("doc_id", "n_trigrams", "n_hit", "n_cont", "n_umid", "n_ubw",
+        "n_oov", "p_sum_ppm", "mean_p_ppm")
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8)))
+      .toSeq
+
+  /** Brute-force C110 reference over exact token strings (Scala
+   * collections, the operator scaladoc's formula): trigram types and
+   * counts from the train docs, continuation tables from the types,
+   * then each instance's level and three-term ppm probability. */
+  private def bruteKnTrigram(docs: Seq[(Long, String)],
+      isTrain: Long => Boolean): Seq[KnRow] = {
+    val grams = docs
+      .map { case (id, t) => id -> t.trim.split("\\s+").toSeq }
+      .filter(_._2.length >= 3)
+      .map { case (id, ts) => id -> ts.sliding(3).toSeq }
+      .sortBy(_._1)
+    val tt: Map[Seq[String], Long] = grams.filter(g => isTrain(g._1))
+      .flatMap(_._2).groupBy(identity).map { case (g, v) => g -> v.size.toLong }
+    val tctx = tt.toSeq.groupBy(_._1.take(2))
+      .map { case (c, v) => c -> ((v.map(_._2).sum, v.size.toLong)) }
+    val tbi = tt.keys.toSeq.groupBy(_.drop(1))
+      .map { case (b, v) => b -> v.size.toLong }
+    val tmid = tbi.toSeq.groupBy(_._1.head)
+      .map { case (w, v) => w -> ((v.map(_._2).sum, v.size.toLong)) }
+    val tbw = tbi.keys.toSeq.groupBy(_.last)
+      .map { case (w, v) => w -> v.size.toLong }
+    val bigT = math.max(tbi.size.toLong, 1L)
+    grams.map { case (id, gs) =>
+      val scored = gs.map { g =>
+        val nbi = tbi.getOrElse(g.drop(1), 0L)
+        val n1bw = tbw.getOrElse(g(2), 0L)
+        (tt.get(g), tctx.get(g.take(2)), tmid.get(g(1))) match {
+          case (c123, Some((c12, n1fw12)), Some((nmid, n1fw2))) =>
+            val w = 3 * n1fw12 * 250000 / c12
+            (if (c123.isDefined) 1 else 2,
+              math.max(4 * c123.getOrElse(0L) - 3, 0L) * 250000 / c12 +
+                w * math.max(4 * nbi - 3, 0L) / (4 * nmid) +
+                w * (3 * n1fw2) / (4 * nmid) * n1bw / bigT)
+          case (_, None, Some((nmid, n1fw2))) =>
+            (3, math.max(4 * nbi - 3, 0L) * 250000 / nmid +
+              3 * n1fw2 * 250000 / nmid * n1bw / bigT)
+          case _ => (if (n1bw > 0) 4 else 5, n1bw * 1000000 / bigT)
+        }
+      }
+      def lvl(l: Int) = scored.count(_._1 == l).toLong
+      val pSum = scored.map(_._2).sum
+      (id, gs.size.toLong, lvl(1), lvl(2), lvl(3), lvl(4), lvl(5), pSum,
+        pSum / gs.size)
+    }
+  }
 
   test("C110: the five-level ladder, every level hand-computed") {
     // "a b c" lvl1: 1250000//3 + (1500000//3)·1//8 + ((500000·6)//8)·1//4
@@ -91,15 +137,8 @@ class KneserNeySpec extends SparkSpec {
     //   + 93750(a) + 93750(b) = 999999 ≈ 1e6 (rounding loss 1).
     val docs = Seq(train3, (1L, "a b c"), (2L, "a b a"), (3L, "e b c"),
       (4L, "e e c"), (5L, "e e e"), (6L, "x y")).toDF("doc_id", "text")
-    val out = CorpusPipeline
-      .kneserNeyTrigramSurprisal(docs, col("doc_id") === 0, hashKeys = false)
-      .orderBy("doc_id")
-      .select("doc_id", "n_trigrams", "n_hit", "n_cont", "n_umid", "n_ubw",
-        "n_oov", "p_sum_ppm", "mean_p_ppm")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8)))
-      .toSeq
+    val out = knTrigramRows(
+      CorpusPipeline.kneserNeyTrigramSurprisal(docs, col("doc_id") === 0))
     assert(out == Seq(
       (0L, 7L, 7L, 0L, 0L, 0L, 0L, 4541663L, 648809L),
       (1L, 1L, 1L, 0L, 0L, 0L, 0L, 572916L, 572916L),
@@ -115,19 +154,27 @@ class KneserNeySpec extends SparkSpec {
   test("C110: empty train degrades to all-OOV p 0; hashed and string keys agree") {
     val solo = Seq((1L, "a b c d")).toDF("doc_id", "text")
     val r = CorpusPipeline
-      .kneserNeyTrigramSurprisal(solo, lit(false), hashKeys = false)
+      .kneserNeyTrigramSurprisal(solo, lit(false))
       .collect().head
     assert(r.getAs[Long]("n_oov") == 2L && r.getAs[Long]("p_sum_ppm") == 0L)
     spark.catalog.clearCache()
-    val docs = Seq(train3, (1L, "a b c"), (2L, "e b c"), (3L, "q w e r t"))
-      .toDF("doc_id", "text")
-    val a = CorpusPipeline.kneserNeyTrigramSurprisal(docs, col("doc_id") === 0, hashKeys = false)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    // the hashed-key operator against the string-keyed brute force, on
+    // the ladder's train doc plus a seeded tiny-vocab corpus (train =
+    // every third doc) that reaches all five levels
+    val rnd = new scala.util.Random(110)
+    val vocab = Vector("a", "b", "c", "d", "e", "f")
+    val extra = (10L until 40L).map(i =>
+      i -> Seq.fill(3 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val rows = Seq(train3, (1L, "a b c"), (2L, "e b c"), (3L, "q w e r t")) ++ extra
+    val isTrain = (id: Long) => id == 0L || (id >= 10L && id % 3 == 0)
+    val expected = bruteKnTrigram(rows, isTrain)
+    val got = knTrigramRows(CorpusPipeline.kneserNeyTrigramSurprisal(
+      rows.toDF("doc_id", "text"),
+      col("doc_id") === 0 || (col("doc_id") >= 10 && col("doc_id") % 3 === 0)))
     spark.catalog.clearCache()
-    val b = CorpusPipeline.kneserNeyTrigramSurprisal(docs, col("doc_id") === 0, hashKeys = true)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    spark.catalog.clearCache()
-    assert(a == b)
+    assert(got == expected)
+    (1 to 5).foreach(l => assert(expected.exists(_.productElement(1 + l) != 0L),
+      s"level $l never reached"))
   }
 
   test("C115: generic order-n at n = 3 reproduces the trigram operator bit-for-bit") {
@@ -135,19 +182,16 @@ class KneserNeySpec extends SparkSpec {
       (0L, "a b a b c a b d"), (1L, "a b c x"), (2L, "b c d e f"),
       (3L, "x y z"), (4L, "a b a b a b"))
       .toDF("doc_id", "text")
-    for (hashed <- Seq(false, true)) {
-      val tri = CorpusPipeline
-        .kneserNeyTrigramSurprisal(docs, col("doc_id") === 0, hashKeys = hashed)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      val gen = CorpusPipeline
-        .kneserNeyNgramSurprisal(docs, col("doc_id") === 0, order = 3,
-          hashKeys = hashed)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-      spark.catalog.clearCache()
-      // same column POSITIONS: (id, n, hit, cont, bo2/umid, unig/ubw,
-      // oov, p_sum, mean) — names are generic vs C110-specific
-      assert(tri == gen, s"hashKeys=$hashed")
-    }
+    val tri = CorpusPipeline
+      .kneserNeyTrigramSurprisal(docs, col("doc_id") === 0)
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val gen = CorpusPipeline
+      .kneserNeyNgramSurprisal(docs, col("doc_id") === 0, order = 3)
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    spark.catalog.clearCache()
+    // same column POSITIONS: (id, n, hit, cont, bo2/umid, unig/ubw,
+    // oov, p_sum, mean) — names are generic vs C110-specific
+    assert(tri == gen)
   }
 
   test("C115: 5-gram ladder, every backoff rung hand-computed") {
@@ -162,8 +206,7 @@ class KneserNeySpec extends SparkSpec {
       (5L, "q r s t e"))  // only unigram continuation of "e" → lvl 6
       .toDF("doc_id", "text")
     val out = CorpusPipeline
-      .kneserNeyNgramSurprisal(docs, col("doc_id") === 0, order = 5,
-        hashKeys = false)
+      .kneserNeyNgramSurprisal(docs, col("doc_id") === 0, order = 5)
       .orderBy("doc_id")
       .select("doc_id", "n_ngrams", "n_hit", "n_cont", "n_bo4", "n_bo3",
         "n_bo2", "n_unig", "n_oov", "p_sum_ppm")
@@ -204,7 +247,7 @@ class KneserNeySpec extends SparkSpec {
       vocab.zipWithIndex.map { case (w, i) => (10L + i, s"a b c d $w") }
     val out = CorpusPipeline
       .kneserNeyNgramSurprisal(docs.toDF("doc_id", "text"),
-        col("doc_id") === 0, order = 5, hashKeys = false)
+        col("doc_id") === 0, order = 5)
       .filter(col("doc_id") >= 10)
       .select("p_sum_ppm").collect().map(_.getLong(0))
     spark.catalog.clearCache()

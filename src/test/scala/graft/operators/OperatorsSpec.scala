@@ -647,22 +647,20 @@ class OperatorsSpec extends SparkSpec {
     assert(out == Seq("a b c", "b c d"))
   }
 
-  test("C91 containmentPairs: planted excerpt hits 10^6 containment, hash/string key parity") {
+  test("C91 containmentPairs: planted excerpt hits 10^6 containment") {
     val long = (1 to 40).map(i => s"w$i").mkString(" ")    // 36 distinct 5-shingles
     val excerpt = (1 to 10).map(i => s"w$i").mkString(" ") // prefix: 6 shingles, all in long
     val other = (100 to 140).map(i => s"x$i").mkString(" ")
     val tiny = "a b c"                                     // < 5 tokens: gated out
     val dd = Seq((1L, long), (2L, excerpt), (3L, other), (4L, tiny))
       .toDF("doc_id", "text")
-    val out = Dedup.containmentPairs(dd, hashKeys = false).collect()
+    val out = Dedup.containmentPairs(dd).collect()
     assert(out.length == 1)
     val r = out.head
     assert((r.getLong(0), r.getLong(1)) == ((1L, 2L)))
     assert(r.getLong(2) == 6L && r.getLong(3) == 36L && r.getLong(4) == 6L)
     assert(r.getLong(5) == 6L * 1000000L / 36L, "containment is asymmetric")
     assert(r.getLong(6) == 1000000L, "excerpt fully contained")
-    val hashed = Dedup.containmentPairs(dd, hashKeys = true).collect()
-    assert(hashed.map(_.toSeq).toSet == out.map(_.toSeq).toSet, "hash-key parity")
   }
 
   test("C91 containmentPairs: df-capped boilerplate shingles only lower intersections") {
@@ -672,14 +670,12 @@ class OperatorsSpec extends SparkSpec {
       (1L, s"alpha beta gamma delta epsilon $boiler"),
       (2L, s"$boiler zeta eta theta iota kappa"),
       (3L, s"$boiler lambda mu nu xi omicron")).toDF("doc_id", "text")
-    val capped = Dedup.containmentPairs(dd, dfCap = 2, minContainPpm = 1L,
-      hashKeys = false).collect()
+    val capped = Dedup.containmentPairs(dd, dfCap = 2, minContainPpm = 1L).collect()
     // the only shared shingles are boiler-spanning; with the pure
     // boiler 5-gram dropped, cross-doc windows (unique per doc pair
     // boundary) still overlap only where text genuinely runs through
     // the boilerplate — intersections can only shrink vs uncapped
-    val uncapped = Dedup.containmentPairs(dd, dfCap = 50, minContainPpm = 1L,
-      hashKeys = false).collect()
+    val uncapped = Dedup.containmentPairs(dd, dfCap = 50, minContainPpm = 1L).collect()
     val cMap = capped.map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     uncapped.foreach { r =>
       val k = (r.getLong(0), r.getLong(1))

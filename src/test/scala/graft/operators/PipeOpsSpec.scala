@@ -137,16 +137,22 @@ class PipeOpsSpec extends SparkSpec {
       ("s1", "a b c d e f g h i j"),          // full duplicate of s0's doc
       ("s1", "z y x w v u t s r q"),
       ("s2", "one two three four five six seven eight nine ten")
-    ).toDF("source", "text")
-    val exact = CorpusPipeline.dupGramStats(docs, n = 8, hashKeys = false)
-      .orderBy("source").collect().map(_.toSeq)
-    val hashed = CorpusPipeline.dupGramStats(docs, n = 8, hashKeys = true)
-      .orderBy("source").collect().map(_.toSeq)
-    assert(exact.toSeq == hashed.toSeq)
+    )
+    // brute force over the gram strings: instances, instances minus the
+    // source's corpus-unique grams, distinct grams
+    val grams = docs.map { case (src, t) => src -> t.split(" ").toSeq.sliding(8)
+      .map(_.mkString(" ")).toSeq }
+    val corpusCount = grams.flatMap(_._2).groupBy(identity).map { case (g, v) => g -> v.size }
+    val expected = grams.groupBy(_._1).toSeq.sortBy(_._1).map { case (src, ds) =>
+      val gs = ds.flatMap(_._2)
+      (src, gs.size.toLong, gs.count(corpusCount(_) > 1).toLong, gs.distinct.size.toLong)
+    }
+    val got = CorpusPipeline.dupGramStats(docs.toDF("source", "text"), n = 8)
+      .orderBy("source").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got == expected)
     // the duplicated doc's grams count as dup mass in both sources
-    val bySrc = CorpusPipeline.dupGramStats(docs, n = 8, hashKeys = false)
-      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-    assert(bySrc("s0") == 3L && bySrc("s2") == 0L)
+    assert(got.map(r => r._1 -> r._3).toMap == Map("s0" -> 3L, "s1" -> 3L, "s2" -> 0L))
   }
 
   test("C22 dupGramStats: >62 sources routes to the general fallback with identical output") {
@@ -157,7 +163,7 @@ class PipeOpsSpec extends SparkSpec {
           ("src1", "dup dup2 dup3 dup4 dup5 dup6 dup7 dup8"))
     val docs = rows.toDF("source", "text")
     try {
-      val out = CorpusPipeline.dupGramStats(docs, n = 8, hashKeys = false)
+      val out = CorpusPipeline.dupGramStats(docs, n = 8)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
       assert(out.size == 70)
       // src0: unique doc has 2 grams (9 tokens, n=8), dup doc has 1 gram
@@ -167,7 +173,7 @@ class PipeOpsSpec extends SparkSpec {
       // the bitmask path on the SAME ≤62-source subset agrees with the
       // fallback's numbers (cross-implementation consistency)
       val small = rows.filter { case (s, _) => s.stripPrefix("src").toInt < 10 }
-      val a = CorpusPipeline.dupGramStats(small.toDF("source", "text"), n = 8, hashKeys = false)
+      val a = CorpusPipeline.dupGramStats(small.toDF("source", "text"), n = 8)
         .orderBy("source").collect().map(_.toSeq).toSeq
       assert(a.find(_.head == "src0").get == Seq("src0", 3L, 1L, 3L))
     } finally spark.catalog.clearCache() // the fallback persists its count table
@@ -198,13 +204,20 @@ class PipeOpsSpec extends SparkSpec {
   }
 
   test("C35 lmSurprisal: hashed token keys give the same scores as strings") {
-    val docs = (1L to 80L).map(i =>
-      (i, s"word$i the of ${"common " * (i % 5).toInt}tail${i % 7}")).toDF("doc_id", "text")
-    val h = CorpusPipeline.lmSurprisal(docs, hashKeys = true)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    val s = CorpusPipeline.lmSurprisal(docs, hashKeys = false)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    assert(h.toSeq == s.toSeq)
+    val rows = (1L to 80L).map(i =>
+      (i, s"word$i the of ${"common " * (i % 5).toInt}tail${i % 7}"))
+    // brute force over the token strings: total div count(w) per token
+    val toks = rows.map { case (id, t) => id -> t.trim.split("\\s+").toSeq }
+    val c = toks.flatMap(_._2).groupBy(identity).map { case (w, v) => w -> v.size.toLong }
+    val tot = c.values.sum
+    val expected = toks.map { case (id, ts) =>
+      val s = ts.map(tot / c(_)).sum
+      (id, ts.size.toLong, s, s / ts.size)
+    }
+    val got = CorpusPipeline.lmSurprisal(rows.toDF("doc_id", "text"))
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got == expected)
   }
 
   test("C36 bm25TopK matches a brute-force integer BM25 and ranks tf/dl correctly") {

@@ -32,7 +32,7 @@ class StupidBackoffSpec extends SparkSpec {
     val docs = Seq(train, (1L, "a b c x"), (2L, "x b c a"), (3L, "x y c z c"))
       .toDF("doc_id", "text")
     val out = CorpusPipeline
-      .stupidBackoffSurprisal(docs, col("doc_id") === 0, hashKeys = false)
+      .stupidBackoffSurprisal(docs, col("doc_id") === 0)
       .orderBy("doc_id")
       .select("doc_id", "n_trigrams", "n_hit", "n_bo", "n_uni", "n_oov",
         "surprisal_sum", "rarity")
@@ -53,22 +53,11 @@ class StupidBackoffSpec extends SparkSpec {
   test("empty train slice degrades to all-OOV with surprisal 0, not null") {
     val docs = Seq((1L, "a b c d")).toDF("doc_id", "text")
     val out = CorpusPipeline
-      .stupidBackoffSurprisal(docs, lit(false), hashKeys = false)
+      .stupidBackoffSurprisal(docs, lit(false))
       .collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[Long]("n_oov") == 2L && r.getAs[Long]("surprisal_sum") == 0L)
     spark.catalog.clearCache()
-  }
-
-  test("hashed and string keys agree") {
-    val docs = Seq(train, (1L, "a b c x"), (2L, "x b c a")).toDF("doc_id", "text")
-    val a = CorpusPipeline.stupidBackoffSurprisal(docs, col("doc_id") === 0, hashKeys = false)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    spark.catalog.clearCache()
-    val b = CorpusPipeline.stupidBackoffSurprisal(docs, col("doc_id") === 0, hashKeys = true)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    spark.catalog.clearCache()
-    assert(a == b)
   }
 }
