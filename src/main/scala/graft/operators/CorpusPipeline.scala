@@ -915,15 +915,15 @@ object CorpusPipeline {
    * trigram instance contributes its context bigram, its final bigram
    * and its final unigram — the marginals then sum exactly).
    *
-   * Scale shape: one combining aggregate to the per-(doc, trigram)
-   * count table `dtf` (the [[invertedIndex]] tf device), persisted and
-   * pinned because the three LM marginals AND the scoring join all
-   * consume it — without the pin each consumer re-runs the explode.
-   * LM tables are gram-vocabulary-bounded; the scoring pass is three
-   * LEFT joins on 8-byte hashed keys plus one broadcast one-row
-   * total, then a doc-keyed combining aggregate. No driver state, no
-   * global sort. Output per doc: n_trigrams, level counts
-   * (n_hit/n_bo/n_uni/n_oov), surprisal_sum, rarity (= sum div n).
+   * Scale shape: the per-(doc, trigram) count table `dtf` is
+   * [[gramTable]] at n = 3 (the instance table every KN order reads
+   * too), persisted and pinned because the three LM marginals AND the
+   * scoring join all consume it. LM tables are gram-vocabulary-
+   * bounded; the scoring pass is three LEFT joins on 8-byte hashed
+   * keys plus one broadcast one-row total, then a doc-keyed combining
+   * aggregate. No driver state, no global sort. Output per doc:
+   * n_trigrams, level counts (n_hit/n_bo/n_uni/n_oov), surprisal_sum,
+   * rarity (= sum div n).
    * The cached dtf outlives this call — clearCache() between corpora.
    */
   def stupidBackoffSurprisal(
@@ -931,36 +931,10 @@ object CorpusPipeline {
       trainFilter: Column,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    // WordShingles emits one whole-doc shingle when tokens < n (the
-    // q_c22 contract); gate docs without a true trigram first
-    val inst = docs
-      .filter(size(TF.tokens(col(textCol))) >= 3)
-      .select(col(idCol), trainFilter.as("__train"),
-        explode(TF.shingles(col(textCol), 3)).as("tri"))
-    // ONE combining aggregate to per-(doc, trigram) counts, on the
-    // SLIMMEST instance rows (the dominant shuffle of the whole
-    // operator): an 8-byte xxhash64 keys the exchange and
-    // the trigram string rides once as a combined first(); the
-    // context/backoff/unigram keys derive AFTER aggregation, over
-    // ≤ instance-count rows — deriving them per instance doubled the
-    // instance bytes for nothing (measured at the ×100 tier)
-    val base = inst.groupBy(col(idCol), xxhash64(col("tri")).as("__tk"))
-      .agg(first(col("tri")).as("tri0"),
-        first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
-    val derived = base.select(col(idCol), col("__train"), col("cnt"),
-      col("tri0"),
-      substring_index(col("tri0"), " ", 2).as("ctx0"),
-      substring_index(col("tri0"), " ", -2).as("bo0"),
-      substring_index(substring_index(col("tri0"), " ", -2), " ", 1).as("w20"),
-      substring_index(col("tri0"), " ", -1).as("w30"))
-    // dtf feeds the LM marginals AND the scoring join (persist+pin:
-    // the df⋈agg(df) rule)
-    val dtf = derived.select(col(idCol), col("__train"), col("cnt"),
-        xxhash64(col("tri0")).as("tri"), xxhash64(col("ctx0")).as("ctx2"),
-        xxhash64(col("bo0")).as("bo"), xxhash64(col("w20")).as("w2"),
-        xxhash64(col("w30")).as("w3"))
-      .transform(Scoped.persistTracked)
-    dtf.count() // pin before the concurrent consumers (sourceDivergence note)
+    val dtf = gramTable(docs, trainFilter, 3, idCol, textCol)
+      .select(col(idCol), col("__train"), col("cnt"), col("g").as("tri"),
+        col("ctop").as("ctx2"), col("s2").as("bo"), col("c2").as("w2"),
+        col("s1").as("w3"))
     val train = dtf.filter(col("__train"))
     // LM tables, all off the train trigram stream; marginals sum exactly
     val t3 = train.groupBy("tri")
@@ -999,257 +973,33 @@ object CorpusPipeline {
   }
 
   /**
-   * C101: interpolated Kneser–Ney bigram scoring — the smoothing the
-   * n-gram LM literature actually ships (Stupid Backoff trades it away
-   * for distributability; KN's absolute discount + continuation
-   * probability is what CCNet-class perplexity filters are built on).
-   * Every quantity is integer-exact with discount D = 3/4 so the ppm
-   * probabilities hash-match the DuckDB replay:
+   * The per-(doc, n-gram) instance table every n-gram LM here reads
+   * ([[stupidBackoffSurprisal]] at n = 3, [[kneserNeyNgramSurprisal]]
+   * at every order): one row per (doc, distinct n-gram) carrying the
+   * doc's `__train` flag, the instance count `cnt` and 8-byte xxhash64
+   * keys — `g` (the gram), `ctop` (its (n−1)-token prefix), `s{m}` for
+   * m = n−1..1 (its m-token suffix) and `c{m}` for m = n−1..2 (the
+   * (m−1)-token prefix of s{m}, the order-m context). Docs shorter
+   * than n tokens are gated out first: WordShingles emits one whole-
+   * doc shingle when tokens < n (the q_c22 contract).
    *
-   *   p(w2|w1) = max(c12 − D, 0)/c1 + D·N1+(w1,·)/c1 · N1+(·,w2)/T
-   *
-   * scaled ×4 into `max(4·c12−3,0)·250000 div c1` plus
-   * `((3·n1fw·250000) div c1)·n1bw div T` (two separately-rounded
-   * terms: a single common denominator would overflow Long at corpus
-   * scale — term1 ≤ 1e6·c12, term2's first div is ≤ 750000 before the
-   * n1bw product). An unseen-context instance falls back to the pure
-   * continuation probability `n1bw·1000000 div T`; an unseen w2 scores
-   * 0. Levels: 1 = bigram hit, 2 = discounted continuation under a
-   * seen context, 3 = unseen context / seen w2, 4 = OOV w2.
-   *
-   * Plan shape mirrors [[stupidBackoffSurprisal]] (the C84 slim-
-   * instance rule): ONE combining aggregate to per-(doc, bigram)
-   * counts keys the dominant shuffle; w1/w2 derive AFTER aggregation;
-   * the LM marginals (c1/n1fw per context, n1bw per continuation, T
-   * distinct types) are bounded combining aggregates off the persisted
-   * instance table; scoring is three left equi-joins on LM keys.
+   * ONE combining aggregate on the SLIMMEST instance rows keys the
+   * dominant shuffle of every LM: the exchange is keyed by the gram's
+   * xxhash64 and the gram string rides once as a combined first(); the
+   * suffix/context keys derive AFTER aggregation, over ≤ instance-count
+   * rows — deriving them per instance doubled the instance bytes for
+   * nothing (measured at the ×100 tier). The table is persisted and
+   * pinned because the LM marginals AND the scoring join all consume
+   * it (the df⋈agg(df) rule) — without the pin each consumer re-runs
+   * the explode. The cached table outlives the caller: clearCache()
+   * between corpora, or scope the call with [[Scoped.withCached]].
    */
-  def kneserNeyBigramSurprisal(
+  private def gramTable(
       docs: DataFrame,
       trainFilter: Column,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val inst = docs
-      .filter(size(TF.tokens(col(textCol))) >= 2)
-      .select(col(idCol), trainFilter.as("__train"),
-        explode(TF.shingles(col(textCol), 2)).as("bi"))
-    val base = inst.groupBy(col(idCol), xxhash64(col("bi")).as("__bk"))
-      .agg(first(col("bi")).as("bi0"),
-        first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
-    val derived = base.select(col(idCol), col("__train"), col("cnt"),
-      col("bi0"),
-      substring_index(col("bi0"), " ", 1).as("w10"),
-      substring_index(col("bi0"), " ", -1).as("w20"))
-    val dtf = derived.select(col(idCol), col("__train"), col("cnt"),
-        xxhash64(col("bi0")).as("bi"), xxhash64(col("w10")).as("w1"),
-        xxhash64(col("w20")).as("w2"))
-      .transform(Scoped.persistTracked)
-    dtf.count() // pin before the concurrent consumers (sourceDivergence note)
-    val train = dtf.filter(col("__train"))
-    val tb = train.groupBy("bi")
-      .agg(first(col("w1")).as("w1"), first(col("w2")).as("w2"),
-        sum(col("cnt")).as("c12"))
-      .transform(Scoped.persistTracked)
-    tb.count() // four consumers race inside the final action
-    val tc1 = tb.groupBy("w1")
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1fw"))
-    val tbw = tb.groupBy("w2").agg(count(lit(1)).as("n1bw"))
-    // T = distinct train bigram types; empty train degrades to all-OOV
-    // p=0 via greatest(T, 1), defined not null
-    val tot = tb.agg(count(lit(1)).as("bigT"))
-    dtf.select(col(idCol), col("bi"), col("w1"), col("w2"), col("cnt"))
-      .join(tb.select(col("bi"), col("c12")), Seq("bi"), "left")
-      .join(tc1, Seq("w1"), "left")
-      .join(tbw, Seq("w2"), "left")
-      .crossJoin(broadcast(tot))
-      .select(col(idCol), col("cnt"),
-        when(col("c12").isNotNull, 1)
-          .when(col("c1").isNotNull && col("n1bw").isNotNull, 2)
-          .when(col("n1bw").isNotNull, 3).otherwise(4).as("lvl"),
-        when(col("c1").isNotNull,
-          expr("(greatest(4 * coalesce(c12, 0L) - 3, 0L) * 250000) div c1" +
-            " + ((3 * n1fw * 250000) div c1) * coalesce(n1bw, 0L)" +
-            " div greatest(bigT, 1L)"))
-          .otherwise(expr(
-            "coalesce(n1bw, 0L) * 1000000 div greatest(bigT, 1L)"))
-          .as("p_ppm"))
-      .groupBy(col(idCol))
-      .agg(
-        sum(col("cnt")).as("n_bigrams"),
-        sum(when(col("lvl") === 1, col("cnt")).otherwise(0L)).as("n_hit"),
-        sum(when(col("lvl") === 2, col("cnt")).otherwise(0L)).as("n_cont"),
-        sum(when(col("lvl") === 3, col("cnt")).otherwise(0L)).as("n_uctx"),
-        sum(when(col("lvl") === 4, col("cnt")).otherwise(0L)).as("n_oov"),
-        sum(col("p_ppm") * col("cnt")).as("p_sum_ppm"))
-      .withColumn("mean_p_ppm", expr("p_sum_ppm div n_bigrams"))
-  }
-
-  /**
-   * C110: interpolated Kneser–Ney TRIGRAM scoring — one order up from
-   * [[kneserNeyBigramSurprisal]], the shape the CCNet reference filter
-   * actually ships (Wenzek 2020 uses a 5-gram KN; the recursion is
-   * identical at every order, so the trigram step is the general
-   * case). Chen–Goodman interpolated KN with absolute discount
-   * D = 3/4 at every level; lower orders use CONTINUATION counts
-   * (distinct-context types from the train trigram-type table), not
-   * raw counts:
-   *
-   *   p(w3|w1w2) = max(c123−D,0)/c12 + D·N1+(w1w2,·)/c12 · p(w3|w2)
-   *   p(w3|w2)   = max(nbi−D,0)/nmid + D·N1+(w2,·)/nmid · p(w3)
-   *   p(w3)      = N1+(·,w3)/T
-   *
-   * where nbi = N1+(·,w2w3) (distinct w1 per (w2,w3) type),
-   * nmid = Σ_w3 nbi (trigram types with middle w2), and T = distinct
-   * (w2,w3) types. Expanded, p is THREE separately-rounded integer
-   * terms (the C101 two-term device, one order deeper — a common
-   * denominator would overflow Long at corpus scale; every
-   * intermediate here is ≤ 750000·3·vocab < 2⁶³):
-   *
-   *   term1 = (4·c123−3)⁺·250000 div c12
-   *   term2 = ((3·n1fw12·250000) div c12) · (4·nbi−3)⁺ div (4·nmid)
-   *   term3 = ((((3·n1fw12·250000) div c12)·(3·n1fw2)) div (4·nmid))
-   *             · n1bw div T
-   *
-   * Backoff ladder (a seen (w1,w2) context implies w2 is a seen
-   * middle token, so nmid/n1fw2 are always defined inside level ≤ 2):
-   * 1 = trigram hit, 2 = seen context (discounted continuation),
-   * 3 = unseen context / seen middle (pure bigram-continuation
-   * model), 4 = unseen middle / seen w3 (unigram continuation),
-   * 5 = OOV w3 (p = 0). Empty train degrades to all-OOV p = 0.
-   *
-   * Plan shape is the C84/C101 slim-instance rule verbatim: ONE
-   * combining aggregate to per-(doc, trigram) counts keys the
-   * dominant shuffle (8-byte xxhash64 keys); ctx/bo/w2/w3
-   * derive AFTER aggregation; the trigram-TYPE table persists once
-   * and feeds all marginals; scoring is five LEFT equi-joins on
-   * vocabulary-bounded LM tables plus one broadcast total.
-   */
-  def kneserNeyTrigramSurprisal(
-      docs: DataFrame,
-      trainFilter: Column,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val inst = docs
-      .filter(size(TF.tokens(col(textCol))) >= 3)
-      .select(col(idCol), trainFilter.as("__train"),
-        explode(TF.shingles(col(textCol), 3)).as("tri"))
-    val base = inst.groupBy(col(idCol), xxhash64(col("tri")).as("__tk"))
-      .agg(first(col("tri")).as("tri0"),
-        first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
-    val derived = base.select(col(idCol), col("__train"), col("cnt"),
-      col("tri0"),
-      substring_index(col("tri0"), " ", 2).as("ctx0"),
-      substring_index(col("tri0"), " ", -2).as("bo0"),
-      substring_index(substring_index(col("tri0"), " ", -2), " ", 1).as("w20"),
-      substring_index(col("tri0"), " ", -1).as("w30"))
-    val dtf = derived.select(col(idCol), col("__train"), col("cnt"),
-        xxhash64(col("tri0")).as("tri"), xxhash64(col("ctx0")).as("ctx2"),
-        xxhash64(col("bo0")).as("bo"), xxhash64(col("w20")).as("w2"),
-        xxhash64(col("w30")).as("w3"))
-      .transform(Scoped.persistTracked)
-    dtf.count() // pin before the concurrent consumers (sourceDivergence note)
-    val train = dtf.filter(col("__train"))
-    // trigram TYPE table: every marginal AND the scoring join read it
-    val tt = train.groupBy("tri")
-      .agg(first(col("ctx2")).as("ctx2"), first(col("bo")).as("bo"),
-        first(col("w2")).as("w2"), first(col("w3")).as("w3"),
-        sum(col("cnt")).as("c123"))
-      .transform(Scoped.persistTracked)
-    tt.count()
-    val tctx = tt.groupBy("ctx2")
-      .agg(sum(col("c123")).as("c12"), count(lit(1)).as("n1fw12"))
-    // (w2,w3) continuation types: nbi = distinct w1 (types are unique)
-    val tbi = tt.groupBy("bo")
-      .agg(first(col("w2")).as("w2"), first(col("w3")).as("w3"),
-        count(lit(1)).as("nbi"))
-      .transform(Scoped.persistTracked)
-    tbi.count() // feeds tmid, tbw, tot AND the scoring join
-    val tmid = tbi.groupBy("w2")
-      .agg(sum(col("nbi")).as("nmid"), count(lit(1)).as("n1fw2"))
-    val tbw = tbi.groupBy("w3").agg(count(lit(1)).as("n1bw"))
-    val tot = tbi.agg(count(lit(1)).as("bigT"))
-    dtf.select(col(idCol), col("tri"), col("ctx2"), col("bo"), col("w2"),
-        col("w3"), col("cnt"))
-      .join(tt.select(col("tri"), col("c123")), Seq("tri"), "left")
-      .join(tctx, Seq("ctx2"), "left")
-      .join(tbi.select(col("bo"), col("nbi")), Seq("bo"), "left")
-      .join(tmid, Seq("w2"), "left")
-      .join(tbw, Seq("w3"), "left")
-      .crossJoin(broadcast(tot))
-      .select(col(idCol), col("cnt"),
-        when(col("c123").isNotNull, 1)
-          .when(col("c12").isNotNull, 2)
-          .when(col("nmid").isNotNull, 3)
-          .when(col("n1bw").isNotNull, 4)
-          .otherwise(5).as("lvl"),
-        when(col("c12").isNotNull, expr(
-          "(greatest(4 * coalesce(c123, 0L) - 3, 0L) * 250000) div c12" +
-            " + ((3 * n1fw12 * 250000) div c12)" +
-            " * greatest(4 * coalesce(nbi, 0L) - 3, 0L) div (4 * nmid)" +
-            " + ((((3 * n1fw12 * 250000) div c12) * (3 * n1fw2))" +
-            " div (4 * nmid)) * coalesce(n1bw, 0L)" +
-            " div greatest(bigT, 1L)"))
-          .when(col("nmid").isNotNull, expr(
-            "(greatest(4 * coalesce(nbi, 0L) - 3, 0L) * 250000) div nmid" +
-              " + ((3 * n1fw2 * 250000) div nmid) * coalesce(n1bw, 0L)" +
-              " div greatest(bigT, 1L)"))
-          .otherwise(expr(
-            "coalesce(n1bw, 0L) * 1000000 div greatest(bigT, 1L)"))
-          .as("p_ppm"))
-      .groupBy(col(idCol))
-      .agg(
-        sum(col("cnt")).as("n_trigrams"),
-        sum(when(col("lvl") === 1, col("cnt")).otherwise(0L)).as("n_hit"),
-        sum(when(col("lvl") === 2, col("cnt")).otherwise(0L)).as("n_cont"),
-        sum(when(col("lvl") === 3, col("cnt")).otherwise(0L)).as("n_umid"),
-        sum(when(col("lvl") === 4, col("cnt")).otherwise(0L)).as("n_ubw"),
-        sum(when(col("lvl") === 5, col("cnt")).otherwise(0L)).as("n_oov"),
-        sum(col("p_ppm") * col("cnt")).as("p_sum_ppm"))
-      .withColumn("mean_p_ppm", expr("p_sum_ppm div n_trigrams"))
-  }
-
-  /**
-   * C115: interpolated Kneser–Ney at ARBITRARY order n — the
-   * generalization [[kneserNeyTrigramSurprisal]]'s scaladoc promises
-   * ("the recursion is identical at every order"); order = 5 is the
-   * Wenzek 2020 CCNet reference configuration. Chen–Goodman
-   * interpolated KN with absolute discount D = 3/4 at every level;
-   * the top order uses raw counts, every lower order uses
-   * CONTINUATION counts derived by the suffix-type chain
-   * t_n → t_{n−1} → … → t_1 (t_m = distinct m-token suffixes of
-   * t_{m+1}'s keys, counted — N1+(·s) over corpus n-gram interiors,
-   * the C110 construction applied recursively). p is n separately-
-   * rounded integer ppm terms (the C101/C110 device at depth n): the
-   * top term plus, per continuation order m, term = W·(4·n_m−3)⁺ div
-   * (4·den_m) with the carried backoff weight W ← (W·3·N1_m) div
-   * (4·den_m), and a final unigram-continuation term W·n1 div T. A
-   * seen context at order m implies a seen context at every order
-   * below (suffix closure), so each when-arm's ladder is
-   * division-safe. Backoff levels: 1 = n-gram hit, 2 = seen top
-   * context, 2+k = longest seen context is order n−1−k+1 (start the
-   * ladder there at weight 10⁶), n+1 = unigram continuation only,
-   * n+2 = OOV (p = 0). Overflow contract: every intermediate is
-   * ≤ 10⁶·3·max(vocab, corpus) < 2⁶³.
-   *
-   * Plan shape is the C84/C101/C110 slim-instance rule at order n:
-   * ONE combining per-(doc, n-gram) aggregate keys the dominant
-   * shuffle (8-byte xxhash64 keys); the 2n−2 derived
-   * suffix/context keys are computed AFTER aggregation from the gram
-   * string; the type chain is n−1 vocab-bounded aggregates (each
-   * persisted once — every link feeds its context marginal, the next
-   * link, and the scoring join); scoring is 2n−1 LEFT equi-joins on
-   * vocab-bounded LM tables plus one broadcast total. Output mirrors
-   * C110 with generic level names (n_bo{m} = ladder started at
-   * continuation order m).
-   */
-  def kneserNeyNgramSurprisal(
-      docs: DataFrame,
-      trainFilter: Column,
-      order: Int,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    require(order >= 3, "order must be >= 3 (use kneserNeyBigramSurprisal for n = 2)")
-    val n = order
+      n: Int,
+      idCol: String,
+      textCol: String): DataFrame = {
     val inst = docs
       .filter(size(TF.tokens(col(textCol))) >= n)
       .select(col(idCol), trainFilter.as("__train"),
@@ -1257,8 +1007,6 @@ object CorpusPipeline {
     val base = inst.groupBy(col(idCol), xxhash64(col("g0")).as("__gk"))
       .agg(first(col("g0")).as("g0"),
         first(col("__train")).as("__train"), count(lit(1)).as("cnt"))
-    // derived keys AFTER the combining aggregate (C84 rule): m-token
-    // suffix s_m and its (m−1)-token prefix c_m = the order-m context
     def suffix(k: Int): Column = substring_index(col("g0"), " ", -k)
     def ctxOf(m: Int): Column = substring_index(suffix(m), " ", m - 1)
     val keyCols: Seq[(String, Column)] =
@@ -1269,39 +1017,115 @@ object CorpusPipeline {
         keyCols.map { case (nm, c) => xxhash64(c).as(nm) }: _*)
       .transform(Scoped.persistTracked)
     dtf.count() // pin before the concurrent consumers (sourceDivergence note)
+    dtf
+  }
+
+  /**
+   * C101/C110/C115: interpolated Kneser–Ney scoring at any order n ≥ 2
+   * — the smoothing the n-gram LM literature actually ships (Stupid
+   * Backoff trades it away for distributability; KN's absolute
+   * discount plus continuation probability is what CCNet-class
+   * perplexity filters are built on). q_c101 runs order 2, q_c110
+   * order 3 and q_c115 order 5, the Wenzek 2020 CCNet reference
+   * configuration. Chen–Goodman interpolated KN with discount D = 3/4
+   * at every level; the top order uses raw counts, every lower order
+   * CONTINUATION counts (distinct left extensions), not raw counts:
+   *
+   *   n = 2:  p(w2|w1)   = max(c12−D,0)/c1 + D·N1+(w1,·)/c1 · N1+(·,w2)/T
+   *   n = 3:  p(w3|w1w2) = max(c123−D,0)/c12 + D·N1+(w1w2,·)/c12 · p(w3|w2)
+   *           p(w3|w2)   = max(nbi−D,0)/nmid + D·N1+(w2,·)/nmid · p(w3)
+   *           p(w3)      = N1+(·,w3)/T
+   *
+   * where nbi = N1+(·,w2w3), nmid = Σ_w3 nbi and T = distinct bigram
+   * types. Higher orders recurse the same way through the suffix-type
+   * chain t_n → t_{n−1} → … → t_1: t_n is the train n-gram type
+   * table, t_m the distinct m-token suffixes of t_{m+1}'s keys,
+   * counted (N1+(·s)), so t_m gives order m its continuation counts
+   * and T = |t_2| (the train bigram types themselves at n = 2).
+   *
+   * Every quantity is integer ppm, so the probabilities hash-match the
+   * DuckDB replay. p is n separately-rounded terms (a common
+   * denominator would overflow Long at corpus scale): the top term
+   * (4·c−3)⁺·250000 div cden; per continuation order m, the term
+   * W·(4·n_m−3)⁺ div (4·d_m) with the carried backoff weight
+   * W ← (W·3·f_m) div (4·d_m), starting at W = (3·N1+(ctx,·)·250000)
+   * div cden; and a final unigram-continuation term W·n1 div T. At
+   * n = 2 that is
+   *
+   *   (4·c12−3)⁺·250000 div c1 + ((3·n1fw·250000) div c1)·n1bw div T
+   *
+   * and at n = 3
+   *
+   *   term1 = (4·c123−3)⁺·250000 div c12
+   *   term2 = ((3·n1fw12·250000) div c12) · (4·nbi−3)⁺ div (4·nmid)
+   *   term3 = ((((3·n1fw12·250000) div c12)·(3·n1fw2)) div (4·nmid))
+   *             · n1bw div T
+   *
+   * A seen context at order m implies a seen context at every order
+   * below (suffix closure), so each when-arm's ladder is division-
+   * safe. Overflow contract: every intermediate is
+   * ≤ 10⁶·3·max(vocab, corpus) < 2⁶³.
+   *
+   * Backoff levels: 1 = n-gram hit, 2 = seen top context (discounted
+   * continuation), 2+k = longest seen context is order n−k (the ladder
+   * starts there at weight 10⁶), n+1 = unigram continuation only
+   * (p = n1·10⁶ div T), n+2 = OOV (p = 0). One rule depends on the
+   * order: at n = 2 the level-2 arm also requires a seen final token,
+   * so a seen context followed by an OOV token is level 4 (the C101
+   * contract), while at n ≥ 3 it stays level 2 (the C110/C115
+   * contract); p is 0 under both. Empty train degrades to all-OOV
+   * p = 0.
+   *
+   * Plan shape: the instance table is [[gramTable]] (shared with
+   * [[stupidBackoffSurprisal]]); t_n and every link t_m with m ≥ 2
+   * persist once (each feeds its context marginal, the next link and
+   * the scoring join); scoring is 2n−1 LEFT equi-joins on
+   * vocab-bounded LM tables plus one broadcast total. Output per doc:
+   * n_ngrams, the level counts n_hit, n_cont, n_bo{m} for
+   * m = n−1..2 (ladder started at continuation order m), n_unig and
+   * n_oov, then p_sum_ppm and mean_p_ppm (= p_sum_ppm div n_ngrams).
+   * Docs shorter than n tokens produce no row.
+   */
+  def kneserNeyNgramSurprisal(
+      docs: DataFrame,
+      trainFilter: Column,
+      order: Int,
+      idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame = {
+    require(order >= 2, "order must be >= 2")
+    val n = order
+    val dtf = gramTable(docs, trainFilter, n, idCol, textCol)
+    val keys = dtf.columns.toSeq.filterNot(Set(idCol, "__train", "cnt"))
     val train = dtf.filter(col("__train"))
     // n-gram TYPE table, carrying every downstream key once
-    val carryTop = keyCols.map(_._1).filterNot(_ == "g")
     val tt = train.groupBy("g")
       .agg(sum(col("cnt")).as("cn"),
-        carryTop.map(nm => first(col(nm)).as(nm)): _*)
+        keys.filterNot(_ == "g").map(nm => first(col(nm)).as(nm)): _*)
       .transform(Scoped.persistTracked)
     tt.count()
     val tctxTop = tt.groupBy("ctop")
       .agg(sum(col("cn")).as("cden"), count(lit(1)).as("cn1"))
-    // suffix-type chain: t_m keyed s_m with continuation count n_m,
-    // carrying c_m (its marginal key) and the tail keys it passes down
-    val tTables = scala.collection.mutable.Map.empty[Int, DataFrame]
+    // suffix-type chain from its top link t_n = tt: t_m keyed s_m with
+    // continuation count n_m, carrying c_m (its marginal key) and the
+    // tail keys it passes down
+    val tTables = scala.collection.mutable.Map[Int, DataFrame](n -> tt)
     val ctxTables = scala.collection.mutable.Map.empty[Int, DataFrame]
-    var prev: DataFrame = tt
     for (m <- (n - 1) to 1 by -1) {
       val tail = ((m to 2 by -1).map(i => s"c$i") ++
         ((m - 1) to 1 by -1).map(i => s"s$i"))
-      val t0 = prev.groupBy(s"s$m")
+      val t0 = tTables(m + 1).groupBy(s"s$m")
         .agg(count(lit(1)).as(s"n$m"), tail.map(nm => first(col(nm)).as(nm)): _*)
-      val t = if (m >= 2) {
+      tTables(m) = if (m >= 2) {
         val tp = t0.transform(Scoped.persistTracked)
         tp.count() // feeds its marginal, the next link, and scoring
         ctxTables(m) = tp.groupBy(s"c$m")
           .agg(sum(col(s"n$m")).as(s"d$m"), count(lit(1)).as(s"f$m"))
         tp
       } else t0
-      tTables(m) = t
-      prev = t
     }
     val tot = tTables(2).agg(count(lit(1)).as("bigT"))
     var scored = dtf
-      .select(col(idCol) +: col("cnt") +: keyCols.map(kc => col(kc._1)): _*)
+      .select(col(idCol) +: col("cnt") +: keys.map(col): _*)
       .join(tt.select(col("g"), col("cn")), Seq("g"), "left")
       .join(tctxTop, Seq("ctop"), "left")
     for (m <- (n - 1) to 2 by -1) {
@@ -1331,8 +1155,12 @@ object CorpusPipeline {
     def startLadder(m0: Int): String =
       s"(greatest(4 * coalesce(n$m0, 0L) - 3, 0L) * 250000) div d$m0 + " +
         chainFrom(s"(3 * f$m0 * 250000) div d$m0", m0 - 1)
+    // the one order-dependent rule: at n = 2 a seen context before an
+    // OOV token is OOV (C101), at n >= 3 it stays n_cont (C110/C115)
+    val seenTop =
+      if (n == 2) col("cden").isNotNull && col("n1").isNotNull else col("cden").isNotNull
     val lvl = ((n - 1) to 2 by -1)
-      .foldLeft(when(col("cn").isNotNull, 1).when(col("cden").isNotNull, 2)) {
+      .foldLeft(when(col("cn").isNotNull, 1).when(seenTop, 2)) {
         (acc, m) => acc.when(col(s"d$m").isNotNull, 2 + (n - m))
       }
       .when(col("n1").isNotNull, n + 1)
@@ -1363,8 +1191,9 @@ object CorpusPipeline {
    * actually ships: score every document with the reference LM, rank
    * WITHIN each source, and keep the head/middle terciles (tail =
    * highest-perplexity third, the boilerplate/garbled slice). Here the
-   * LM is the round's interpolated Kneser–Ney ([[kneserNeyBigramSurprisal]]
-   * — higher mean probability = head) and the per-source ranks come
+   * LM is the interpolated Kneser–Ney bigram model
+   * ([[kneserNeyNgramSurprisal]] at order 2 — higher mean probability =
+   * head) and the per-source ranks come
    * from [[GroupedScan.prefixScan]], so the corpus-sized rank stage
    * parallelizes by PARTITION, not by |sources| (the C94/C97–C99
    * lesson: a per-source rank window runs ≤ |sources| tasks at
@@ -1378,7 +1207,7 @@ object CorpusPipeline {
       idCol: String = "doc_id",
       sourceCol: String = "source",
       textCol: String = "text"): DataFrame = {
-    val scored = kneserNeyBigramSurprisal(docs, trainFilter, idCol, textCol)
+    val scored = kneserNeyNgramSurprisal(docs, trainFilter, 2, idCol, textCol)
       .select(col(idCol), col("mean_p_ppm"))
     val base = docs
       .filter(col(textCol).isNotNull)

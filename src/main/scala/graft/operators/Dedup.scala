@@ -340,8 +340,6 @@ object Dedup {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast(DoubleType) / size(array_union(a, b)).cast(DoubleType)
 
-  /** C4: verified near-dup pairs — candidates (from any generator) joined
-   * back to texts, kept when word-set Jaccard ≥ threshold. */
   /**
    * Near-dup CLUSTERING: connected components over a verified pair
    * set, so a family of transitively-linked near-duplicates gets one
@@ -864,6 +862,8 @@ object Dedup {
       .select(col(idCol), col("ccell"), col("fcell"), col("keep"))
   }
 
+  /** C4: verified near-dup pairs — candidates (from any generator) joined
+   * back to texts, kept when word-set Jaccard ≥ threshold. */
   def verifyJaccard(
       candidates: DataFrame,
       docs: DataFrame,
@@ -1187,49 +1187,6 @@ object Dedup {
   }
 
   /**
-   * C93: dedup-ladder attrition funnel — the pipeline-ablation
-   * dashboard every curation run reports: per source, how many docs
-   * and tokens SURVIVE each rung of the ladder (raw → exact →
-   * normalized → near-dup), with each rung applied to the previous
-   * rung's survivors (published survivors of a finer rung can't be
-   * re-dropped by a coarser one — the C85 cascade-among-failing
-   * inversion). Rungs:
-   *
-   *   1 exact       — min-id per md5(text) group
-   *   2 normalized  — min-id per [[TextFunctions.normalizeText]] group,
-   *                   among rung-1 survivors
-   *   3 minhash     — md5-based `sigs`-permutation MinHash over
-   *                   distinct word `shingle`-shingles, cut into
-   *                   `bands`; a survivor drops iff ANY of its band
-   *                   buckets contains a smaller rung-2 survivor (the
-   *                   D9/C86 greedy min-owner rule)
-   *
-   * The md5 hash chain (h = md5₅₂(g), slot_j = md5₅₂(h ∥ "_j")) is the
-   * C68 device — deliberately chosen over the xxhash production
-   * signature ([[minhashCandidates]]) because any SQL engine replays
-   * it bit-for-bit: the funnel is the AUDIT view of the ladder, and an
-   * audit the oracle can't replay audits nothing.
-   *
-   * Scale shape: the cascade is conditional window minima on ONE
-   * persisted SLIM frame — both dedup keys are 32-char md5 digests
-   * (exact-key grouping is equivalence-preserved under md5, the C52
-   * fingerprint device), so the two window exchanges carry ~100 bytes
-   * per row and the document text NEVER shuffles (the first cut keyed
-   * the normalized rung on the full normalized text — at 100 TB that
-   * is two extra corpus-text shuffles); the minhash rung re-scans the
-   * column-pruned (id, text) projection once and shuffles per-doc
-   * signatures into (band, sig-pair) buckets — bucket-bounded like
-   * every LSH rung — and ONE final aggregate melts all four rungs out
-   * of the flag frame.
-   *
-   * @return (rung, rung_name, source, docs, tokens) — tokens are
-   *         whitespace counts of the RAW text, so rung deltas measure
-   *         what each rung removed from the training budget. The raw
-   *         rung counts EVERY input doc: null/empty-text docs (which
-   *         produce no shingles and so never enter the minhash path)
-   *         ride a left join and inherit their normalized-rung fate.
-   */
-  /**
    * C108: EXACT-threshold Jaccard set-similarity join — prefix
    * filtering (the PPJoin family, Xiao 2008): the exact counterpart to
    * the repo's approximate rungs (C2 MinHash-LSH recalls with an
@@ -1454,6 +1411,49 @@ object Dedup {
     }.reduce(_ unionAll _).orderBy("rung", sourceCol)
   }
 
+  /**
+   * C93: dedup-ladder attrition funnel — the pipeline-ablation
+   * dashboard every curation run reports: per source, how many docs
+   * and tokens SURVIVE each rung of the ladder (raw → exact →
+   * normalized → near-dup), with each rung applied to the previous
+   * rung's survivors (published survivors of a finer rung can't be
+   * re-dropped by a coarser one — the C85 cascade-among-failing
+   * inversion). Rungs:
+   *
+   *   1 exact       — min-id per md5(text) group
+   *   2 normalized  — min-id per [[TextFunctions.normalizeText]] group,
+   *                   among rung-1 survivors
+   *   3 minhash     — md5-based `sigs`-permutation MinHash over
+   *                   distinct word `shingle`-shingles, cut into
+   *                   `bands`; a survivor drops iff ANY of its band
+   *                   buckets contains a smaller rung-2 survivor (the
+   *                   D9/C86 greedy min-owner rule)
+   *
+   * The md5 hash chain (h = md5₅₂(g), slot_j = md5₅₂(h ∥ "_j")) is the
+   * C68 device — deliberately chosen over the xxhash production
+   * signature ([[minhashCandidates]]) because any SQL engine replays
+   * it bit-for-bit: the funnel is the AUDIT view of the ladder, and an
+   * audit the oracle can't replay audits nothing.
+   *
+   * Scale shape: the cascade is conditional window minima on ONE
+   * persisted SLIM frame — both dedup keys are 32-char md5 digests
+   * (exact-key grouping is equivalence-preserved under md5, the C52
+   * fingerprint device), so the two window exchanges carry ~100 bytes
+   * per row and the document text NEVER shuffles (the first cut keyed
+   * the normalized rung on the full normalized text — at 100 TB that
+   * is two extra corpus-text shuffles); the minhash rung re-scans the
+   * column-pruned (id, text) projection once and shuffles per-doc
+   * signatures into (band, sig-pair) buckets — bucket-bounded like
+   * every LSH rung — and ONE final aggregate melts all four rungs out
+   * of the flag frame.
+   *
+   * @return (rung, rung_name, source, docs, tokens) — tokens are
+   *         whitespace counts of the RAW text, so rung deltas measure
+   *         what each rung removed from the training budget. The raw
+   *         rung counts EVERY input doc: null/empty-text docs (which
+   *         produce no shingles and so never enter the minhash path)
+   *         ride a left join and inherit their normalized-rung fate.
+   */
   def attritionFunnel(
       docs: DataFrame,
       idCol: String = "doc_id",

@@ -589,8 +589,9 @@ object PipeQueries {
     // two separately-rounded terms replay bit-for-bit in DuckDB.
     "q_c101_kneser_ney" -> ((s, dir) => {
       graft.operators.CorpusPipeline
-        .kneserNeyBigramSurprisal(docsPar(s, dir), col("doc_id") % 5 === 0,
-          "doc_id", "text")
+        .kneserNeyNgramSurprisal(docsPar(s, dir), col("doc_id") % 5 === 0,
+          order = 2, "doc_id", "text")
+        .withColumnsRenamed(Map("n_ngrams" -> "n_bigrams", "n_unig" -> "n_uctx"))
         .orderBy("doc_id")
     }),
 
@@ -600,14 +601,16 @@ object PipeQueries {
     // rounded terms) genuinely in SQL over string keys.
     "q_c110_kneser_ney_tri" -> ((s, dir) => {
       graft.operators.CorpusPipeline
-        .kneserNeyTrigramSurprisal(docsPar(s, dir), col("doc_id") % 5 === 0,
-          "doc_id", "text")
+        .kneserNeyNgramSurprisal(docsPar(s, dir), col("doc_id") % 5 === 0,
+          order = 3, "doc_id", "text")
+        .withColumnsRenamed(Map("n_ngrams" -> "n_trigrams", "n_bo2" -> "n_umid",
+          "n_unig" -> "n_ubw"))
         .orderBy("doc_id")
     }),
 
     // C115: interpolated Kneser–Ney at order 5 — the Wenzek 2020 CCNet
-    // configuration, from the generic order-n ladder (generic(3) is
-    // spec-pinned bit-identical to C110). 8-byte exchange keys are the
+    // configuration, from the same order-n ladder q_c101 and q_c110
+    // run at orders 2 and 3. 8-byte exchange keys are the
     // measured 100 TB plan (x100: 163.3 s string-keyed vs 33.5 s
     // hashed, BASELINE r15); the oracle replays the full 5-deep
     // suffix-type chain genuinely in SQL over strings.

@@ -280,16 +280,17 @@ class PlanAuditSpec extends SparkSpec {
     "q_c119_pack_examples" -> 0, "q_c119b_pack_shards" -> 0,
     // q_c100 = 1: the trainer's histogram/EM scans run at build; the
     // returned plan is one scan + codegen token count + one aggregate.
-    // q_c101 = 18: q_c84 printer class — the persisted+pinned dtf
-    // prints its cached scan per reference (3 LM-marginal branches +
-    // the scoring join's 4 sides) and the persisted tb adds its own
-    // references; executed documents reads: 1 (both caches eager-
-    // pinned by count()).
+    // q_c101 = 18: q_c84 printer class — kneserNeyNgramSurprisal at
+    // order 2: the persisted+pinned dtf prints its cached scan per
+    // reference (3 LM-marginal branches + the scoring join's 4 sides)
+    // and the persisted bigram-type table tt adds its own references;
+    // executed documents reads: 1 (both caches eager-pinned by count()).
     "q_c100_unigram_tokenizer" -> 1, "q_c101_kneser_ney" -> 18,
-    // q_c110 = 42: q_c84/q_c101 printer class one order up — THREE
-    // persisted+pinned frames (dtf, trigram-type tt, continuation
-    // tbi) print their one cached scan per reference across the
-    // five-join scoring pass; executed scans stay 1.
+    // q_c110 = 42: q_c84/q_c101 printer class one order up —
+    // kneserNeyNgramSurprisal at order 3: THREE persisted+pinned frames
+    // (dtf, trigram-type tt, continuation link t2) print their one
+    // cached scan per reference across the five-join scoring pass;
+    // executed scans stay 1.
     "q_c110_kneser_ney_tri" -> 42,
     // q_c114 = 6: printer bound — the persisted token frame prints its
     // cached scan per reference (gram-stats aggregate + join-back side

@@ -3,8 +3,8 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** C101: interpolated Kneser–Ney bigram scoring
- * (CorpusPipeline.kneserNeyBigramSurprisal), integer-ppm with D = 3/4. */
+/** C101/C110/C115: interpolated Kneser–Ney scoring at orders 2, 3 and 5
+ * (CorpusPipeline.kneserNeyNgramSurprisal), integer-ppm with D = 3/4. */
 class KneserNeySpec extends SparkSpec {
 
   import spark.implicits._
@@ -28,12 +28,14 @@ class KneserNeySpec extends SparkSpec {
     //  (c x) both unseen → 0 lvl4; (x b) unseen ctx, seen w2 →
     //  1000000 // 3 = 333333 lvl3.
     // Doc 2 "b c b c": (b c)×2 hit 375000; (c b) unseen ctx → 333333.
-    val docs = Seq(train, (1L, "a c x b"), (2L, "b c b c"))
+    // Doc 3 "a z": seen ctx a, OOV z → lvl4 (order 2 needs a seen final
+    //  token for lvl2), p = 0 + ((3·1·250000) // 2)·0 // 3 = 0.
+    val docs = Seq(train, (1L, "a c x b"), (2L, "b c b c"), (3L, "a z"))
       .toDF("doc_id", "text")
     val out = CorpusPipeline
-      .kneserNeyBigramSurprisal(docs, col("doc_id") === 0)
+      .kneserNeyNgramSurprisal(docs, col("doc_id") === 0, order = 2)
       .orderBy("doc_id")
-      .select("doc_id", "n_bigrams", "n_hit", "n_cont", "n_uctx", "n_oov",
+      .select("doc_id", "n_ngrams", "n_hit", "n_cont", "n_unig", "n_oov",
         "p_sum_ppm", "mean_p_ppm")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -42,14 +44,15 @@ class KneserNeySpec extends SparkSpec {
     assert(out == Seq(
       (0L, 4L, 4L, 0L, 0L, 0L, 2250000L, 562500L),
       (1L, 3L, 0L, 1L, 1L, 1L, 458333L, 152777L),
-      (2L, 3L, 2L, 0L, 1L, 0L, 1083333L, 361111L)))
-    spark.catalog.clearCache() // dtf/tb persist inside the operator
+      (2L, 3L, 2L, 0L, 1L, 0L, 1083333L, 361111L),
+      (3L, 1L, 0L, 0L, 0L, 1L, 0L, 0L)))
+    spark.catalog.clearCache() // dtf/tt persist inside the operator
   }
 
   test("empty train slice degrades to all-OOV with p 0, not null") {
     val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
     val r = CorpusPipeline
-      .kneserNeyBigramSurprisal(docs, lit(false))
+      .kneserNeyNgramSurprisal(docs, lit(false), order = 2)
       .collect().head
     assert(r.getAs[Long]("n_oov") == 2L && r.getAs[Long]("p_sum_ppm") == 0L)
     spark.catalog.clearCache()
@@ -69,7 +72,7 @@ class KneserNeySpec extends SparkSpec {
 
   private def knTrigramRows(df: org.apache.spark.sql.DataFrame): Seq[KnRow] =
     df.orderBy("doc_id")
-      .select("doc_id", "n_trigrams", "n_hit", "n_cont", "n_umid", "n_ubw",
+      .select("doc_id", "n_ngrams", "n_hit", "n_cont", "n_bo2", "n_unig",
         "n_oov", "p_sum_ppm", "mean_p_ppm")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -138,7 +141,7 @@ class KneserNeySpec extends SparkSpec {
     val docs = Seq(train3, (1L, "a b c"), (2L, "a b a"), (3L, "e b c"),
       (4L, "e e c"), (5L, "e e e"), (6L, "x y")).toDF("doc_id", "text")
     val out = knTrigramRows(
-      CorpusPipeline.kneserNeyTrigramSurprisal(docs, col("doc_id") === 0))
+      CorpusPipeline.kneserNeyNgramSurprisal(docs, col("doc_id") === 0, order = 3))
     assert(out == Seq(
       (0L, 7L, 7L, 0L, 0L, 0L, 0L, 4541663L, 648809L),
       (1L, 1L, 1L, 0L, 0L, 0L, 0L, 572916L, 572916L),
@@ -154,7 +157,7 @@ class KneserNeySpec extends SparkSpec {
   test("C110: empty train degrades to all-OOV p 0; hashed and string keys agree") {
     val solo = Seq((1L, "a b c d")).toDF("doc_id", "text")
     val r = CorpusPipeline
-      .kneserNeyTrigramSurprisal(solo, lit(false))
+      .kneserNeyNgramSurprisal(solo, lit(false), order = 3)
       .collect().head
     assert(r.getAs[Long]("n_oov") == 2L && r.getAs[Long]("p_sum_ppm") == 0L)
     spark.catalog.clearCache()
@@ -168,30 +171,14 @@ class KneserNeySpec extends SparkSpec {
     val rows = Seq(train3, (1L, "a b c"), (2L, "e b c"), (3L, "q w e r t")) ++ extra
     val isTrain = (id: Long) => id == 0L || (id >= 10L && id % 3 == 0)
     val expected = bruteKnTrigram(rows, isTrain)
-    val got = knTrigramRows(CorpusPipeline.kneserNeyTrigramSurprisal(
+    val got = knTrigramRows(CorpusPipeline.kneserNeyNgramSurprisal(
       rows.toDF("doc_id", "text"),
-      col("doc_id") === 0 || (col("doc_id") >= 10 && col("doc_id") % 3 === 0)))
+      col("doc_id") === 0 || (col("doc_id") >= 10 && col("doc_id") % 3 === 0),
+      order = 3))
     spark.catalog.clearCache()
     assert(got == expected)
     (1 to 5).foreach(l => assert(expected.exists(_.productElement(1 + l) != 0L),
       s"level $l never reached"))
-  }
-
-  test("C115: generic order-n at n = 3 reproduces the trigram operator bit-for-bit") {
-    val docs = Seq(
-      (0L, "a b a b c a b d"), (1L, "a b c x"), (2L, "b c d e f"),
-      (3L, "x y z"), (4L, "a b a b a b"))
-      .toDF("doc_id", "text")
-    val tri = CorpusPipeline
-      .kneserNeyTrigramSurprisal(docs, col("doc_id") === 0)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val gen = CorpusPipeline
-      .kneserNeyNgramSurprisal(docs, col("doc_id") === 0, order = 3)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    spark.catalog.clearCache()
-    // same column POSITIONS: (id, n, hit, cont, bo2/umid, unig/ubw,
-    // oov, p_sum, mean) — names are generic vs C110-specific
-    assert(tri == gen)
   }
 
   test("C115: 5-gram ladder, every backoff rung hand-computed") {

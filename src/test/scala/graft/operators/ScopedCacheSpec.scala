@@ -55,6 +55,14 @@ class ScopedCacheSpec extends SparkSpec {
     assertScopedClean(CorpusPipeline.lmBigramSurprisal(docs, "doc_id", "text"))
   }
 
+  test("n-gram LMs (Stupid Backoff, Kneser-Ney at orders 2, 3, 5) under withCached leave no cached plans") {
+    // all four persist the shared per-(doc, n-gram) instance table
+    val train = col("doc_id") % 3 === 0
+    assertScopedClean(CorpusPipeline.stupidBackoffSurprisal(docs, train))
+    Seq(2, 3, 5).foreach(n =>
+      assertScopedClean(CorpusPipeline.kneserNeyNgramSurprisal(docs, train, order = n)))
+  }
+
   test("docTopTerms under withCached leaves no cached plans") {
     assertScopedClean(CorpusPipeline.docTopTerms(docs, "doc_id", "text"))
   }
