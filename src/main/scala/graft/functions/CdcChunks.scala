@@ -21,9 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * Cut rule, 0-based over tokens T[0..n-1]: cut before T[p] (p ≥
  * `window`) iff H(join(T[p-window..p-1], ' ')) % modulus == 0, where H
- * is the first 13 hex chars of md5 parsed as a long — the
- * [[TextFunctions.md5Bucket]] engine-portable hash, so a DuckDB oracle
- * replays every boundary with
+ * is md5₅₂ ([[Md5HexSlice.of]], the [[TextFunctions.md5Bucket]]
+ * engine-portable hash), so a DuckDB oracle replays every boundary with
  * `CAST(('0x'||substr(md5(gram),1,13)) AS BIGINT) % modulus`. Output:
  * the chunk strings in order (tokens space-joined, concat_ws
  * semantics); n < window yields the whole doc as one chunk.
@@ -56,28 +55,6 @@ object CdcChunks {
 
   def apply(tokens: Column, window: Int, modulus: Int): Column =
     Shim.column(CdcChunks(Shim.expression(tokens), window, modulus))
-
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  private val HEX = "0123456789abcdef".toCharArray
-
-  /** First 13 hex chars of md5(bytes) parsed base-16 — bit-identical to
-   * `conv(substring(md5(x), 1, 13), 16, 10)` / DuckDB
-   * `('0x'||substr(md5(x),1,13))::BIGINT` (52 bits, always ≥ 0). */
-  def md5Prefix13(bytes: Array[Byte], len: Int): Long = {
-    val md = digest.get()
-    md.reset()
-    md.update(bytes, 0, len)
-    val d = md.digest()
-    // 13 hex chars = 6.5 bytes: fold the high nibble of byte 6 last
-    var v = 0L
-    var i = 0
-    while (i < 6) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    (v << 4) | ((d(6) & 0xf0L) >> 4)
-  }
 
   /** Space-join tokens [from, until) into `buf` (grown as needed),
    * concat_ws semantics (nulls skipped, empties joined). Returns the
@@ -114,7 +91,7 @@ object CdcChunks {
     while (p < n) {
       val (b2, glen) = joinInto(arr, p - window, p, buf)
       buf = b2
-      if (md5Prefix13(buf, glen) % modulus == 0) {
+      if (Md5HexSlice.of(buf, glen, 1, 13) % modulus == 0) {
         val (b3, clen) = joinInto(arr, start, p, buf)
         buf = b3
         chunks += UTF8String.fromBytes(java.util.Arrays.copyOf(buf, clen))

@@ -30,10 +30,10 @@ import org.apache.spark.sql.types._
  * Spark-native shape: [[CountMinAgg]] is a `TypedImperativeAggregate`
  * (the built-in `count_min_sketch`'s pattern) whose input is the
  * row's PRE-COMPUTED bucket array — [[CountMin.buckets]] derives the
- * `depth` row hashes from one md5 call in pure codegen'd built-ins
- * (8 hex chars per row, disjoint md5 substrings), so the hash
- * functions are engine-portable and a DuckDB oracle can rebuild the
- * identical grid as `depth·width` bucket sums. [[CountMin.estimate]]
+ * `depth` row hashes as disjoint 8-hex-char [[Md5HexSlice]]s of the
+ * key's md5 (one digest per row hash), so the hash functions are
+ * engine-portable and a DuckDB oracle can rebuild the identical grid
+ * as `depth·width` bucket sums. [[CountMin.estimate]]
  * then reads a collected sketch back as a literal array lookup —
  * map-only, broadcast-sized (`depth·width·8` bytes).
  */
@@ -44,11 +44,11 @@ object CountMin {
    * `width`. depth ≤ 4 uses disjoint substrings of one digest. */
   def buckets(key: Column, depth: Int, width: Int): Column = {
     require(depth >= 1 && depth <= 4 && width >= 2)
-    array((0 until depth).map { r =>
-      (conv(substring(md5(key), r * 8 + 1, 8), 16, 10).cast(LongType) % width)
-        .cast(IntegerType)
-    }: _*)
+    array((0 until depth).map(rowBucket(key, _, width)): _*)
   }
+
+  private def rowBucket(key: Column, r: Int, width: Int): Column =
+    (Md5HexSlice(key, r * 8 + 1, 8) % width).cast(IntegerType)
 
   /** Aggregate a [[buckets]] column into the flattened `depth·width`
    * counter grid (row-major `array<long>`). */
@@ -58,13 +58,10 @@ object CountMin {
 
   /** Point estimate for `key` against a sketch COLUMN (e.g. one sketch
    * per event-time window): min over the `depth` rows of the key's
-   * counter. Pure built-ins; `element_at` is 1-based. */
+   * counter, all codegen'd; `element_at` is 1-based. */
   def estimateCol(sketch: Column, key: Column, depth: Int, width: Int): Column = {
-    val cells = (0 until depth).map { r =>
-      val b = (conv(substring(md5(key), r * 8 + 1, 8), 16, 10).cast(LongType) % width)
-        .cast(IntegerType)
-      element_at(sketch, b + lit(r * width + 1))
-    }
+    val cells = (0 until depth).map(r =>
+      element_at(sketch, rowBucket(key, r, width) + lit(r * width + 1)))
     if (cells.size == 1) cells.head else least(cells: _*)
   }
 

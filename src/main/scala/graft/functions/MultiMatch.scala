@@ -55,7 +55,6 @@ final class AcAutomaton private (
     csrTgt: Array[Int],            // transition targets, aligned to csrKey
     outs: Array[Array[Int]]) extends Serializable {
 
-  def numPatterns: Int = patterns.length
   def numStates: Int = outs.length
   def isDense: Boolean = goTo != null
 

@@ -254,8 +254,8 @@ object SimHash64 {
  * md5₅₂(h ∥ "_j") — so the SAME oracle SQL replays stream and batch.
  * Shingle semantics match [[TextFunctions.shingles]] (`< shingleSize`
  * tokens degrade to one whole-text shingle, single-space joins).
- * One thread-local digest (the SpanCorrupt device), no per-shingle
- * string churn beyond the md5 inputs themselves.
+ * Every hash is [[Md5HexSlice.md552]]; no per-shingle string churn
+ * beyond the md5 inputs themselves.
  */
 case class Md5MinhashSig(child: Expression, shingleSize: Int, numHashes: Int)
     extends TokenSketch {
@@ -288,23 +288,6 @@ object Md5MinhashSig {
   def apply(tokens: Column, shingleSize: Int, numHashes: Int): Column =
     Shim.column(Md5MinhashSig(Shim.expression(tokens), shingleSize, numHashes))
 
-  private val Md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** First 52 bits of md5(bytes) — the `('0x' || substr(md5, 1, 13))`
-   * oracle arithmetic, extracted without the hex round trip. */
-  private def md552(bytes: Array[Byte]): Long = {
-    val md = Md.get()
-    md.reset()
-    val d = md.digest(bytes)
-    var v = 0L
-    var i = 0
-    while (i < 6) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    (v << 4) | ((d(6) & 0xffL) >>> 4)
-  }
-
   def compute(arr: ArrayData, shingleSize: Int, numHashes: Int): Array[Long] = {
     val sig = new Array[Long](numHashes)
     java.util.Arrays.fill(sig, Long.MaxValue)
@@ -323,12 +306,12 @@ object Md5MinhashSig {
         if (t != null) sb.append(t.toString)
         k += 1
       }
-      val h = md552(sb.toString
+      val h = Md5HexSlice.md552(sb.toString
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       var j = 0
       while (j < numHashes) {
         // md5(CAST(h AS VARCHAR) || '_' || j), ASCII bytes
-        val hj = md552((java.lang.Long.toString(h) + "_" + j)
+        val hj = Md5HexSlice.md552((java.lang.Long.toString(h) + "_" + j)
           .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
         if (hj < sig(j)) sig(j) = hj
         j += 1

@@ -79,30 +79,11 @@ object SpanCorrupt {
     StructField("masked_tokens", IntegerType, nullable = false),
     StructField("total_tokens", IntegerType, nullable = false)))
 
-  /** One digest per executor thread — the Multimodal thread-local
-   * pattern: MessageDigest.getInstance per (doc, window) would be the
-   * hot-path allocation of a 100 TB map pass. */
-  private val Md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** 52-bit md5 prefix of "sc:<id>:<w>" mod (window − span + 1) —
-   * byte-identical to the oracle's
-   * `CAST(('0x' || substr(md5(...), 1, 13)) AS BIGINT) % m` (the
-   * first 13 hex chars = 6 full bytes + the high nibble of byte 7,
-   * extracted directly — no hex-string round trip). */
-  private def spanOffset(id: Long, w: Int, mod: Int): Int = {
-    val md = Md5.get()
-    md.reset()
-    val d = md.digest(s"sc:$id:$w".getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    var v = 0L
-    var i = 0
-    while (i < 6) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-    v = (v << 4) | ((d(6) & 0xffL) >>> 4)
-    (v % mod).toInt
-  }
+  /** md5₅₂("sc:<id>:<w>") mod (window − span + 1) — the oracle's
+   * `CAST(('0x' || substr(md5(...), 1, 13)) AS BIGINT) % m`. */
+  private def spanOffset(id: Long, w: Int, mod: Int): Int =
+    (Md5HexSlice.md552(s"sc:$id:$w".getBytes(
+      java.nio.charset.StandardCharsets.UTF_8)) % mod).toInt
 
   def compute(tokens: ArrayData, id: Long, window: Int, span: Int): GenericInternalRow = {
     val n = tokens.numElements()

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /**
  * Text-analysis column builders for LLM-data-pipeline operators
@@ -60,8 +59,6 @@ object TextFunctions {
   def charCount(text: Column): Column = length(text)
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.,;:!?]", ""))
-  def upperCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[A-Z]", ""))
   /** Counts whitespace tokens that exactly equal an English stopword.
    * Doubling every whitespace run before matching ` word ` gives each
    * token its own flanking spaces, so adjacent stopwords ("a and is")
@@ -92,11 +89,6 @@ object TextFunctions {
   def fingerprintMd5(text: Column): Column =
     md5(lower(regexp_replace(text, "\\s+", " ")))
 
-  /** C12 (scale path): 64-bit rolling polynomial hash over characters,
-   * computed distributively per row with built-in `aggregate`. */
-  def rollingHash(text: Column): Column =
-    aggregate(split(text, ""), lit(0L), (acc, ch) => acc * lit(31L) + ascii(ch).cast(LongType))
-
   // ---- C13: PII detection/redaction ------------------------------------
   // Patterns stay inside the Java-regex ∩ RE2 dialect (no backrefs, no
   // lookaround) so any SQL engine can reproduce the redaction.
@@ -121,9 +113,10 @@ object TextFunctions {
   // ---- C14: deterministic corpus bucketing / splits --------------------
 
   /**
-   * C14: stable bucket in [0, buckets) from the first 13 hex chars of
-   * md5 (52 bits — exact in a BIGINT and in a double) — portable across
-   * engines (DuckDB: `('0x'||substr(md5(x),1,13))::BIGINT % buckets`),
+   * C14: stable bucket in [0, buckets) from md5₅₂ ([[Md5HexSlice]]:
+   * the first 13 hex chars of md5, 52 bits — exact in a BIGINT and in a
+   * double) — portable across engines (DuckDB:
+   * `('0x'||substr(md5(x),1,13))::BIGINT % buckets`),
    * reprocessing-stable (a function of content only). 13 chars keeps
    * the modulo bias below 2^-39 relative; a 4-char (16-bit) domain
    * would bias low buckets by ~1/655 absolute (~7% relative at
@@ -131,7 +124,7 @@ object TextFunctions {
    * of state, no hex round-trip).
    */
   def md5Bucket(text: Column, buckets: Int): Column =
-    conv(substring(md5(text), 1, 13), 16, 10).cast(LongType) % buckets
+    Md5HexSlice.md552(text) % buckets
 
   /** C14: train/val/test assignment from [[md5Bucket]] percentages. */
   def hashSplit(text: Column, trainPct: Int = 90, valPct: Int = 5): Column = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{TextFunctions => TF}
+import graft.functions.{Md5HexSlice, TextFunctions => TF}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -715,10 +715,8 @@ object CorpusPipeline {
    */
   def scoreLinearHashed(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val tok = docs.select(col(idCol), explode(TF.tokens(col(textCol))).as("__tk"))
-    val weight =
-      conv(substring(md5(col("__tk")), 1, 4), 16, 10).cast(LongType) % 19 - 9
     tok
-      .withColumn("__w", weight)
+      .withColumn("__w", Md5HexSlice(col("__tk"), 1, 4) % 19 - 9)
       .groupBy(col(idCol))
       .agg(sum(col("__w")).as("lin_score"), count(lit(1)).as("n_tokens"))
       .withColumn("lin_label", (col("lin_score") > 0).cast(IntegerType))
@@ -1407,7 +1405,7 @@ object CorpusPipeline {
       .select(col(idCol).as("__id"),
         posexplode(TF.shingles(col(textCol), k)).as(Seq("pos", "g")))
       .select(col("__id"), col("pos"),
-        conv(substring(md5(col("g")), 1, 13), 16, 10).cast(LongType).as("h"))
+        Md5HexSlice.md552(col("g")).as("h"))
     val frame = W.partitionBy("__id").orderBy("pos")
       .rowsBetween(W.currentRow, w - 1)
     val fps = grams
@@ -1621,27 +1619,24 @@ object CorpusPipeline {
    * corpus-pair similarity when neither [[sourceOverlap]]'s exact
    * bitmask (≤62 labels) nor its general fallback (per-gram source
    * sets) is affordable: per source, a `sigs`-long MinHash signature
-   * of its distinct n-gram set, built in ONE combining aggregate
-   * (`sigs` `min` columns over per-slot salted md5 re-hashes of a
-   * single md5 base hash — computed on the distinct'd rows, so one
-   * base hash per gram instance), then estimated Jaccard for every
-   * source pair from the tiny signature table. Partial state per
-   * source is `sigs` longs at ANY corpus size, and the pairwise step
-   * runs on |sources|² signature rows, never on grams — so 10k-source
-   * corpora stay linear where the exact paths cannot.
+   * of its distinct n-gram set, then estimated Jaccard for every
+   * source pair from the tiny signature table. Each doc is signed
+   * map-only by [[graft.functions.Md5MinhashSig]] and a source's slot j
+   * is the min of its docs' slot j in ONE combining aggregate (min over
+   * gram multisets IS min over the distinct set — no gram explode, no
+   * distinct). Partial state per source is `sigs` longs at ANY corpus
+   * size, and the pairwise step runs on |sources|² signature rows,
+   * never on grams — so 10k-source corpora stay linear.
    *
-   * Engine-portable determinism: grams are distinct'd on their md5
-   * base hash (the signature is a function of the hash SET, so
-   * distinct-on-hash ≡ distinct-on-gram up to 52-bit collisions both
-   * engines share); each slot re-hashes that base value with a slot
-   * salt (`md5(h || '_' || j)`), so the per-slot orders are
-   * independent — a small-multiplier linear permutation mod a big
-   * prime would never wrap (65·2⁵² < 2⁶¹) and every slot would
-   * degenerate to the same global-min gram. The salted re-hash runs
-   * on the DISTINCT'd rows, so its cost scales with distinct grams,
-   * not gram instances. Estimator: agreeing-slot fraction; the
-   * companion spec checks it against the exact Jaccard, the oracle
-   * replays the signatures bit-exactly.
+   * Engine-portable determinism: gram hash h = md5₅₂(gram); each slot
+   * re-hashes h with a slot salt (`md5(h || '_' || j)`), so the
+   * per-slot orders are independent — a small-multiplier linear
+   * permutation mod a big prime would never wrap (65·2⁵² < 2⁶¹) and
+   * every slot would degenerate to the same global-min gram. Null-text
+   * docs are dropped (a source of only those has no row); empty and
+   * whitespace-only text is one "" shingle, as in [[TF.shingles]].
+   * Estimator: agreeing-slot fraction; the oracle replays the
+   * signatures bit-exactly.
    */
   def sourceMinhash(
       docs: DataFrame,
@@ -1650,21 +1645,11 @@ object CorpusPipeline {
       sourceCol: String = "source",
       textCol: String = "text"): DataFrame = {
     require(sigs > 0 && sigs <= 64)
-    val h = conv(substring(md5(col("g")), 1, 13), 16, 10).cast(LongType)
-    val hs = docs.select(
-        col(sourceCol).cast(StringType).as("source"),
-        explode(TF.shingles(col(textCol), n)).as("g"))
-      .select(col("source"), h.as("h")).distinct()
-    def slot(j: Int) =
-      conv(substring(md5(concat(col("h").cast(StringType), lit(s"_$j"))), 1, 13), 16, 10)
-        .cast(LongType)
-    val sigAggs = (0 until sigs).map(j => min(slot(j)).as(s"s$j"))
     // persist + eager pin: BOTH sides of the pairwise cross join
     // reference this aggregate — unpinned, each side re-runs the whole
-    // gram scan+distinct+min pipeline (the df⋈aggregate(df) recompute
+    // scan+signature+min pipeline (the df⋈aggregate(df) recompute
     // rule); the table is |sources| rows, so the pin count is free
-    val sig = Scoped.persistTracked(
-      hs.groupBy("source").agg(sigAggs.head, sigAggs.tail: _*))
+    val sig = Scoped.persistTracked(sourceSignatures(docs, n, sigs, sourceCol, textCol))
     sig.count()
     val a = sig.select(col("source").as("src_a") +:
       (0 until sigs).map(j => col(s"s$j").as(s"a$j")): _*)
@@ -1677,6 +1662,19 @@ object CorpusPipeline {
       .withColumn("agree", agree)
       .withColumn("est_jaccard_ppm", expr(s"agree * 1000000 div $sigs"))
       .select("src_a", "src_b", "agree", "est_jaccard_ppm")
+  }
+
+  /** [[sourceMinhash]]'s per-source signature table:
+   * (source, s0..s{sigs-1}), slot j = min over the source's docs of
+   * their [[graft.functions.Md5MinhashSig]] slot j. */
+  private[graft] def sourceSignatures(
+      docs: DataFrame, n: Int, sigs: Int, sourceCol: String, textCol: String): DataFrame = {
+    val perDoc = docs.filter(col(textCol).isNotNull)
+      .select(col(sourceCol).cast(StringType).as("source"),
+        explode(graft.functions.SingletonArray(graft.functions.Md5MinhashSig(
+          TF.tokens(col(textCol)), n, sigs))).as("__sig"))
+    val slots = (0 until sigs).map(j => min(element_at(col("__sig"), j + 1)).as(s"s$j"))
+    perDoc.groupBy("source").agg(slots.head, slots.tail: _*)
   }
 
   /** General-shape [[sourceOverlap]] fallback (>62 or null labels):
@@ -1775,8 +1773,7 @@ object CorpusPipeline {
         explode(graft.functions.WordShingles(col("__l"), 2)).as("__g"))
     val feats = uni.union(big)
       .select(col(idCol), col("__tgt"),
-        (conv(substring(md5(col("__g")), 1, 13), 16, 10).cast(LongType) % buckets)
-          .as("__f"))
+        (Md5HexSlice.md552(col("__g")) % buckets).as("__f"))
       .transform(Scoped.persistTracked)
     feats.count() // pin before the two racing consumers (see sourceDivergence)
     val wt = feats.groupBy("__f")
@@ -2041,8 +2038,7 @@ object CorpusPipeline {
     // collisions harmless — the oracle orders by the SAME prefix.
     val keyed = examples.select(
         col(idCol).cast(LongType).as("__id"),
-        conv(substring(md5(concat(lit(seed), col(idCol).cast(StringType))),
-          1, 13), 16, 10).cast(LongType).as("__k"),
+        Md5HexSlice.md552(concat(lit(seed), col(idCol).cast(StringType))).as("__k"),
         col(lenCol).cast(LongType).as("__t"))
       .filter(col("__t") > 0)
     val sorted = keyed
@@ -2133,8 +2129,7 @@ object CorpusPipeline {
       fimPpm: Int = 500000): DataFrame = {
     require(fimPpm >= 0 && fimPpm <= 1000000, "fimPpm out of range")
     def h(tag: String, mod: Column): Column =
-      conv(substring(md5(concat(lit(tag), col(idCol).cast(StringType))),
-        1, 13), 16, 10).cast(LongType) % mod
+      Md5HexSlice.md552(concat(lit(tag), col(idCol).cast(StringType))) % mod
     val withCuts = docs
       .select(col(idCol), TF.tokens(col(textCol)).as("__t"))
       .withColumn("__n", size(col("__t")).cast(LongType))
@@ -2199,8 +2194,7 @@ object CorpusPipeline {
       textCol: String = "text"): DataFrame = {
     import graft.functions.SpanCorrupt
     def h(tag: String, mod: Column): Column =
-      conv(substring(md5(concat(lit(tag), col(idCol).cast(StringType))),
-        1, 13), 16, 10).cast(LongType) % mod
+      Md5HexSlice.md552(concat(lit(tag), col(idCol).cast(StringType))) % mod
     val base = docs
       .select(col(idCol), TF.tokens(col(textCol)).as("__t"))
       .withColumn("__n", size(col("__t")).cast(LongType))
@@ -2479,10 +2473,10 @@ object CorpusPipeline {
     require(buckets >= 2 && buckets <= (1 << 16),
       s"buckets must be in [2, 65536], got $buckets")
     import org.apache.spark.sql.expressions.Window
-    val ordSpace = 1L << 52 // 13 md5 hex chars
-    val b = expr(
-      s"(cast(conv(substring(md5(cast($idCol as string)), 1, 13), 16, 10) " +
-        s"as bigint) * ${buckets}L) div ${ordSpace}L").cast(IntegerType)
+    // md5₅₂(id)·buckets reaches 2⁶⁸: exact in decimal(38, 0), not in a long
+    val b = call_function("div",
+      Md5HexSlice.md552(col(idCol).cast(StringType)).cast(DecimalType(38, 0)) * buckets,
+      lit(1L << 52)).cast(IntegerType)
     val d = docs.select(b.as("b"), TF.tokens(col(textCol)).as("__t"))
     val bd = d.groupBy("b").agg(
       count(lit(1)).as("dn"),

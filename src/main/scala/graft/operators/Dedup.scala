@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFunctions
+import graft.functions.{Md5HexSlice, TextFunctions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -1048,17 +1048,12 @@ object Dedup {
           .as("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n"))
 
-  /** Shared md5 signature-chain device (C68/C93/C95 — the bit-for-bit
-   * replay the DuckDB oracles depend on, kept in ONE place so the
-   * consumers can never drift from each other or from the oracles):
-   * gram hash h = md5₅₂(g); permutation j's slot = md5₅₂(h ∥ "_j"); a
-   * doc's signature = per-j min over its distinct gram hashes; band
-   * b's key = the struct of its sigs/bands consecutive slots.
-   * Conventions: input gram column is named "g", hash column "h",
-   * signature columns "s0".."s{sigs-1}". */
-  private def md5GramHash: Column =
-    conv(substring(md5(col("g")), 1, 13), 16, 10).cast(LongType)
-
+  /** Band keys of the shared md5 signature device (C68/C93/C95 — the
+   * bit-for-bit replay the DuckDB oracles depend on): gram hash
+   * h = md5₅₂(g) ([[Md5HexSlice]]); permutation j's slot =
+   * md5₅₂(h ∥ "_j"); a doc's signature = per-j min over its distinct
+   * gram hashes; band b's key = the struct of its sigs/bands
+   * consecutive slots, read from signature columns "s0".."s{sigs-1}". */
   private def sigBandStructs(sigs: Int, bands: Int): Seq[Column] = {
     val rpb = sigs / bands
     (0 until bands).map { b =>
@@ -1097,12 +1092,13 @@ object Dedup {
    * curve, which is exactly what this audit exists to catch.
    *
    * The md5 signature chain (h = md5₅₂(g), slot_j = md5₅₂(h ∥ "_j"))
-   * is the C68/C93 replayable device; ground truth and signatures
-   * share ONE persisted distinct-(id, h) frame, so the whole audit is
-   * one corpus scan. The catch test never materializes the LSH pair
-   * explosion: true pairs (bounded by the df cap) join the per-id band
-   * keys and a pair is caught iff ANY band's sig-tuple matches —
-   * |true pairs| · bands rows, never buckets².
+   * is the C68/C93 replayable device; ground truth reads ONE persisted
+   * distinct-(id, h) frame and the signatures one map-only pass over
+   * the sampled docs. The catch test never materializes the LSH pair
+   * explosion: both endpoints of every true pair (bounded by the df
+   * cap) join the per-id signature table once, and a pair is caught
+   * iff ANY band's sig-tuple matches — 2·|true pairs| rows, never
+   * buckets².
    *
    * Exactness notes: Jaccard is over distinct md5₅₂-hashed shingles
    * (a 52-bit collision would merge two shingles — odds ~n²/2⁵³,
@@ -1147,7 +1143,7 @@ object Dedup {
     val hs = sampled
       .select(col(idCol).cast(LongType).as("id"),
         explode(TextFunctions.shingles(col(textCol), n)).as("g"))
-      .select(col("id"), md5GramHash.as("h")).distinct()
+      .select(col("id"), Md5HexSlice.md552(col("g")).as("h")).distinct()
       .transform(Scoped.persistTracked)
     hs.count() // pin: sizes, df table and the pair path (the sig
                // path is map-only over the sampled docs since r20)
@@ -1168,17 +1164,21 @@ object Dedup {
       .select(col(idCol).cast(LongType).as("id"),
         explode(graft.functions.SingletonArray(graft.functions.Md5MinhashSig(
           TextFunctions.tokens(col(textCol)), n, sigs))).as("__sig"))
-      .select(col("id") +: (0 until sigs).map(j =>
-        element_at(col("__sig"), j + 1).as(s"s$j")): _*)
-    val bd = sigTbl.select(col("id"),
-      posexplode(array(sigBandStructs(sigs, bands): _*)).as(Seq("band", "bk")))
+    // Both endpoints of a pair meet sigTbl in ONE join, so the sampled
+    // scan and the signatures run once (one reference per side would
+    // run them twice); the pair's two signatures (every hs id has one)
+    // regroup under the pair key, caught when any band's slots agree.
+    val rpb = sigs / bands
+    def band(sig: Column, b: Int) = slice(sig, b * rpb + 1, rpb)
     pairs
-      .join(bd.select(col("id").as("id_a"), col("band"), col("bk").as("bk_a")),
-        Seq("id_a"))
-      .join(bd.select(col("id").as("id_b"), col("band"), col("bk").as("bk_b")),
-        Seq("id_b", "band"))
+      .select(col("id_a"), col("id_b"), col("j_ppm"),
+        explode(array(col("id_a"), col("id_b"))).as("id"))
+      .join(sigTbl, "id")
       .groupBy("id_a", "id_b", "j_ppm")
-      .agg(max(when(col("bk_a") === col("bk_b"), 1L).otherwise(0L)).as("caught"))
+      .agg(collect_list(col("__sig")).as("__s"))
+      .withColumn("caught", (0 until bands)
+        .map(b => band(element_at(col("__s"), 1), b) === band(element_at(col("__s"), 2), b))
+        .reduce(_ || _).cast(LongType))
       .withColumn("decile", expr("j_ppm div 100000L"))
       .groupBy("decile")
       .agg(count(lit(1)).as("n_pairs"), sum("caught").as("n_caught"))
@@ -1241,7 +1241,7 @@ object Dedup {
     val toks = docs
       .select(col(idCol).cast(LongType).as("id"),
         explode(TextFunctions.shingles(col(textCol), shingle)).as("g"))
-      .select(col("id"), md5GramHash.as("h")).distinct()
+      .select(col("id"), Md5HexSlice.md552(col("g")).as("h")).distinct()
       .transform(Scoped.persistTracked)
     toks.count() // feeds df + prefix + both verify sides
     val dfTbl = toks.groupBy("h").agg(count(lit(1)).as("df"))
@@ -1330,9 +1330,8 @@ object Dedup {
       s"trainPpm must be in (0, 1e6), got $trainPpm")
     require(sigs >= 1 && sigs <= 64 && bands >= 1 && sigs % bands == 0,
       s"sigs=$sigs must be in [1,64] and a multiple of bands=$bands")
-    val isTrain = (conv(substring(md5(concat(lit(s"$seed:"),
-      col(idCol).cast(StringType))), 1, 13), 16, 10).cast(LongType)
-      % 1000000L) < trainPpm
+    val isTrain = (Md5HexSlice.md552(concat(lit(s"$seed:"),
+      col(idCol).cast(StringType))) % 1000000L) < trainPpm
     // 8-byte xxhash64 content keys with a length disambiguator, not
     // 32-char md5 strings: the keys ride BOTH family aggregates and
     // the famEval⋈famTrain join, and string keys alone cost 1.3-2x on

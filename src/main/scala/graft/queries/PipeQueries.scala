@@ -1012,8 +1012,7 @@ object PipeQueries {
           // 8 hex digits (32 bits) so the per-source SUM stays far from
           // BIGINT overflow at any plausible corpus size (13 digits =
           // 52 bits would overflow DuckDB's BIGINT cast past ~2k rows)
-          conv(substring(md5(col("payload_bytes")), 1, 8), 16, 10)
-            .cast(LongType).as("m13"),
+          graft.functions.Md5HexSlice(col("payload_bytes"), 1, 8).as("m13"),
           octet_length(col("payload_bytes")).cast(LongType).as("pb"),
           col("hydrated"),
           col("digest_ok"))
@@ -1118,8 +1117,7 @@ object PipeQueries {
       hyd.select(substring_index(col("target_uri"), "/", -1)
             .cast(LongType).as("doc_id"),
           col("warc_type"),
-          conv(substring(md5(col("payload_bytes")), 1, 8), 16, 10)
-            .cast(LongType).as("m8"),
+          graft.functions.Md5HexSlice(col("payload_bytes"), 1, 8).as("m8"),
           octet_length(col("payload_bytes")).cast(LongType).as("pb"),
           col("digest_ok"))
         .join(src, Seq("doc_id"))

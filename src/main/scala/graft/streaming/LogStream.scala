@@ -945,7 +945,7 @@ object LogStream {
       .select(
         col("source"),
         col("doc_id"),
-        conv(substring(md5(col("text")), 1, 13), 16, 10).cast("long").as("h"))
+        graft.functions.Md5HexSlice.md552(col("text")).as("h"))
       .as[SampleTok]
       .groupByKey(_.source)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(

@@ -373,14 +373,14 @@ class PlanAuditSpec extends SparkSpec {
     // r20; was a shingle explode+agg), both materialized by the
     // single sigK pin at build; the returned plan reads caches.
     "q_c93_attrition_funnel" -> 320,
-    // q_c95 = 32 (r20, was 64): the persisted distinct-(id, h) frame's
-    // child is a 4-branch union (4 scans per print) referenced ~7
-    // times (sizes x2, df gate, both pair sides through kept) plus
-    // the now map-only signature pass's own 4-scan union read — the
-    // old sig path re-referenced the cached frame twice more. Print
-    // multiplication on ONE cached frame, one executed scan set
-    // (q_c91/q_c93 class).
-    "q_c95_lsh_recall" -> 32,
+    // q_c95 = 28 (was 32, r20 64): the persisted distinct-(id, h)
+    // frame's child is a 4-branch union (4 scans per print, printed
+    // as final + initial plan since the pin count runs it) referenced
+    // 3 times (sharedKeyPairs, sizes x2), plus the map-only signature
+    // pass's own 4-scan union read — now joined ONCE by both pair
+    // endpoints (it was read once per pair side). Print multiplication
+    // on ONE cached frame, one executed scan set (q_c91/q_c93 class).
+    "q_c95_lsh_recall" -> 28,
     // q_c96 = 24: four prefix-length branches each scan the embeddings
     // twice (probe broadcast + corpus candidates) and reference the
     // persisted full-dim ground truth (printed per reference) — the

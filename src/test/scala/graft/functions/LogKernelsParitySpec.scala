@@ -20,28 +20,9 @@ import java.nio.charset.StandardCharsets
  * Inputs travel as hex and are decoded with `cast(unhex(..) as
  * string)` so invalid UTF-8 reaches the kernels unchanged.
  */
-class LogKernelsParitySpec extends SparkSpec {
+class LogKernelsParitySpec extends SparkSpec with CodegenModes {
 
   import spark.implicits._
-
-  private val modes = Seq(
-    "whole-stage codegen" -> Map(
-      "spark.sql.codegen.wholeStage" -> "true",
-      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
-      "spark.sql.codegen.fallback" -> "false"),
-    "codegen off" -> Map(
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
-
-  private def withConfs[T](confs: Map[String, String])(body: => T): T = {
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 
   private def hex(b: Array[Byte]): String = b.map("%02X".format(_)).mkString
 

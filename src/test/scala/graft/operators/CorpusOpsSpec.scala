@@ -266,6 +266,43 @@ class CorpusOpsSpec extends SparkSpec {
     assert(est > 0.12 && est < 0.58, s"estimate $est too far from exact 0.333")
   }
 
+  /** md5₅₂ straight from the hex digest — independent of the kernel. */
+  private def md552(s: String): Long = java.lang.Long.parseLong(md5Hex(s).take(13), 16)
+
+  /** `TF.tokens`: Spark `trim` strips spaces only, then `split(_, "\\s+", -1)`. */
+  private def tokensOf(t: String): Seq[String] =
+    t.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse.split("\\s+", -1).toSeq
+
+  test("C68 sourceMinhash: per-source slot minima == brute force; null-only source has no row") {
+    val n = 3
+    val sigs = 8
+    val rows = Seq(
+      ("a", "alpha beta gamma delta epsilon"), ("a", "beta gamma delta"),
+      ("a", "short"), ("a", null),
+      ("b", "alpha beta gamma zeta"), ("b", "two words"), ("b", ""),
+      ("e", ""), ("e", "   "), ("e", " \t "),         // empty / whitespace-only only
+      ("z", null), ("z", null))                       // null-only source
+    val docs = rows.zipWithIndex.map { case ((src, t), i) => (i.toLong, src, t) }
+      .toDF("doc_id", "source", "text")
+    val got = CorpusPipeline.sourceSignatures(docs, n, sigs, "source", "text")
+      .collect().map(r => r.getString(0) -> (1 to sigs).map(r.getLong)).toMap
+    val want = rows.filter(_._2 != null).groupBy(_._1).map { case (src, ds) =>
+      val hs = ds.flatMap { case (_, t) =>
+        val tk = tokensOf(t)
+        if (tk.length < n) Seq(tk.mkString(" ")) else tk.sliding(n).map(_.mkString(" "))
+      }.map(md552).distinct
+      src -> (0 until sigs).map(j => hs.map(h => md552(s"${h}_$j")).min)
+    }
+    assert(got == want)
+    assert(!got.contains("z"))
+    val pairs = CorpusPipeline.sourceMinhash(docs, n = n, sigs = sigs)
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(pairs.keySet == Set(("a", "b"), ("a", "e"), ("b", "e")))
+    pairs.foreach { case ((x, y), agree) =>
+      assert(agree == (0 until sigs).count(j => want(x)(j) == want(y)(j)), s"($x, $y)")
+    }
+  }
+
   test("C69 winnowFingerprints: identical docs contain each other fully") {
     val rnd = new scala.util.Random(5)
     val shared = Seq.fill(20)("s" + rnd.nextInt(1000)).mkString(" ")
@@ -398,6 +435,30 @@ class CorpusOpsSpec extends SparkSpec {
     val flat = CorpusPipeline.vocabGrowth(dup, buckets = 8)
       .collect().map(r => (r.getLong(1), r.getLong(3)))
     flat.foreach { case (dc, vc) => assert(vc == (if (dc == 0) 0L else 6L)) }
+  }
+
+  test("C90 vocabGrowth: buckets = 4096 keeps every doc (md5₅₂·buckets exceeds a long)") {
+    val buckets = 4096
+    val texts = (0L until 60L).map(i => i -> s"w${i % 7} v$i common")
+    val docs = texts.toDF("doc_id", "text")
+    val out = CorpusPipeline.vocabGrowth(docs, buckets = buckets)
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    // reference bucket floor(h · B / 2⁵²) in exact BigInt arithmetic
+    val bucketOf = texts.map { case (i, _) =>
+      i -> ((BigInt(md552(i.toString)) * buckets) >> 52).toInt }.toMap
+    assert(bucketOf.values.exists(b => BigInt(b) * (BigInt(1) << 52) >= BigInt(Long.MaxValue)),
+      "some products must pass 2⁶³ for this case to test anything")
+    val firstSeen = texts.flatMap { case (i, t) => tokensOf(t).map(_ -> bucketOf(i)) }
+      .groupBy(_._1).map { case (_, bs) => bs.map(_._2).min }
+    val want = (0 until buckets).map { b =>
+      val in = texts.filter { case (i, _) => bucketOf(i) <= b }
+      (b, in.size.toLong, in.map(t => tokensOf(t._2).size.toLong).sum,
+        firstSeen.count(_ <= b).toLong)
+    }
+    assert(out.last._2 == texts.size.toLong, "docs_cum must reach the doc count")
+    assert(out.length == buckets)
+    val differ = out.toSeq.zip(want).filter { case (g, w) => g != w }
+    assert(differ.isEmpty, s"${differ.size} buckets differ, first: ${differ.take(3)}")
   }
 
   test("C79 repetitionProfile: a planted repeated phrase fires the dup-5-gram gate") {

@@ -83,6 +83,12 @@ class ScopedCacheSpec extends SparkSpec {
     assertScopedClean(CorpusPipeline.bm25TopK(docs, Seq("alpha", "gamma"), k = 5))
   }
 
+  test("lshRecallAudit under withCached leaves no cached plans") {
+    // persists the distinct (id, h) frame, also on the sampled path
+    assertScopedClean(Dedup.lshRecallAudit(docs, sigs = 8, bands = 4))
+    assertScopedClean(Dedup.lshRecallAudit(docs, sigs = 8, bands = 4, samplePpm = 500000L))
+  }
+
   test("ExactQuantiles.byGroup under withCached leaves no cached plans") {
     assertScopedClean(
       ExactQuantiles.byGroup(docs.withColumn("len", length(col("text"))),
