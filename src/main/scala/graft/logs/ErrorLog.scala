@@ -135,6 +135,13 @@ object ErrorLog {
       typed :+ col("__g").isNull.as("parse_error") :+ col("value").as("raw_line"): _*)
   }
 
+  /** The error-log format: `formatStr` > `conf`'s first ErrorLogFormat >
+   * Apache default. */
+  private def resolveFormat(spark: SparkSession, formatStr: String, conf: String): String =
+    if (formatStr.nonEmpty) formatStr
+    else if (conf.nonEmpty) formatFromConf(spark, conf).getOrElse(DefaultFormat)
+    else DefaultFormat
+
   /**
    * Read error-log files: `path` (file/dir/glob, gz/bz2 ok) with the
    * format resolved `formatStr` > `conf`'s first ErrorLogFormat >
@@ -145,13 +152,9 @@ object ErrorLog {
       path: String,
       formatStr: String = "",
       conf: String = "",
-      raw: Boolean = false): DataFrame = {
-    val fmt =
-      if (formatStr.nonEmpty) formatStr
-      else if (conf.nonEmpty) formatFromConf(spark, conf).getOrElse(DefaultFormat)
-      else DefaultFormat
-    parseLines(HttpdLog.lines(spark, path, rawMode = false).drop("log_file"), fmt, raw)
-  }
+      raw: Boolean = false): DataFrame =
+    parseLines(HttpdLog.lines(spark, path, rawMode = false).drop("log_file"),
+      resolveFormat(spark, formatStr, conf), raw)
 
   /** Per-file scan stats for error logs — [[HttpdLog.scanStats]]
    * semantics (total_rows / parse_errors / bytes_scanned per file, one
@@ -162,11 +165,7 @@ object ErrorLog {
       path: String,
       formatStr: String = "",
       conf: String = ""): DataFrame = {
-    val fmt =
-      if (formatStr.nonEmpty) formatStr
-      else if (conf.nonEmpty) formatFromConf(spark, conf).getOrElse(DefaultFormat)
-      else DefaultFormat
-    val (_, regex) = compile(fmt)
+    val (_, regex) = compile(resolveFormat(spark, formatStr, conf))
     val err = RegexGroups(col("value"), regex).isNull
     val cs = HttpdLog.statCounters(err)
     HttpdLog.lines(spark, path, rawMode = false).groupBy("log_file")

@@ -371,35 +371,23 @@ object CorpusPipeline {
 
   /**
    * C24: pack documents into `nShards` near-token-balanced shards (the
-   * "sequence packing" step before training-data serialization).
-   *
-   *  - `bySize = true` (default): round-robin over the global size rank
-   *    — sort by (tokens desc, id) is a fully parallel range-partitioned
-   *    sort, and the global rank comes from `zipWithIndex` (one extra
-   *    count job, O(partitions) driver state — the same scale shape as
-   *    [[ExactQuantiles]]). Near-perfect token balance even with heavy
-   *    tails.
-   *  - `bySize = false`: content-hashed shard (`md5Bucket`) — map-only
-   *    and reprocessing-stable; balanced only in expectation, the right
-   *    default when shards are large and a sort is not worth it.
+   * "sequence packing" step before training-data serialization):
+   * round-robin over the global size rank. The sort by (tokens desc,
+   * id) is a fully parallel range-partitioned sort, and the global rank
+   * comes from [[ExactQuantiles.withPosition]] (one extra count job,
+   * O(partitions) driver state). Near-perfect token balance even with
+   * heavy tails.
    */
   def packShards(
       docs: DataFrame,
       nShards: Int,
       idCol: String = "doc_id",
-      textCol: String = "text",
-      bySize: Boolean = true): DataFrame = {
+      textCol: String = "text"): DataFrame = {
     require(nShards > 0)
-    val spark = docs.sparkSession
-    val withTok = docs.withColumn("n_tok", TF.tokenCount(col(textCol)).cast(LongType))
-    if (!bySize) withTok.withColumn("shard", TF.md5Bucket(col(textCol), nShards))
-    else {
-      val sorted = withTok.sort(col("n_tok").desc, col(idCol))
-      val indexed = sorted.rdd.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i % nShards))
-      }
-      spark.createDataFrame(indexed, sorted.schema.add("shard", LongType))
-    }
+    val sorted = docs.withColumn("n_tok", TF.tokenCount(col(textCol)).cast(LongType))
+      .sort(col("n_tok").desc, col(idCol))
+    ExactQuantiles.withPosition(sorted, "shard")
+      .withColumn("shard", col("shard") % nShards)
   }
 
   /**
@@ -409,9 +397,9 @@ object CorpusPipeline {
    * with a new seed is just a new constant, and any engine with md5
    * reproduces the exact order, so the full permutation is
    * oracle-checkable. The sort is a parallel range-partitioned sort;
-   * the global position comes from `zipWithIndex` (one extra count
-   * job, O(partitions) driver state — same scale shape as
-   * [[packShards]] and [[ExactQuantiles]], no single-partition window).
+   * the global position comes from [[ExactQuantiles.withPosition]]
+   * (one extra count job, O(partitions) driver state, no
+   * single-partition window).
    */
   def shuffleOrder(
       docs: DataFrame,
@@ -419,15 +407,11 @@ object CorpusPipeline {
       seed: String = "graft",
       idCol: String = "doc_id"): DataFrame = {
     require(nShards > 0)
-    val spark = docs.sparkSession
-    val keyed = docs.withColumn("__k",
+    val sorted = docs.withColumn("__k",
       md5(concat(lit(seed), col(idCol).cast(StringType))))
-    val sorted = keyed.sort(col("__k"), col(idCol))
-    val indexed = sorted.rdd.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i :+ (i % nShards))
-    }
-    spark.createDataFrame(indexed,
-        sorted.schema.add("pos", LongType).add("shard", LongType))
+      .sort(col("__k"), col(idCol))
+    ExactQuantiles.withPosition(sorted, "pos")
+      .withColumn("shard", col("pos") % nShards)
       .drop("__k")
   }
 
@@ -443,7 +427,7 @@ object CorpusPipeline {
    * phase would reintroduce length/topic correlation batches).
    *
    * Scale shape: both global orders materialize through the
-   * [[shuffleOrder]] path — a distributed range sort + zipWithIndex,
+   * [[shuffleOrder]] path — a distributed range sort + row position,
    * never a single-partition window; the difficulty table is the
    * lmSurprisal join (vocab-bounded LM side); driver state = one
    * count. Output: per phase — size, rarity bounds, the first doc in
@@ -458,34 +442,24 @@ object CorpusPipeline {
       phases: Int = 4,
       seed: String = "curr"): DataFrame = {
     require(phases > 0)
-    val spark = docs.sparkSession
-    // persist the slim (id, rarity) table: the two chained zipWithIndex
+    // persist the slim (id, rarity) table: the two chained position
     // passes each fire an extra partition-count job, and uncached they
     // would re-run the whole lmSurprisal explode+join chain ~4x; the
     // count below doubles as the eager pin
     val sc0 = Scoped.persistTracked(
       lmSurprisal(docs, idCol, textCol).select(col(idCol), col("rarity")))
     val n = math.max(sc0.count(), 1L)
-    val sorted = sc0.sort(col("rarity"), col(idCol))
-    // persist the ranked RDD-backed frame too: the second zipWithIndex
+    // persist the ranked RDD-backed frame too: the second position pass
     // (partition-count job + map) and the final aggregate are
     // SEQUENTIAL consumers, so the first materialization populates the
     // cache (no eager pin needed — the checkpoint-per-round lesson)
-    val ranked = Scoped.persistTracked(spark.createDataFrame(
-      sorted.rdd.zipWithIndex.map { case (r, i) =>
-        Row.fromSeq(r.toSeq :+ i)
-      },
-      sorted.schema.add("__r", LongType)))
-    val phased = ranked
+    val ranked = Scoped.persistTracked(ExactQuantiles.withPosition(
+      sc0.sort(col("rarity"), col(idCol)), "__r"))
+    val ordered = ranked
       .withColumn("phase", expr(s"__r * $phases div ${n}L"))
       .withColumn("__k", md5(concat(lit(seed), col(idCol).cast(StringType))))
-    val ordered = phased.sort(col("phase"), col("__k"), col(idCol))
-    val curr = spark.createDataFrame(
-      ordered.rdd.zipWithIndex.map { case (r, i) =>
-        Row.fromSeq(r.toSeq :+ i)
-      },
-      ordered.schema.add("pos", LongType))
-    curr.groupBy("phase").agg(
+      .sort(col("phase"), col("__k"), col(idCol))
+    ExactQuantiles.withPosition(ordered, "pos").groupBy("phase").agg(
         count(lit(1)).as("n"),
         min("rarity").as("min_rarity"),
         max("rarity").as("max_rarity"),
@@ -2516,9 +2490,10 @@ object CorpusPipeline {
    * reprocessing and portable across engines).
    *
    * The returned DataFrame references a cached intermediate that stays
-   * cached until the caller unpersists or the session ends — use
-   * [[runAndRelease]] when the result is consumed once and the cache
-   * should not outlive it.
+   * cached until the session ends — wrap the call in
+   * [[Scoped.withCached]] when the result is consumed once and the
+   * cache should not outlive it:
+   * `Scoped.withCached(CorpusPipeline.run(docs))(_.write.parquet(out))`.
    */
   def run(
       docs: DataFrame,
@@ -2528,30 +2503,16 @@ object CorpusPipeline {
       blocklist: Option[Array[Byte]] = None,
       benchmark: Option[DataFrame] = None,
       trainPct: Int = 90,
-      valPct: Int = 5): DataFrame =
-    build(docs, idCol, textCol, nearDupThreshold, blocklist, benchmark,
-      trainPct, valPct)._1
-
-  /**
-   * Like [[run]], but scoped: materializes the result through `action`
-   * (e.g. `_.write.parquet(...)` or `_.collect()`), then unpersists the
-   * intermediate before returning — nothing stays cached. Prefer this
-   * in long-lived sessions (repeated [[run]] calls accumulate cached
-   * blocks until LRU eviction).
-   */
-  def runAndRelease[T](
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      nearDupThreshold: Double = 0.8,
-      blocklist: Option[Array[Byte]] = None,
-      benchmark: Option[DataFrame] = None,
-      trainPct: Int = 90,
-      valPct: Int = 5)(action: DataFrame => T): T = {
-    val (result, cached) = build(docs, idCol, textCol, nearDupThreshold,
-      blocklist, benchmark, trainPct, valPct)
-    try action(result)
-    finally cached.unpersist(blocking = false)
+      valPct: Int = 5): DataFrame = {
+    val gated = qualityFilter(annotate(redactPii(docs, textCol), textCol))
+    val blocked = blocklist.fold(gated)(bloomBlocklist(gated, _, textCol))
+    val clean = benchmark.fold(blocked)(decontaminate(blocked, _, idCol, textCol))
+    // near-dedup references its input several times (signatures, two
+    // verify joins, the final anti-join); without persistence each
+    // reference re-runs the whole upstream chain (~4x the work)
+    val exact = Scoped.persistTracked(Dedup.exact(clean, "fingerprint", idCol))
+    Dedup.dropNearDuplicates(exact, idCol, textCol, nearDupThreshold)
+      .withColumn("split", TF.hashSplit(col(textCol), trainPct, valPct))
   }
 
   /**
@@ -3054,27 +3015,5 @@ object CorpusPipeline {
           "THEN (sy - ((nb * sxy - sx * sy) div __den) * sx) div nb " +
           "ELSE NULL END").as("intercept_milli"))
       .orderBy(sourceCol)
-  }
-
-  private def build(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      nearDupThreshold: Double,
-      blocklist: Option[Array[Byte]],
-      benchmark: Option[DataFrame],
-      trainPct: Int,
-      valPct: Int): (DataFrame, DataFrame) = {
-    val gated = qualityFilter(annotate(redactPii(docs, textCol), textCol))
-    val blocked = blocklist.fold(gated)(bloomBlocklist(gated, _, textCol))
-    val clean = benchmark.fold(blocked)(decontaminate(blocked, _, idCol, textCol))
-    // near-dedup references its input several times (signatures, two
-    // verify joins, the final anti-join); without persistence each
-    // reference re-runs the whole upstream chain (~4x the work)
-    val exact = Dedup.exact(clean, "fingerprint", idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val near = Dedup.dropNearDuplicates(exact, idCol, textCol, nearDupThreshold)
-    val out = near.withColumn("split", TF.hashSplit(col(textCol), trainPct, valPct))
-    (out, exact)
   }
 }

@@ -146,11 +146,6 @@ object Embeddings {
       .orderBy("label")
   }
 
-  /** Projection of each vector onto the final component — the value a
-   * pipeline subtracts for "all-but-the-top"; exposed for specs. */
-  def project(quantVecCol: String, comp: Array[Long]): Column =
-    VF.dotLong(col(quantVecCol), typedlit(comp.toSeq))
-
   /**
    * C75: Johnson–Lindenstrauss ±1 random projection — the cheap
    * dimensionality cut before ANN/dedup when D is large: out dim `d`

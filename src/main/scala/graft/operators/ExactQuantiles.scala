@@ -122,13 +122,7 @@ object ExactQuantiles {
       .filter(col("g").isNotNull && col("v").isNotNull)
       .repartitionByRange(spark.sparkContext.defaultParallelism, col("g"), col("v"))
       .sortWithinPartitions("g", "v")
-    val positioned = spark.createDataFrame(
-      sorted.rdd.zipWithIndex.map { case (r, i) =>
-        Row(r.getString(0), r.getDouble(1), i)
-      },
-      StructType(Seq(StructField("g", StringType), StructField("v", DoubleType),
-        StructField("pos", LongType))))
-      .transform(Scoped.persistTracked)
+    val positioned = withPosition(sorted, "pos").transform(Scoped.persistTracked)
     positioned.count() // pin: feeds the offsets aggregate AND the rank join
     val stats = positioned.groupBy("g")
       .agg(min(col("pos")).as("p0"), count(lit(1)).as("cnt"))
@@ -153,6 +147,17 @@ object ExactQuantiles {
     ranked.join(broadcast(keyMap), Seq("__gs"))
       .select(col(groupCol), col("fraction"), col("value"))
   }
+
+  /** `sorted` with each row's global 0-based position in sort order
+   * appended as the long column `posCol` — one partition-count job plus
+   * a map over the sorted RDD, O(partitions) driver state, never a
+   * single-partition window. The position step of [[byGroup]] and of
+   * the CorpusPipeline orderings (packShards, shuffleOrder,
+   * curriculumOrder). */
+  private[operators] def withPosition(sorted: DataFrame, posCol: String): DataFrame =
+    sorted.sparkSession.createDataFrame(
+      sorted.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) },
+      sorted.schema.add(posCol, org.apache.spark.sql.types.LongType))
 
   /** DataFrame wrapper: one row of quantile columns (q_<pct>). */
   def ofAsRow(df: DataFrame, valueCol: String, fractions: Seq[Double]): DataFrame = {

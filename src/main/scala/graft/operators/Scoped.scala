@@ -10,15 +10,14 @@ import org.apache.spark.storage.StorageLevel
  * references a persisted intermediate (semDedup, semDedupHierarchical,
  * invertedIndex, lmBigramSurprisal, docTopTerms, sourceDivergence,
  * importanceScore, sourceOverlapGeneral, Graph.pageRank,
- * ExactQuantiles.byGroup). Those operators persist because the
- * intermediate feeds several differently-keyed shuffles — correct for
- * one-shot use, but a long-lived session looping over corpora
- * accumulates cached blocks until LRU eviction.
+ * ExactQuantiles.byGroup, CorpusPipeline.run). Those operators
+ * persist because the intermediate feeds several differently-keyed
+ * shuffles — correct for one-shot use, but a long-lived session
+ * looping over corpora accumulates cached blocks until LRU eviction.
  *
- * [[withCached]] is the `CorpusPipeline.runAndRelease` pattern
- * generalized: build the plan, materialize it through `action`, then
- * unpersist every intermediate the build registered — nothing stays
- * cached:
+ * [[withCached]] builds the plan, materializes it through `action`,
+ * then unpersists every intermediate the build registered — nothing
+ * stays cached:
  *
  * {{{
  * val kept = Scoped.withCached(Dedup.semDedup(docs, "id", "qv", 256, 0.95)) {

@@ -355,13 +355,15 @@ object LogStream {
       textCol: String = "text",
       sigs: Int = 8,
       bands: Int = 4,
-      shingle: Int = 3,
-      hashKeys: Boolean = true): Dataset[LeakHit] = {
+      shingle: Int = 3): Dataset[LeakHit] = {
     import docs.sparkSession.implicits._
     require(sigs >= 1 && sigs <= 64 && bands >= 1 && sigs % bands == 0,
       s"sigs=$sigs must be in [1,64] and a multiple of bands=$bands")
     val rpb = sigs / bands
-    def bandKeys(d: DataFrame): Dataset[BandKey] = {
+    // The state key is xxhash64(band, bk), bk being the band's
+    // comma-joined slot values: 8 bytes on the grouping exchange and in
+    // the state store instead of the "band:slot,slot" string.
+    def bandKeys(d: DataFrame): Dataset[BandKeyK] = {
       val sig = graft.functions.Md5MinhashSig(
         graft.functions.TextFunctions.tokens(col(textCol)), shingle, sigs)
       val bandCols = (0 until bands).map { b =>
@@ -372,32 +374,11 @@ object LogStream {
         .filter(col("__sig").isNotNull) // null text -> no bands, no rows
         .select(col("doc_id"),
           posexplode(array(bandCols: _*)).as(Seq("band", "bk")))
-        .as[BandKey]
-    }
-    if (hashKeys) {
-      // The batch hashed-key rule at the stream edge: the state
-      // key is xxhash64(band, bk) — 8 bytes on the grouping exchange
-      // and in the state store instead of the "band:slot,slot" string.
-      // Output-identical modulo a 64-bit collision (LogStreamSpec pins
-      // hashed ≡ string verdicts).
-      def keyed(d: Dataset[BandKey]): Dataset[BandKeyK] = d
         .select(col("doc_id"), col("band"),
-          xxhash64(col("band"), col("bk")).as("k")).as[BandKeyK]
-      leakGateKeyed(keyed(bandKeys(docs)), keyed(bandKeys(corpus)))
-    } else {
-      // ONE row per bucket: initialState rejects duplicate keys (the
-      // D18 pre-aggregate rule)
-      val init = bandKeys(corpus)
-        .groupBy(col("band"), col("bk"))
-        .agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"), col("band"), col("bk")).as[BandKey]
-        .groupByKey(h => s"${h.band}:${h.bk}")
-        .mapValues(_ => TrainMark(1))
-      bandKeys(docs)
-        .groupByKey(h => s"${h.band}:${h.bk}")
-        .flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.NoTimeout, init)(leakGateFunc)
+          xxhash64(col("band"), col("bk")).as("k"))
+        .as[BandKeyK]
     }
+    leakGateKeyed(bandKeys(docs), bandKeys(corpus))
   }
 
   /** D32's hashed warm-start step: `corpus` bucket keys seed the
@@ -419,13 +400,6 @@ object LogStream {
       .flatMapGroupsWithState(
         OutputMode.Append, GroupStateTimeout.NoTimeout, init)(leakGateFuncK)
   }
-
-  private val leakGateFunc:
-      (String, Iterator[BandKey], GroupState[TrainMark]) => Iterator[LeakHit] =
-    (_, batch, state) =>
-      // read-only: presence of state == the bucket holds train content
-      if (state.exists) batch.map(h => LeakHit(h.doc_id, h.band))
-      else Iterator.empty
 
   private val leakGateFuncK:
       (Long, Iterator[BandKeyK], GroupState[TrainMark]) => Iterator[LeakHit] =
@@ -453,96 +427,66 @@ object LogStream {
    *
    * State is one (count, packed owner) pair per distinct corpus gram —
    * the RocksDB-backed store (the r11 default here) is the point at
-   * corpus scale. `hashKeys` (default true since r20) keys the state
-   * by xxhash64(g) exactly as the batch scale path does — verdicts
-   * depend only on grouping identity, so the oracle's string-gram
-   * replay still hash-matches (LogStreamSpec pins hashed ≡ string).
+   * corpus scale. The state is keyed by xxhash64(g), exactly the
+   * batch ExactSubstr key — verdicts depend only on grouping identity
+   * ((doc, pos), never the gram text), so the oracle's string-gram
+   * replay still hash-matches modulo a 64-bit collision (LogStreamSpec
+   * checks the verdicts against a string-keyed Scala reference).
    */
   def exactSubstrStream(
       docs: DataFrame,
       corpus: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      n: Int = 8,
-      hashKeys: Boolean = true): Dataset[ScrubStart] = {
+      n: Int = 8): Dataset[ScrubStart] = {
     import docs.sparkSession.implicits._
     require(n > 0)
-    def occs(d: DataFrame): Dataset[GramOcc] = {
+    // one row per positioned gram, keyed by xxhash64(g): the warm-start
+    // aggregate, the per-batch grouping exchange and every state-store
+    // key carry 8 bytes instead of the n-token gram string
+    def occs(d: DataFrame): Dataset[GramOccK] = {
       val t = graft.functions.TextFunctions.tokens(col(textCol))
       d.select(col(idCol).cast("long").as("doc_id"), t.as("__t"))
         .filter(size(col("__t")) >= n)
         .select(col("doc_id"),
           posexplode(graft.functions.WordShingles(col("__t"), n))
             .as(Seq("pos", "g")))
-        .as[GramOcc]
-    }
-    val packed = col("doc_id") * lit(1L << 32) + col("pos")
-    if (hashKeys) {
-      // r20: key the state by xxhash64(g) — exactly the batch
-      // ExactSubstr scale path's key — so the warm-start aggregate,
-      // the per-batch grouping exchange, and every state-store key
-      // carry 8 bytes instead of the n-token gram string. Verdicts
-      // only depend on grouping identity ((doc, pos) never the gram
-      // text), so output is identical modulo a 64-bit collision (the
-      // accepted batch-wide trade; LogStreamSpec pins hashed ≡ string
-      // verdicts).
-      val init = occs(corpus)
-        .groupBy(xxhash64(col("g")).as("gk"))
-        .agg(count(lit(1)).as("c"), min(packed).as("o"))
-        .as[GramStateRowK]
-        .groupByKey(_.gk)
-        .mapValues(r => GramOwnerState(r.c, r.o))
-      occs(docs)
         .select(col("doc_id"), col("pos"), xxhash64(col("g")).as("gk"))
         .as[GramOccK]
-        .groupByKey(_.gk)
-        .flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.NoTimeout, init)(exactSubstrFuncK)
-    } else {
-      val init = occs(corpus)
-        .groupBy(col("g"))
-        .agg(count(lit(1)).as("c"), min(packed).as("o"))
-        .as[GramStateRow]
-        .groupByKey(_.g)
-        .mapValues(r => GramOwnerState(r.c, r.o))
-      occs(docs)
-        .groupByKey(_.g)
-        .flatMapGroupsWithState(
-          OutputMode.Append, GroupStateTimeout.NoTimeout, init)(exactSubstrFunc)
     }
+    val packed = col("doc_id") * lit(1L << 32) + col("pos")
+    val init = occs(corpus)
+      .groupBy(col("gk"))
+      .agg(count(lit(1)).as("c"), min(packed).as("o"))
+      .as[GramStateRowK]
+      .groupByKey(_.gk)
+      .mapValues(r => GramOwnerState(r.c, r.o))
+    occs(docs)
+      .groupByKey(_.gk)
+      .flatMapGroupsWithState(
+        OutputMode.Append, GroupStateTimeout.NoTimeout, init)(exactSubstrFuncK)
   }
 
-  /** Shared D31 transition fold over (doc_id, pos) occurrences —
-   * identical under string and hashed keys (the key itself is never
-   * read). Packed order inside the batch: a batch-mate with a smaller
+  /** D31 transition fold over one gram's (doc_id, pos) occurrences.
+   * Packed order inside the batch: a batch-mate with a smaller
    * (doc, pos) must claim ownership BEFORE later occurrences are
    * judged (the nearDupFunc fold-before-emit rule). */
-  private def exactSubstrFold(
-      batch: Iterator[(Long, Int)],
-      state: GroupState[GramOwnerState]): Iterator[ScrubStart] = {
-    var cnt = 0L
-    var own = Long.MaxValue
-    state.getOption.foreach { s => cnt = s.count; own = s.owner }
-    val out = Vector.newBuilder[ScrubStart]
-    batch.toVector.sortBy(o => o._1 * (1L << 32) + o._2).foreach { o =>
-      val p = o._1 * (1L << 32) + o._2
-      cnt += 1
-      if (p < own) own = p
-      if (cnt > 1 && p != own) out += ScrubStart(o._1, o._2)
-    }
-    state.update(GramOwnerState(cnt, own))
-    out.result().iterator
-  }
-
-  private val exactSubstrFunc:
-      (String, Iterator[GramOcc], GroupState[GramOwnerState]) => Iterator[ScrubStart] =
-    (_, batch, state) =>
-      exactSubstrFold(batch.map(o => (o.doc_id, o.pos)), state)
-
   private val exactSubstrFuncK:
       (Long, Iterator[GramOccK], GroupState[GramOwnerState]) => Iterator[ScrubStart] =
-    (_, batch, state) =>
-      exactSubstrFold(batch.map(o => (o.doc_id, o.pos)), state)
+    (_, batch, state) => {
+      var cnt = 0L
+      var own = Long.MaxValue
+      state.getOption.foreach { s => cnt = s.count; own = s.owner }
+      val out = Vector.newBuilder[ScrubStart]
+      batch.toVector.sortBy(o => o.doc_id * (1L << 32) + o.pos).foreach { o =>
+        val p = o.doc_id * (1L << 32) + o.pos
+        cnt += 1
+        if (p < own) own = p
+        if (cnt > 1 && p != own) out += ScrubStart(o.doc_id, o.pos)
+      }
+      state.update(GramOwnerState(cnt, own))
+      out.result().iterator
+    }
 
   /**
    * D23: streaming funnel state machine — B18's ordered
@@ -1140,19 +1084,13 @@ final case class BucketOwner(id: Long)
 /** One image document for driver-fed streaming harnesses (D21). */
 final case class MediaDoc(doc_id: Long, img: Array[Byte])
 
-/** One positioned n-gram occurrence flowing into the firewall (D31). */
-final case class GramOcc(doc_id: Long, pos: Int, g: String)
-
-/** [[GramOcc]] under `hashKeys` (r20): the state key is the gram's
- * xxhash64 — the batch ExactSubstr scale path's key — so the
- * state-store key and the grouping exchange carry 8 bytes instead of
- * the n-token gram string (D31). */
+/** One positioned n-gram occurrence flowing into the firewall (D31):
+ * the state key `gk` is the gram's xxhash64 — the batch ExactSubstr
+ * key — so the state-store key and the grouping exchange carry 8
+ * bytes instead of the n-token gram string. */
 final case class GramOccK(doc_id: Long, pos: Int, gk: Long)
 
 /** One corpus gram's batch-aggregated warm-start row (D31). */
-final case class GramStateRow(g: String, c: Long, o: Long)
-
-/** [[GramStateRow]] under `hashKeys` (r20, D31). */
 final case class GramStateRowK(gk: Long, c: Long, o: Long)
 
 /** Internal per-gram state: occurrences seen + min packed owner (D31). */
@@ -1162,13 +1100,9 @@ final case class GramOwnerState(count: Long, owner: Long)
  * non-canonical n-gram — drop its [pos, pos+n−1] tokens (D31). */
 final case class ScrubStart(doc_id: Long, pos: Int)
 
-/** One (doc, band) key flowing into the leakage gate (D32): `bk` is
- * the comma-joined md5₅₂ slot values of the band. */
-final case class BandKey(doc_id: Long, band: Int, bk: String)
-
-/** [[BandKey]] under `hashKeys` (r20): `k` = xxhash64(band, bk) — the
- * state key and grouping exchange carry 8 bytes instead of the
- * "band:slot,slot" string (D32). */
+/** One (doc, band) key flowing into the leakage gate (D32): `k` =
+ * xxhash64(band, bk), bk being the comma-joined md5₅₂ slot values of
+ * the band. */
 final case class BandKeyK(doc_id: Long, band: Int, k: Long)
 
 /** Marker state: the bucket holds train content (D32; read-only). */

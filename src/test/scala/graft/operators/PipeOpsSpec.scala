@@ -307,10 +307,11 @@ class PipeOpsSpec extends SparkSpec {
     val c = CorpusPipeline.packShards(docs, 4)
       .select("doc_id", "shard").collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(b == c)
-    // hash mode: map-only, every shard populated, content-stable
-    val h = CorpusPipeline.packShards(docs, 4, bySize = false)
-      .groupBy("shard").count().collect()
-    assert(h.length == 4)
+    // Scala reference: rank by (tokens desc, id), deal round-robin
+    val ref = (1 to 200).map(i => (i.toLong, i % 37 + 3))
+      .sortBy { case (id, n) => (-n, id) }
+      .zipWithIndex.map { case ((id, _), r) => id -> (r % 4).toLong }.toMap
+    assert(b == ref)
   }
 
   test("C28 shuffleOrder is a balanced permutation, stable across partitionings") {

@@ -95,6 +95,11 @@ class ScopedCacheSpec extends SparkSpec {
         "source", "len", Seq(0.0, 0.5, 1.0)))
   }
 
+  test("CorpusPipeline.run under withCached leaves no cached plans") {
+    // the persisted exact-dedup intermediate is released with the scope
+    assertScopedClean(CorpusPipeline.run(docs, nearDupThreshold = 0.9))
+  }
+
   test("scopes nest: inner scope releases only its own intermediates") {
     spark.catalog.clearCache()
     Scoped.withCached {

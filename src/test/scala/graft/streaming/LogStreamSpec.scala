@@ -2,9 +2,12 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.streaming.{SessionEvent, SessionUpdate}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import java.io.File
 import java.sql.Timestamp
 
 /** D1/D2 streaming specs: parse-in-stream + watermarked windows, and
@@ -154,53 +157,77 @@ class LogStreamSpec extends SparkSpec {
     assert(run(cands.reverse) == fwd)
   }
 
-  test("D31/D32 hashKeys parity: xxhash64 state keys produce identical verdicts") {
-    // r20: both gates default to 8-byte xxhash64 state keys (the batch
-    // hashKeys rule at the stream edge). Verdicts depend only on
-    // grouping identity, so hashed ≡ string bit-for-bit — pinned here
-    // over corpus copies, shared-prefix tails, fresh docs, and
-    // stream-stream dups across batches (the shapes that exercise
-    // warm-start state, in-batch folds, and cross-batch state).
+  test("D31/D32 verdicts match a string-keyed Scala reference") {
+    // Both gates key their state by xxhash64; the reference groups by
+    // the exact gram / band strings, so any key or fold divergence
+    // shows. The shapes: corpus copies, shared-prefix tails, fresh docs,
+    // stream-stream dups across batches, a batch fed in DESCENDING id
+    // order (the fold must sort it), and a doc repeating its own gram.
     implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
+    val corpusRows = Seq(
       (1L, "a1 a2 a3 a4 a5 a6 a7 a8 trailer"),
       (2L, "z1 z2 z3 z4 z5 z6 z7 z8"),
-      (3L, "t1 t2 t3 t4 t5 t6")).toDF("doc_id", "text")
+      (3L, "t1 t2 t3 t4 t5 t6"))
+    val corpus = corpusRows.toDF("doc_id", "text")
     val batches = Seq(
       Seq((10L, "a1 a2 a3 a4 a5 a6 a7 a8 trailer own10"),
         (11L, "f1 f2 f3 f4 f5 f6 f7 f8 f9"),
         (13L, "t1 t2 t3 t4 t5 t6")),
-      Seq((12L, "f1 f2 f3 f4 f5 f6 f7 f8 f9")))
-    def runSubstr(hashKeys: Boolean): Set[(Long, Int)] = {
+      Seq((12L, "f1 f2 f3 f4 f5 f6 f7 f8 f9")),
+      Seq((15L, "g1 g2 g3 g4 g5 g6 g7 g8 g9 tail15"),
+        (14L, "g1 g2 g3 g4 g5 g6 g7 g8 g9")),
+      Seq((16L, "r1 r2 r3 r4 r5 r6 r7 r8 r1 r2 r3 r4 r5 r6 r7 r8")))
+    val streamRows = batches.flatten
+    def run(gate: DataFrame => Dataset[_], prefix: String): Set[(Long, Int)] = {
       val mem = MemoryStream[(Long, String)]
-      val name = s"d31_hk_${hashKeys}_${System.nanoTime()}"
-      val q = LogStream.exactSubstrStream(
-          mem.toDF().toDF("doc_id", "text"), corpus, hashKeys = hashKeys)
+      val name = s"${prefix}_${System.nanoTime()}"
+      val q = gate(mem.toDF().toDF("doc_id", "text"))
         .writeStream.format("memory").queryName(name).outputMode("append").start()
       try {
         batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
         spark.table(name).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
       } finally q.stop()
     }
-    def runGate(hashKeys: Boolean): Set[(Long, Int)] = {
-      val mem = MemoryStream[(Long, String)]
-      val name = s"d32_hk_${hashKeys}_${System.nanoTime()}"
-      val q = LogStream.leakageGateStream(
-          mem.toDF().toDF("doc_id", "text"), corpus, hashKeys = hashKeys)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try {
-        batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-        spark.table(name).collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-      } finally q.stop()
-    }
-    val substrHashed = runSubstr(true)
-    assert(substrHashed == runSubstr(false),
-      "D31 hashed state keys must not change scrub verdicts")
-    assert(substrHashed.nonEmpty, "expected scrub starts in the parity corpus")
-    val gateHashed = runGate(true)
-    assert(gateHashed == runGate(false),
-      "D32 hashed state keys must not change leak verdicts")
-    assert(gateHashed.exists(_._1 == 13L), "corpus copy must leak")
+    // D31 reference: walk every occurrence in (doc, pos) order, grouped
+    // by the gram string; a stream occurrence is a scrub start iff the
+    // count so far is > 1 and it is not the minimum owner
+    val n = 8
+    val occs = (corpusRows ++ streamRows).flatMap { case (id, text) =>
+      text.split(" ").sliding(n).filter(_.length == n).zipWithIndex
+        .map { case (g, pos) => (id, pos, g.mkString(" ")) }
+    }.sortBy(o => (o._1, o._2))
+    val streamIds = streamRows.map(_._1).toSet
+    val seen = scala.collection.mutable.Map.empty[String, (Long, (Long, Int))]
+    val substrRef = occs.flatMap { case (id, pos, g) =>
+      val (c, own) = seen.get(g).fold((1L, (id, pos))) { case (c0, o0) =>
+        (c0 + 1, Ordering[(Long, Int)].min(o0, (id, pos)))
+      }
+      seen(g) = (c, own)
+      if (streamIds(id) && c > 1 && own != ((id, pos))) Some((id, pos)) else None
+    }.toSet
+    val substr = run(LogStream.exactSubstrStream(_, corpus, n = n), "d31_ref")
+    assert(substr == substrRef, "D31 verdicts must match the string reference")
+    assert(substr.map(_._1) == Set(10L, 12L, 15L, 16L), substr)
+    // D32 reference: a (doc, band) is a hit iff its exact band string
+    // occurs among the corpus's band strings of the same band; the
+    // signatures come from a batch select of the gate's own expression
+    val (sigs, bands) = (8, 4)
+    def bandStrings(rows: Seq[(Long, String)]): Seq[(Long, Int, String)] =
+      rows.toDF("doc_id", "text")
+        .select($"doc_id", graft.functions.Md5MinhashSig(
+          graft.functions.TextFunctions.tokens($"text"), 3, sigs).as("sig"))
+        .collect().toSeq.flatMap { r =>
+          val sig = r.getSeq[Long](1)
+          sig.grouped(sigs / bands).zipWithIndex
+            .map { case (slots, b) => (r.getLong(0), b, slots.mkString(",")) }
+        }
+    val trainBands = bandStrings(corpusRows).map(t => (t._2, t._3)).toSet
+    val gateRef = bandStrings(streamRows)
+      .collect { case (id, b, s) if trainBands((b, s)) => (id, b) }.toSet
+    val gate = run(LogStream.leakageGateStream(_, corpus, sigs = sigs, bands = bands),
+      "d32_ref")
+    assert(gate == gateRef, "D32 verdicts must match the string reference")
+    assert((0 until bands).forall(b => gate((13L, b))), s"corpus copy must leak: $gate")
   }
 
   test("D32 forced collision: buckets sharing a hashed key merge, the query still runs") {
@@ -222,6 +249,96 @@ class LogStreamSpec extends SparkSpec {
       q.processAllAvailable()
       assert(spark.table(name).as[LeakHit].collect().toSet == Set(LeakHit(10L, 3)))
     } finally q.stop()
+  }
+
+  /** Chunk `i` as one JSON file whose mtime orders it after chunk
+   * i − 1: the file source takes new files in mtime order, one file per
+   * micro-batch under maxFilesPerTrigger = 1. */
+  private def writeChunk(root: File, i: Int, rows: Seq[(Long, String)]): Unit = {
+    val src = new File(root, "src")
+    src.mkdirs()
+    val f = new File(src, f"chunk-$i%03d.json")
+    java.nio.file.Files.writeString(f.toPath,
+      rows.map { case (id, t) => s"""{"doc_id":$id,"text":"$t"}""" }.mkString("", "\n", "\n"))
+    f.setLastModified(1700000000000L + i * 1000L)
+  }
+
+  /** Run `stream` over every chunk under `root`/src not yet committed to
+   * `root`/ckpt, to a parquet sink at `root`/out, then stop. */
+  private def runAvailable(root: File, stream: DataFrame => Dataset[_]): Unit = {
+    val docs = spark.readStream.schema("doc_id LONG, text STRING")
+      .option("maxFilesPerTrigger", "1").json(new File(root, "src").getAbsolutePath)
+    stream(docs).writeStream.format("parquet")
+      .option("checkpointLocation", new File(root, "ckpt").getAbsolutePath)
+      .option("path", new File(root, "out").getAbsolutePath)
+      .trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+  }
+
+  private val resumeCorpus = Seq(
+    (1L, "a1 a2 a3 a4 a5 a6 a7 a8 trailer"),
+    (3L, "t1 t2 t3 t4 t5 t6"))
+  private val resumeChunks = Seq(
+    Seq((10L, "a1 a2 a3 a4 a5 a6 a7 a8 trailer own10"), (11L, "f1 f2 f3 f4 f5 f6 f7 f8 f9")),
+    Seq((12L, "f1 f2 f3 f4 f5 f6 f7 f8 f9"), (13L, "t1 t2 t3 t4 t5 t6")),
+    Seq((14L, "a1 a2 a3 a4 a5 a6 a7 a8 trailer"), (15L, "g1 g2 g3 g4 g5 g6 g7 g8 g9")),
+    Seq((16L, "g1 g2 g3 g4 g5 g6 g7 g8 g9 tail16"), (17L, "f1 f2 f3 f4 f5 f6 f7 f8 f9 f10")))
+
+  test("D31/D32 kill-and-resume equals one uninterrupted run") {
+    // Under StateStoreConf.recommended (RocksDB + changelog).
+    // Interrupted: feed half the chunks, stop, resume from the same
+    // checkpoint with the rest. Each row names a post-resume verdict that
+    // needs restored state: 14 copies a warm-start corpus doc, and 17
+    // repeats doc 11 from before the kill.
+    val corpus = resumeCorpus.toDF("doc_id", "text")
+    val gates: Seq[(String, DataFrame => Dataset[_], (Long, Int))] = Seq(
+      ("D31", LogStream.exactSubstrStream(_, corpus), (17L, 0)),
+      ("D32", LogStream.leakageGateStream(_, corpus), (14L, 0)))
+    def run(gate: DataFrame => Dataset[_], killAfter: Int): Set[(Long, Int)] = {
+      val root = java.nio.file.Files.createTempDirectory("graft_resume_").toFile
+      root.deleteOnExit()
+      resumeChunks.zipWithIndex.foreach { case (rows, i) =>
+        writeChunk(root, i, rows)
+        if (i + 1 == killAfter) runAvailable(root, gate) // "kill" here
+      }
+      runAvailable(root, gate)
+      spark.read.parquet(new File(root, "out").getAbsolutePath).collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSet
+    }
+    graft.operators.Scoped.withConf(spark, StateStoreConf.recommended: _*) {
+      gates.foreach { case (name, gate, needsState) =>
+        val cut = run(gate, killAfter = resumeChunks.length / 2)
+        val whole = run(gate, killAfter = 0)
+        assert(cut == whole, s"$name interrupted vs uninterrupted:\n$cut\n$whole")
+        assert(cut.contains(needsState), s"$name: state lost on resume: $cut")
+      }
+    }
+  }
+
+  test("D32 resume on a String-keyed checkpoint fails loudly") {
+    // A checkpoint written by a String-keyed gate (the shape of the
+    // retired string-key twin) must not resume silently under the long
+    // xxhash64 key.
+    val corpus = resumeCorpus.toDF("doc_id", "text")
+    val stringKeyed: DataFrame => Dataset[_] = d => d.as[(Long, String)]
+      .groupByKey(_._2)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        (_: String, rows: Iterator[(Long, String)], s: GroupState[TrainMark]) => {
+          s.update(TrainMark(1))
+          rows.map(r => LeakHit(r._1, 0))
+        })
+    graft.operators.Scoped.withConf(spark, StateStoreConf.recommended: _*) {
+      val root = java.nio.file.Files.createTempDirectory("graft_resume_sk_").toFile
+      root.deleteOnExit()
+      writeChunk(root, 0, resumeChunks(0))
+      runAvailable(root, stringKeyed)
+      writeChunk(root, 1, resumeChunks(1))
+      val err = intercept[Exception](
+        runAvailable(root, LogStream.leakageGateStream(_, corpus)))
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(e => String.valueOf(e.getMessage)
+          .contains("STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE")), err)
+    }
   }
 
   test("StateStoreConf: the library owns the production state-store shape") {
@@ -1043,80 +1160,19 @@ class LogStreamSpec extends SparkSpec {
       out)
   }
 
-  test("D36: kill-resume across the eviction boundary stays hash-stable") {
-    // The interrupted run (restart between the eviction-driving batch
-    // and the re-fetch) must produce the SAME records as one
-    // uninterrupted run over the same files — watermark and timeout
-    // state restore from the checkpoint.
-    val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00").getTime
-    def run(root: java.io.File, chunks: Seq[Seq[(Long, String, String, Long)]],
-        restartAfter: Int): Seq[(String, String, String)] = {
-      val src = new java.io.File(root, "src").getAbsolutePath
-      val out = new java.io.File(root, "out").getAbsolutePath
-      val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
-      def go(): Unit = {
-        val sch = spark.read.parquet(src).schema
-        val stream = spark.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
-          .select(col("url"),
-            concat(lit("<urn:uuid:"), col("ord").cast("string"), lit(">"))
-              .as("rid"),
-            lit("2026-01-01T00:00:00Z").as("dt"), lit(200).as("st"),
-            lit("text/plain").as("mi"), col("text").cast("binary").as("pl"),
-            col("ord"), (col("ms") / 1000).cast("timestamp").as("ets"))
-        val recs = LogStream.archiveDedupStream(stream, "url", "rid", "dt",
-          "st", "mi", "pl", "ord", eventTimeCol = "ets",
-          retentionMs = 10000L)
-        val q = graft.sources.Warc.streamMemberWriter(
-            recs.select(col("rec")), "rec", out, "arc")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      chunks.zipWithIndex.foreach { case (rows, i) =>
-        rows.toDF("ord", "url", "text", "ms").coalesce(1)
-          .write.mode("append").parquet(src)
-        if (i + 1 == restartAfter) go() // "kill" here, resume later
-      }
-      go()
-      graft.sources.Warc.read(spark, out).collect()
-        .map(r => (r.getAs[String]("target_uri"),
-          r.getAs[String]("warc_type"),
-          r.getAs[String]("refers_to"))).sortBy(_._1).toSeq
-    }
-    val chunks = Seq(
-      Seq((1L, "http://x/1", "payload X", t0)),
-      Seq((2L, "http://x/2", "payload Z", t0 + 30000L)),
-      Seq((3L, "http://x/3", "payload W", t0 + 31000L)),
-      Seq((4L, "http://x/4", "payload X", t0 + 35000L)))
-    val rootA = java.nio.file.Files.createTempDirectory("graft_d36ra_").toFile
-    val rootB = java.nio.file.Files.createTempDirectory("graft_d36rb_").toFile
-    rootA.deleteOnExit(); rootB.deleteOnExit()
-    // A: restart right after the watermark-advancing batch (the
-    // eviction boundary); B: one uninterrupted run
-    val a = run(rootA, chunks, restartAfter = 2)
-    val b = run(rootB, chunks, restartAfter = 0)
-    assert(a == b, s"interrupted vs uninterrupted:\n$a\n$b")
-    // and the boundary semantics themselves: the post-horizon X
-    // re-fetch is a NEW OWNER (response), not a revisit
-    assert(a.find(_._1 == "http://x/4").get._2 == "response", a)
-  }
-
-  test("D36: owner state survives kill-and-resume from the checkpoint") {
-    // The production property the MemoryStream case cannot show: a
-    // RESTARTED query restores the (payload -> owner) state from the
-    // state store, so a post-restart fetch of a pre-restart payload
-    // still becomes a revisit — not a second owner.
-    val root = java.nio.file.Files.createTempDirectory("graft_d36kr_").toFile
+  /** D36 over (ord, url, text, ms) chunks through a parquet file
+   * source to the WARC member sink: each chunk is one micro-batch; the
+   * query runs AvailableNow after chunk `killAfter` ("kill") and resumes
+   * from the same checkpoint over the rest (0 = one uninterrupted run).
+   * `retentionMs` ≥ 0 turns on eviction with `ms` as event time.
+   * Returns target_uri -> (warc_type, refers_to). */
+  private def archiveResume(chunks: Seq[Seq[(Long, String, String, Long)]],
+      killAfter: Int, retentionMs: Long = -1L): Map[String, (String, String)] = {
+    val root = java.nio.file.Files.createTempDirectory("graft_d36r_").toFile
     root.deleteOnExit()
-    val src = new java.io.File(root, "src").getAbsolutePath
-    val out = new java.io.File(root, "out").getAbsolutePath
-    val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
-    def writeChunk(rows: Seq[(Long, String, String)]): Unit =
-      rows.toDF("ord", "url", "text").coalesce(1)
-        .write.mode("append").parquet(src)
-    def run(): Unit = {
+    val src = new File(root, "src").getAbsolutePath
+    val out = new File(root, "out").getAbsolutePath
+    def go(): Unit = {
       val sch = spark.read.parquet(src).schema
       val stream = spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
@@ -1125,24 +1181,58 @@ class LogStreamSpec extends SparkSpec {
             .as("rid"),
           lit("2026-01-01T00:00:00Z").as("dt"), lit(200).as("st"),
           lit("text/plain").as("mi"), col("text").cast("binary").as("pl"),
-          col("ord"))
+          col("ord"), (col("ms") / 1000).cast("timestamp").as("ets"))
       val recs = LogStream.archiveDedupStream(stream, "url", "rid", "dt",
-        "st", "mi", "pl", "ord")
-      val q = graft.sources.Warc.streamMemberWriter(
-          recs.select(col("rec")), "rec", out, "arc")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        "st", "mi", "pl", "ord", eventTimeCol = "ets", retentionMs = retentionMs)
+      graft.sources.Warc.streamMemberWriter(recs.select(col("rec")), "rec", out, "arc")
+        .option("checkpointLocation", new File(root, "ckpt").getAbsolutePath)
+        .trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
     }
-    writeChunk(Seq((1L, "http://x/1", "payload X")))
-    run() // batch 0: owner of X; query terminates ("kill")
-    writeChunk(Seq((2L, "http://x/2", "payload X"))) // same payload
-    run() // resume: only the new file becomes batch 1
-    val back = graft.sources.Warc.read(spark, out).collect()
+    chunks.zipWithIndex.foreach { case (rows, i) =>
+      rows.toDF("ord", "url", "text", "ms").coalesce(1)
+        .write.mode("append").parquet(src)
+      if (i + 1 == killAfter) go() // "kill" here, resume later
+    }
+    go()
+    graft.sources.Warc.read(spark, out).collect()
       .map(r => r.getAs[String]("target_uri") ->
         (r.getAs[String]("warc_type"), r.getAs[String]("refers_to")))
       .toMap
+  }
+
+  test("D36: kill-resume across the eviction boundary stays hash-stable") {
+    // The interrupted run (restart between the eviction-driving batch
+    // and the re-fetch) must produce the SAME records as one
+    // uninterrupted run over the same files — watermark and timeout
+    // state restore from the checkpoint.
+    val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00").getTime
+    val chunks = Seq(
+      Seq((1L, "http://x/1", "payload X", t0)),
+      Seq((2L, "http://x/2", "payload Z", t0 + 30000L)),
+      Seq((3L, "http://x/3", "payload W", t0 + 31000L)),
+      Seq((4L, "http://x/4", "payload X", t0 + 35000L)))
+    // A: restart right after the watermark-advancing batch (the
+    // eviction boundary); B: one uninterrupted run
+    val a = archiveResume(chunks, killAfter = 2, retentionMs = 10000L)
+    val b = archiveResume(chunks, killAfter = 0, retentionMs = 10000L)
+    assert(a == b, s"interrupted vs uninterrupted:\n$a\n$b")
+    // and the boundary semantics themselves: the post-horizon X
+    // re-fetch is a NEW OWNER (response), not a revisit
+    assert(a("http://x/4")._1 == "response", a)
+  }
+
+  /** Owner of payload X before the kill, a re-fetch of X after it. */
+  private val ownerResumeChunks = Seq(
+    Seq((1L, "http://x/1", "payload X", 0L)),
+    Seq((2L, "http://x/2", "payload X", 0L)))
+
+  test("D36: owner state survives kill-and-resume from the checkpoint") {
+    // The production property the MemoryStream case cannot show: a
+    // RESTARTED query restores the (payload -> owner) state from the
+    // state store, so a post-restart fetch of a pre-restart payload
+    // still becomes a revisit — not a second owner.
+    val back = archiveResume(ownerResumeChunks, killAfter = 1)
     assert(back("http://x/1")._1 == "response")
     // the restart restored state: the re-fetch is a revisit of the
     // PRE-RESTART owner, and its refers_to names that owner's rid
@@ -1154,61 +1244,10 @@ class LogStreamSpec extends SparkSpec {
     // riskiest path is a RESTART that must restore state from a
     // changelog-style checkpoint (not a full snapshot). Same sequence
     // as the kill-resume case above, under the exact harness confs.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevCl = spark.conf.getOption(clKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(clKey, "true")
-    try {
-      val root = java.nio.file.Files.createTempDirectory("graft_d36cl_").toFile
-      root.deleteOnExit()
-      val src = new java.io.File(root, "src").getAbsolutePath
-      val out = new java.io.File(root, "out").getAbsolutePath
-      val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
-      def writeChunk(rows: Seq[(Long, String, String)]): Unit =
-        rows.toDF("ord", "url", "text").coalesce(1)
-          .write.mode("append").parquet(src)
-      def run(): Unit = {
-        val sch = spark.read.parquet(src).schema
-        val stream = spark.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "1").parquet(s"$src/part-*")
-          .select(col("url"),
-            concat(lit("<urn:uuid:"), col("ord").cast("string"), lit(">"))
-              .as("rid"),
-            lit("2026-01-01T00:00:00Z").as("dt"), lit(200).as("st"),
-            lit("text/plain").as("mi"), col("text").cast("binary").as("pl"),
-            col("ord"))
-        val recs = LogStream.archiveDedupStream(stream, "url", "rid", "dt",
-          "st", "mi", "pl", "ord")
-        val q = graft.sources.Warc.streamMemberWriter(
-            recs.select(col("rec")), "rec", out, "arc")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      writeChunk(Seq((1L, "http://x/1", "payload X")))
-      run()
-      writeChunk(Seq((2L, "http://x/2", "payload X")))
-      run()
-      val back = graft.sources.Warc.read(spark, out).collect()
-        .map(r => r.getAs[String]("target_uri") ->
-          (r.getAs[String]("warc_type"), r.getAs[String]("refers_to")))
-        .toMap
+    graft.operators.Scoped.withConf(spark, StateStoreConf.recommended: _*) {
+      val back = archiveResume(ownerResumeChunks, killAfter = 1)
       assert(back("http://x/1")._1 == "response")
       assert(back("http://x/2") == (("revisit", "<urn:uuid:1>")), back)
-    } finally {
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-      prevCl match {
-        case Some(v) => spark.conf.set(clKey, v)
-        case None => spark.conf.unset(clKey)
-      }
     }
   }
 }
