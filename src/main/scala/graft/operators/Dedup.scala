@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{Md5HexSlice, TextFunctions}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -116,9 +117,40 @@ object Dedup {
    * C2: MinHash+LSH near-dup candidates. Signature = `numHashes` min-hashes
    * over word `shingleSize`-shingles (xxhash64 with the hash index as
    * seed); signatures are cut into `bands`; rows land in (band, bandHash)
-   * buckets; pairs are emitted within buckets and deduped. The shuffle key
-   * is the band hash → bucket sizes bound memory; hot buckets can be
-   * salted upstream. Returns distinct (id_a, id_b) with id_a < id_b.
+   * buckets; pairs are emitted within buckets and deduped. Returns
+   * distinct (id_a, id_b) with id_a < id_b strictly, so an id that
+   * appears twice in the input never pairs with itself.
+   *
+   * Skew guard (`maxBucketSize` > 0, the default of every one-call
+   * caller): a bucket with more than `maxBucketSize` rows is a
+   * boilerplate family whose quadratic pair list would dominate cost
+   * (a corpus where every doc shares a big common block collapses ALL
+   * signatures into one bucket — all-pairs would be |corpus|²). Such a
+   * bucket emits STAR pairs instead — each member against the bucket's
+   * min id — which keeps the pair list linear while the downstream
+   * Jaccard verify / connected components still links the whole family
+   * through the representative. Buckets of at most `maxBucketSize` rows
+   * emit every i<j pair.
+   *
+   * Plan shape of the capped arm: the signatures are computed once and
+   * shuffled once, on (band, band_hash). A window count and min over
+   * that key tag each row with its bucket's size `__n` and min id
+   * `__rep`. An aggregate joined back to the banded frame would
+   * evaluate the signature and shuffle the banded rows once per
+   * consumer. Spark's window buffer spills, so a huge boilerplate
+   * bucket stays safe. The small buckets collect their ≤ cap sorted
+   * ids on the already-partitioned window output and explode the i<j
+   * pairs map-side ([[sortedIdPairs]], the [[sharedKeyPairs]] device:
+   * n(n−1)/2 rows per bucket where a self-join emits n² before its
+   * filter); the star rows read the same exchange (reused). One
+   * `distinct` over the union removes pairs that collide in several
+   * bands.
+   *
+   * The uncapped arm (`maxBucketSize` ≤ 0) stays a plain bucket
+   * self-join: with nothing to gate, a window costs more than it saves.
+   * `parallelism` > 0 spreads the signature compute when the input has
+   * few splits (single-row-group files locally); at cluster scale
+   * inputs are already partitioned and 0 (no extra shuffle) is right.
    */
   def minhashCandidates(
       df: DataFrame,
@@ -131,13 +163,6 @@ object Dedup {
       maxBucketSize: Int = 0): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rows = numHashes / bands
-    // Signatures via the single-pass codegen'd MinHashSig expression —
-    // map-only (no exchange, no per-shingle string materialization);
-    // the only shuffle in the whole operator is the banded bucket join.
-    // That is the 100 TB shape: one scan, one bounded-width shuffle.
-    // parallelism > 0 spreads compute when the input has few splits
-    // (single-row-group files locally); at cluster scale inputs are
-    // already partitioned and 0 (no extra shuffle) is right
     val src = if (parallelism > 0) df.repartition(parallelism) else df
     val sigDf = src.select(
       col(idCol).as("__id"),
@@ -150,14 +175,6 @@ object Dedup {
           sequence(lit(0), lit(bands - 1)),
           b => xxhash64(slice(col("__sig"), b * rows + 1, lit(rows)), b))))
       .select(col("pos").as("band"), col("col").as("band_hash"), col("__id"))
-    // skew guard: buckets larger than maxBucketSize are boilerplate
-    // clusters whose quadratic pair lists dominate cost (a corpus where
-    // every doc shares a big common block collapses ALL signatures into
-    // one bucket — all-pairs would be |corpus|²). Oversized buckets
-    // fall back to STAR pairs — every member against the bucket's
-    // min-id representative — keeping the pair list linear while the
-    // downstream Jaccard verify / connected components still links the
-    // whole family through the representative.
     if (maxBucketSize <= 0) {
       val a = banded.select(col("band"), col("band_hash"), col("__id").as("id_a"))
       val b = banded.select(col("band"), col("band_hash"), col("__id").as("id_b"))
@@ -166,19 +183,16 @@ object Dedup {
         .select("id_a", "id_b")
         .distinct()
     } else {
-      val stats = banded.groupBy("band", "band_hash")
-        .agg(count(lit(1)).as("__n"), min(col("__id")).as("__rep"))
-      val tagged = banded.join(stats, Seq("band", "band_hash"))
-      val small = tagged.filter(col("__n") <= maxBucketSize)
-        .select(col("band"), col("band_hash"), col("__id"))
-      val a = small.select(col("band"), col("band_hash"), col("__id").as("id_a"))
-      val b = small.select(col("band"), col("band_hash"), col("__id").as("id_b"))
-      val allPairs = a.join(b, Seq("band", "band_hash"))
+      val bucket = Window.partitionBy("band", "band_hash")
+      val tagged = banded
+        .withColumn("__n", count(lit(1)).over(bucket))
+        .withColumn("__rep", min(col("__id")).over(bucket))
+      val allPairs = sortedIdPairs(
+          tagged.filter(col("__n") <= maxBucketSize), Seq("band", "band_hash"), "__id")
         .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
       // __rep is the bucket min, so (rep, id) is already (lo, hi)
-      val starred = tagged.filter(col("__n") > maxBucketSize)
-        .filter(col("__id") =!= col("__rep"))
+      val starred = tagged
+        .filter(col("__n") > maxBucketSize && col("__id") =!= col("__rep"))
         .select(col("__rep").as("id_a"), col("__id").as("id_b"))
       allPairs.union(starred).distinct()
     }
@@ -927,14 +941,14 @@ object Dedup {
           b => xxhash64(slice(col("__sig"), b * rows + 1, lit(rows)), b))))
       .select(col("pos").as("band"), col("col").as("band_hash"), col(out))
     val oldBanded0 = banded(oldDocs, "id_a")
+    // the minhashCandidates gate: a window count over the bucket key,
+    // not a groupBy joined back, so the old corpus is signed once
     val oldBanded =
       if (maxBucketSize <= 0) oldBanded0
       else oldBanded0
-        .join(
-          oldBanded0.groupBy("band", "band_hash")
-            .agg(count(lit(1)).as("__bsz")).filter(col("__bsz") <= maxBucketSize)
-            .select("band", "band_hash"),
-          Seq("band", "band_hash"))
+        .withColumn("__bsz", count(lit(1)).over(Window.partitionBy("band", "band_hash")))
+        .filter(col("__bsz") <= maxBucketSize)
+        .select("band", "band_hash", "id_a")
     val candidates = banded(newProj, "id_b")
       .join(oldBanded, Seq("band", "band_hash"))
       .select("id_a", "id_b").distinct()
@@ -1037,16 +1051,27 @@ object Dedup {
    */
   private[operators] def sharedKeyPairs(
       postings: DataFrame, key: String, owner: String, cap: Int): DataFrame =
-    postings
-      .withColumn("__df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(key)))
-      .filter(col("__df") <= cap)
-      .groupBy(key).agg(sort_array(collect_list(col(owner))).as("__ids"))
+    sortedIdPairs(
+        postings
+          .withColumn("__df", count(lit(1)).over(Window.partitionBy(key)))
+          .filter(col("__df") <= cap),
+        Seq(key), owner)
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n"))
+
+  /** Every (id_a, id_b) position pair i<j of each `keys` group's
+   * sorted `owner` list: one collect per group, then a map-side
+   * explode. Call it on rows already gated to small groups and
+   * partitioned on `keys` (a window over `keys`), so the collect adds
+   * no exchange and per-group state is bounded by the gate. An owner
+   * that appears twice in a group yields (x, x); callers whose rows
+   * are not owner-distinct filter id_a < id_b. */
+  private def sortedIdPairs(gated: DataFrame, keys: Seq[String], owner: String): DataFrame =
+    gated
+      .groupBy(keys.map(col): _*).agg(sort_array(collect_list(col(owner))).as("__ids"))
       .select(col("__ids"), posexplode(col("__ids")).as(Seq("__pa", "id_a")))
       .select(col("id_a"),
         explode(slice(col("__ids"), col("__pa") + lit(2), size(col("__ids"))))
           .as("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n"))
 
   /** Band keys of the shared md5 signature device (C68/C93/C95 — the
    * bit-for-bit replay the DuckDB oracles depend on): gram hash

@@ -52,6 +52,53 @@ class OperatorsSpec extends SparkSpec {
     assert(kept.count() == 1 && kept.select("doc_id").first().getLong(0) == 0L)
   }
 
+  test("C2 capped candidates equal a Scala reference over the same banded buckets") {
+    import graft.functions.MinHashSig
+    val (numHashes, bands) = (128, 16)
+    val rows = numHashes / bands
+    val body = (1 to 40).map(i => s"w$i").mkString(" ")
+    val corpus =
+      // a boilerplate family above caps 3 and 50 in most bands; the
+      // one varying word splits off a few of its band buckets
+      (100 until 180).map(i => (i.toLong, s"$body tail$i")) ++
+      // a family of exactly 50 identical docs: buckets of exactly cap 50
+      (200 until 250).map(i => (i.toLong, "fifty copies of one identical page")) ++
+      // planted near-duplicates: an exact triplet (buckets of exactly
+      // cap 3) and a pair that differs by an appended word
+      (10 until 13).map(i => (i.toLong, "the quick brown fox jumps over the lazy dog")) ++
+      Seq(20L -> "spark shuffles rows between stages by key hash partition",
+        21L -> "spark shuffles rows between stages by key hash partition now") ++
+      // id 2 appears twice with the same text: (2, 2) must never appear
+      Seq(1L -> "a duplicated id carries this text", 2L -> "a duplicated id carries this text",
+        2L -> "a duplicated id carries this text", 3L -> "a duplicated id carries this text") ++
+      (300 until 320).map(i => (i.toLong, s"singleton $i text about topic$i alone"))
+    val docs = corpus.toDF("doc_id", "text")
+    val sigs = docs
+      .select($"doc_id", MinHashSig(TF.tokens($"text"), 3, numHashes).as("sig"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
+    // buckets keyed by the exact band slice (the operator keys by its
+    // xxhash64, which merges two buckets only on a 64-bit collision)
+    val buckets = sigs
+      .flatMap { case (id, sig) =>
+        (0 until bands).map(b => (b, sig.slice(b * rows, (b + 1) * rows)) -> id) }
+      .groupBy(_._1).values.map(_.map(_._2).sorted.toSeq)
+    def reference(cap: Int): Set[(Long, Long)] = buckets.flatMap { ids =>
+      if (ids.size <= cap)
+        for (i <- ids.indices; j <- i + 1 until ids.size if ids(i) < ids(j))
+          yield (ids(i), ids(j))
+      else ids.filter(_ != ids.head).map(id => (ids.head, id))
+    }.toSet
+    assert(buckets.exists(_.size > 50) && buckets.exists(_.size == 50) &&
+      buckets.exists(_.size == 3), "corpus must hit both sides of caps 3 and 50")
+    for (cap <- Seq(3, 50, 10000)) {
+      val got = Dedup.minhashCandidates(docs, "doc_id", "text", numHashes, bands,
+          maxBucketSize = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(got.length == got.distinct.length, s"cap $cap: duplicate pairs")
+      assert(got.toSet == reference(cap), s"cap $cap")
+    }
+  }
+
   test("C70 edit-distance pairs: planted suffix typo found at its exact distance") {
     val d = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
