@@ -162,18 +162,11 @@ object HttpdLog {
     else if (conf.nonEmpty) {
       val entries = HttpdConf.parseFile(conf, hc).sortBy(_.lineNumber)
       val sample = sampleLines(path, hc, 10)
-      def matchCount(f: LogFormat): Int = {
-        val p = java.util.regex.Pattern.compile(f.lineRegex)
-        sample.count(l => l.nonEmpty && p.matcher(l).matches())
-      }
-      def fits(f: LogFormat): Boolean = {
-        val m = matchCount(f); m > 0 && m >= sample.size / 2
-      }
       if (formatType.nonEmpty) {
         entries
           .filter(e => e.formatType == "named" && e.nickname.contains(formatType) && e.formatString.nonEmpty)
           .map(e => LogFormat.parse(e.formatString))
-          .find(fits)
+          .find(fitsSample(_, sample))
           .map((_, raw))
           .getOrElse(throw new IllegalArgumentException(
             s"Format '$formatType' in conf file '$conf' not found or does not match the log file format"))
@@ -181,7 +174,7 @@ object HttpdLog {
         Seq("default", "inline", "named").iterator
           .flatMap(t => entries.filter(e => e.formatType == t && e.formatString.nonEmpty))
           .map(e => LogFormat.parse(e.formatString))
-          .find(fits)
+          .find(fitsSample(_, sample))
           .map((_, raw))
           .getOrElse(throw new IllegalArgumentException(
             s"No matching format found in conf file '$conf' for the log file"))
@@ -197,17 +190,20 @@ object HttpdLog {
       // auto-detect: try combined, then common, over ≤10 sample lines
       // (reference: src/httpd_log_format_parser.cpp:1217-1268)
       val sample = sampleLines(path, hc, 10)
-      val nonEmpty = sample.filter(_.nonEmpty)
-      def detected(fmtStr: String): Option[LogFormat] = {
-        val f = LogFormat.parse(fmtStr)
-        val p = java.util.regex.Pattern.compile(f.lineRegex)
-        val m = nonEmpty.count(l => p.matcher(l).matches())
-        if (m > 0 && m >= sample.size / 2) Some(f) else None
-      }
+      def detected(fmtStr: String): Option[LogFormat] =
+        Some(LogFormat.parse(fmtStr)).filter(fitsSample(_, sample))
       detected(LogFormat.Combined).map((_, raw))
         .orElse(detected(LogFormat.Common).map((_, raw)))
         .getOrElse((LogFormat.Unknown, true)) // unknown → forced raw mode
     }
+  }
+
+  /** A format fits a sample when its line regex matches at least one
+   * non-empty sample line and at least half the sample's size. */
+  private def fitsSample(f: LogFormat, sample: Vector[String]): Boolean = {
+    val p = java.util.regex.Pattern.compile(f.lineRegex)
+    val m = sample.count(l => l.nonEmpty && p.matcher(l).matches())
+    m > 0 && m >= sample.size / 2
   }
 
   /** First `n` lines from the first non-empty globbed file (driver-side,

@@ -199,13 +199,13 @@ object CorpusPipeline {
       textCol: String = "text"): DataFrame = {
     require(budgetTokens >= 0)
     val spark = docs.sparkSession
+    // feeds the stats aggregate AND the admission pass
     val perDoc = docs
       .select(
         col(sourceCol).as("__src"),
         coalesce(TF.tokenCount(col(textCol)).cast(LongType), lit(0L)).as("__t"),
         TF.md5Bucket(col(textCol), 1000000).as("__b"))
-      .transform(Scoped.persistTracked)
-    perDoc.count() // pin: feeds the stats aggregate AND the admission pass
+      .transform(Scoped.pinned)
     val s0 = floor(sqrt(col("n_tokens").cast(DoubleType))).cast(LongType)
     val isqrt = when((s0 + 1) * (s0 + 1) <= col("n_tokens"), s0 + 1)
       .when(s0 * s0 > col("n_tokens"), s0 - 1)
@@ -351,8 +351,7 @@ object CorpusPipeline {
       col(sourceCol).as("source"), explode(TF.shingles(col(textCol), n)).as("gs"))
       .select(col("source"), xxhash64(col("gs")).as("g"))
     val sg = grams.groupBy("source", "g").agg(count(lit(1)).as("sc"))
-      .transform(Scoped.persistTracked)
-    sg.count() // pin before the two consumers (sourceDivergence note)
+      .transform(Scoped.pinned)
     val srcStats = sg.groupBy("source").agg(
       sum(col("sc")).as("gram_instances"),
       count(lit(1)).as("distinct_grams"))
@@ -786,8 +785,7 @@ object CorpusPipeline {
       dfCap: Long = 1000000L): DataFrame = {
     val tf = docs.select(col(idCol), explode(TF.tokens(col(textCol))).as("term"))
       .groupBy(col("term"), col(idCol)).agg(count(lit(1)).as("tf"))
-      .transform(Scoped.persistTracked)
-    tf.count() // pin before the two consumers (sourceDivergence note)
+      .transform(Scoped.pinned)
     val stats = tf.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("total_tf"))
     // Digest: one codegen'd PostingsMd5 call per term (sort + format +
@@ -855,8 +853,7 @@ object CorpusPipeline {
       .withColumn("w1", substring_index(col("bg"), " ", 1))
       .select(col(idCol), xxhash64(col("bg")).as("bg"), xxhash64(col("w1")).as("w1"))
     val bc = inst.groupBy("bg").agg(first(col("w1")).as("w1"), count(lit(1)).as("cb"))
-      .transform(Scoped.persistTracked)
-    bc.count() // pin before the concurrent consumers (sourceDivergence note)
+      .transform(Scoped.pinned)
     val ctx = bc.groupBy("w1").agg(sum(col("cb")).as("cw"))
     val sur = bc.join(ctx, "w1").select(col("bg"), expr("cw div cb").as("sur"))
     inst.select(col(idCol), col("bg"))
@@ -987,8 +984,7 @@ object CorpusPipeline {
         ((n - 1) to 2 by -1).map(m => s"c$m" -> ctxOf(m))
     val dtf = base.select(col(idCol) +: col("__train") +: col("cnt") +:
         keyCols.map { case (nm, c) => xxhash64(c).as(nm) }: _*)
-      .transform(Scoped.persistTracked)
-    dtf.count() // pin before the concurrent consumers (sourceDivergence note)
+      .transform(Scoped.pinned)
     dtf
   }
 
@@ -1073,8 +1069,7 @@ object CorpusPipeline {
     val tt = train.groupBy("g")
       .agg(sum(col("cnt")).as("cn"),
         keys.filterNot(_ == "g").map(nm => first(col(nm)).as(nm)): _*)
-      .transform(Scoped.persistTracked)
-    tt.count()
+      .transform(Scoped.pinned)
     val tctxTop = tt.groupBy("ctop")
       .agg(sum(col("cn")).as("cden"), count(lit(1)).as("cn1"))
     // suffix-type chain from its top link t_n = tt: t_m keyed s_m with
@@ -1088,8 +1083,8 @@ object CorpusPipeline {
       val t0 = tTables(m + 1).groupBy(s"s$m")
         .agg(count(lit(1)).as(s"n$m"), tail.map(nm => first(col(nm)).as(nm)): _*)
       tTables(m) = if (m >= 2) {
-        val tp = t0.transform(Scoped.persistTracked)
-        tp.count() // feeds its marginal, the next link, and scoring
+        // feeds its marginal, the next link, and scoring
+        val tp = t0.transform(Scoped.pinned)
         ctxTables(m) = tp.groupBy(s"c$m")
           .agg(sum(col(s"n$m")).as(s"d$m"), count(lit(1)).as(s"f$m"))
         tp
@@ -1388,8 +1383,7 @@ object CorpusPipeline {
       .filter(col("__cw") === w)
       .select(col("__id"), col("__mn").as("fp"))
       .distinct()
-      .transform(Scoped.persistTracked)
-    fps.count() // pin before the three consumers (sourceDivergence note)
+      .transform(Scoped.pinned)
     val totals = fps.groupBy("__id").agg(count(lit(1)).as("nfp"))
     val pairs = Dedup.sharedKeyPairs(fps, "fp", "__id", maxDocsPerFp)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
@@ -1427,8 +1421,7 @@ object CorpusPipeline {
     val W = org.apache.spark.sql.expressions.Window
     val tf = docs.select(col(idCol), explode(TF.tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-      .transform(Scoped.persistTracked)
-    tf.count() // pin before the two consumers
+      .transform(Scoped.pinned)
     val df_ = tf.groupBy("term").agg(count(lit(1)).as("df"))
     tf.join(df_, "term")
       .withColumn("score", expr("tf * 1000000 div df"))
@@ -1502,13 +1495,9 @@ object CorpusPipeline {
       .select(col(sourceCol).as("source"), explode(TF.tokens(col(textCol))).as("w"))
       .select(col("source"), xxhash64(col("w")).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
-      .transform(Scoped.persistTracked)
-    // materialize NOW: the four consumers evaluate concurrently inside
-    // one action (two on broadcast threads), and a cold persisted plan
-    // races — each consumer would recompute the corpus explode. One
-    // eager count pins the cache first (same construction-time-job
-    // precedent as semDedup's centroid fetch). Row count, never rows.
-    sw.count()
+      // four consumers evaluate concurrently inside one action (two on
+      // broadcast threads)
+      .transform(Scoped.pinned)
     val corpus = sw.groupBy("w").agg(sum(col("c")).as("cw"))
     val totals = sw.groupBy("source").agg(sum(col("c")).as("ts"))
     val tot = sw.agg(sum(col("c")).as("t"))
@@ -1619,12 +1608,11 @@ object CorpusPipeline {
       sourceCol: String = "source",
       textCol: String = "text"): DataFrame = {
     require(sigs > 0 && sigs <= 64)
-    // persist + eager pin: BOTH sides of the pairwise cross join
-    // reference this aggregate — unpinned, each side re-runs the whole
-    // scan+signature+min pipeline (the df⋈aggregate(df) recompute
-    // rule); the table is |sources| rows, so the pin count is free
-    val sig = Scoped.persistTracked(sourceSignatures(docs, n, sigs, sourceCol, textCol))
-    sig.count()
+    // BOTH sides of the pairwise cross join reference this aggregate —
+    // unpinned, each side re-runs the whole scan+signature+min pipeline
+    // (the df⋈aggregate(df) recompute rule); the table is |sources|
+    // rows, so the pin count is free
+    val sig = Scoped.pinned(sourceSignatures(docs, n, sigs, sourceCol, textCol))
     val a = sig.select(col("source").as("src_a") +:
       (0 until sigs).map(j => col(s"s$j").as(s"a$j")): _*)
     val b = sig.select(col("source").as("src_b") +:
@@ -1678,12 +1666,12 @@ object CorpusPipeline {
       sourceCol: String,
       textCol: String,
       maxSourcesPerGram: Int = 64): DataFrame = {
+    // consumed by the pair join and the per-source totals
     val sp = docs.select(
       col(sourceCol).cast(StringType).as("source"),
       explode(TF.shingles(col(textCol), n)).as("gs"))
       .select(col("source"), xxhash64(col("gs")).as("g"))
-      .distinct().transform(Scoped.persistTracked)
-    sp.count() // pin: consumed by the pair join and the per-source totals
+      .distinct().transform(Scoped.pinned)
     val sets = sp.groupBy("g").agg(sort_array(collect_set(col("source"))).as("ss"))
       .observe("source_overlap_cap",
         sum(when(size(col("ss")) > maxSourcesPerGram, 1L).otherwise(0L))
@@ -1748,8 +1736,7 @@ object CorpusPipeline {
     val feats = uni.union(big)
       .select(col(idCol), col("__tgt"),
         (Md5HexSlice.md552(col("__g")) % buckets).as("__f"))
-      .transform(Scoped.persistTracked)
-    feats.count() // pin before the two racing consumers (see sourceDivergence)
+      .transform(Scoped.pinned)
     val wt = feats.groupBy("__f")
       .agg(expr("(sum(__tgt) + 1) * 1000000 div (count(*) + 2)").as("__w"))
     feats
@@ -1933,13 +1920,13 @@ object CorpusPipeline {
       textCol: String = "text"): DataFrame = {
     require(seqLen > 0)
     val spark = docs.sparkSession
+    // feeds the subtotal + output jobs (encode is hot)
     val ids = docs.select(
         col(idCol).cast(LongType).as("__id"),
         coalesce(graft.functions.Bpe.encodeIdsCol(col(textCol), codec),
           typedlit(Array.empty[Int])).as("__ids"))
       .withColumn("__n", size(col("__ids")).cast(LongType))
-      .transform(Scoped.persistTracked)
-    ids.count() // pin before the subtotal + output jobs (encode is hot)
+      .transform(Scoped.pinned)
     val sorted = ids
       .repartitionByRange(spark.sparkContext.defaultParallelism, col("__id"))
       .sortWithinPartitions(col("__id"))
@@ -2169,12 +2156,12 @@ object CorpusPipeline {
     import graft.functions.SpanCorrupt
     def h(tag: String, mod: Column): Column =
       Md5HexSlice.md552(concat(lit(tag), col(idCol).cast(StringType))) % mod
+    // three arm branches read it
     val base = docs
       .select(col(idCol), TF.tokens(col(textCol)).as("__t"))
       .withColumn("__n", size(col("__t")).cast(LongType))
       .withColumn("__coin", h("ul2-c:", lit(3L)))
-      .transform(Scoped.persistTracked)
-    base.count() // pin: three arm branches read it
+      .transform(Scoped.pinned)
     def spanArm(coin: Int, name: String, window: Int, span: Int) =
       base.filter(col("__coin") === coin)
         .withColumn("__sc", SpanCorrupt(col("__t"), col(idCol), window, span))
@@ -2331,14 +2318,11 @@ object CorpusPipeline {
     val n = fr.getLong(0)
     val adlM = fr.getLong(1) * 1000L / n // Long division == div for positives
     // tf is tiny (matching docs × query terms) but computing it costs a
-    // corpus explode; unpersisted, the dfTbl branch re-ran that explode.
-    // Pin eagerly: the dfTbl BROADCAST thread otherwise races the cold
-    // cache and recomputes anyway (sourceDivergence pin finding)
+    // corpus explode; unpersisted, the dfTbl branch re-ran that explode
     val tf = d.select(col(idCol), explode(col("__t")).as("w"))
       .filter(col("w").isin(query: _*))
       .groupBy(col(idCol), col("w")).agg(count(lit(1)).as("tf"))
-      .transform(Scoped.persistTracked)
-    tf.count()
+      .transform(Scoped.pinned)
     val dfTbl = tf.groupBy("w").agg(count(lit(1)).as("df"))
     tf.join(broadcast(dfTbl), "w")
       .join(d.select(col(idCol), col("dl")), idCol)
@@ -2925,10 +2909,8 @@ object CorpusPipeline {
       else {
         // assigned JOIN aggregate(assigned): both sides replay the
         // docs scan + nSeeds×D affinity dots unless persisted (the
-        // dupGramStats lesson), and the broadcast build races the
-        // cold cache inside ONE action — persist AND pin (r14 advice)
-        val pinned = Scoped.persistTracked(assigned)
-        pinned.count()
+        // dupGramStats lesson)
+        val pinned = Scoped.pinned(assigned)
         // one broadcast ≤ nSeeds-row count table decides each cell's
         // sub-stream count; the residue key is deterministic and
         // engine-portable (first 13 md5 hex digits, the C14 device)
@@ -2983,12 +2965,12 @@ object CorpusPipeline {
       docs: DataFrame,
       sourceCol: String = "source",
       textCol: String = "text"): DataFrame = {
+    // feeds the rank scan AND the per-source totals
     val tf = docs
       .select(col(sourceCol).cast(StringType).as("src"),
         explode(TF.tokens(col(textCol))).as("w"))
       .groupBy("src", "w").agg(count(lit(1)).as("f"))
-      .transform(Scoped.persistTracked)
-    tf.count() // pin: feeds the rank scan AND the per-source totals
+      .transform(Scoped.pinned)
     // descending-frequency rank = ascending (-f, w) under the prefix
     // scan (f >= 1, so -f never overflows)
     val pts = GroupedScan.prefixScan(

@@ -48,7 +48,8 @@ object Dedup {
    *    banded DP proves dist > maxDist — O(compareLen·maxDist) per
    *    pair, not O(compareLen²).
    *
-   * The only shuffle is the block-keyed join; a length pre-filter
+   * The only shuffle is the block-keyed window exchange, which the
+   * small-block pairs and the star rows both read; a length pre-filter
    * (|len_a − len_b| ≤ maxDist, a lower bound on edit distance) culls
    * pairs before any DP runs. Returns (id_a, id_b, dist), id_a < id_b.
    */
@@ -61,56 +62,38 @@ object Dedup {
       compareLen: Int = 400,
       maxBucketSize: Int = 64): DataFrame = {
     require(maxDist >= 0 && prefixLen > 0 && compareLen > prefixLen)
+    // one (block key, member payload) row per doc: both branches read
+    // only these two columns, so they share the block window's exchange
     val base = df.select(
       col(idCol).as("__id"),
       substring(TextFunctions.normalizeText(col(textCol)), 1, compareLen).as("__c"))
-      .withColumn("__k", substring(col("__c"), 1, prefixLen))
-      .withColumn("__len", length(col("__c")))
-    val stats = base.groupBy("__k")
-      .agg(count(lit(1)).as("__n"), min(col("__id")).as("__rep"))
-    // persist + eager pin: three consumers (both sides of the pair
-    // join and the star path) would otherwise each recompute the
-    // base⋈aggregate(base) block build (the df⋈aggregate(df) rule) —
-    // at 100 TB this compact (id, prefix-block, 400-char form) table
-    // is what a pipeline writes to storage between stages
-    val tagged = Scoped.persistTracked(base.join(stats, Seq("__k")))
-    tagged.count()
-    val small = tagged.filter(col("__n") <= maxBucketSize)
-    // Pair generation (r19): the block self-join exchanged the
-    // 400-char compare form on BOTH sides of the __k join. The block
-    // membership is already capped (__n ≤ maxBucketSize), so collect
-    // each block's (id, form, len) structs in ONE pass — the compare
-    // form crosses the exchange once, bounded at maxBucketSize·
-    // compareLen chars per group — and explode the i<j combinations
-    // map-side (the containmentPairs device; sorted structs order by
-    // the unique __id, so pair orientation is unchanged).
-    val grpB = small
-      .groupBy("__k").agg(sort_array(collect_list(
-        struct(col("__id"), col("__c"), col("__len")))).as("__ms"))
-    val allPairs = grpB
-      .select(col("__ms"), posexplode(col("__ms")).as(Seq("__pa", "__a")))
-      .select(col("__a"),
-        explode(slice(col("__ms"), col("__pa") + lit(2), size(col("__ms"))))
-          .as("__b"))
-      .select(col("__a.__id").as("id_a"), col("__b.__id").as("id_b"),
-        col("__a.__c").as("__ca"), col("__b.__c").as("__cb"),
-        col("__a.__len").as("__la"), col("__b.__len").as("__lb"))
+      .select(substring(col("__c"), 1, prefixLen).as("__k"),
+        struct(col("__id"), col("__c"), length(col("__c")).as("__len")).as("__p"))
+    // the [[minhashCandidates]] gate: a window over the block tags each
+    // row with the block size and the min-id member's payload
+    val block = Window.partitionBy("__k")
+    val tagged = base
+      .withColumn("__n", count(lit(1)).over(block))
+      .withColumn("__rep", min_by(col("__p"), col("__p.__id")).over(block))
+    // small blocks: every i<j pair of the ≤ cap members, the compare
+    // form crossing no further exchange (sorted structs order by __id)
+    val allPairs = sortedIdPairs(
+        tagged.filter(col("__n") <= maxBucketSize), Seq("__k"), "__p")
+      .select(col("id_a.__id").as("id_a"), col("id_b.__id").as("id_b"),
+        col("id_a.__c").as("__ca"), col("id_b.__c").as("__cb"),
+        col("id_a.__len").as("__la"), col("id_b.__len").as("__lb"))
+    // oversized blocks: star against the representative only (linear)
+    val starred = tagged
+      .filter(col("__n") > maxBucketSize && col("__p.__id") =!= col("__rep.__id"))
+      .select(col("__rep.__id").as("id_a"), col("__p.__id").as("id_b"),
+        col("__rep.__c").as("__ca"), col("__p.__c").as("__cb"),
+        col("__rep.__len").as("__la"), col("__p.__len").as("__lb"))
+    allPairs.union(starred)
       .filter(abs(col("__la") - col("__lb")) <= maxDist)
       .withColumn("dist",
         levenshtein(col("__ca"), col("__cb"), maxDist).cast(LongType))
       .filter(col("dist") >= 0)
       .select("id_a", "id_b", "dist")
-    // oversized blocks: star against the representative only (linear)
-    val starred = tagged.filter(col("__n") > maxBucketSize)
-      .filter(col("__id") =!= col("__rep"))
-      .join(tagged.select(col("__id").as("__rep"), col("__c").as("__cr"),
-        col("__len").as("__lr")), Seq("__rep"))
-      .filter(abs(col("__len") - col("__lr")) <= maxDist)
-      .withColumn("dist",
-        levenshtein(col("__c"), col("__cr"), maxDist).cast(LongType))
-      .filter(col("dist") >= 0)
-      .select(col("__rep").as("id_a"), col("__id").as("id_b"), col("dist"))
-    allPairs.union(starred)
   }
 
   /**
@@ -161,20 +144,8 @@ object Dedup {
       shingleSize: Int = 3,
       parallelism: Int = 0,
       maxBucketSize: Int = 0): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
     val src = if (parallelism > 0) df.repartition(parallelism) else df
-    val sigDf = src.select(
-      col(idCol).as("__id"),
-      graft.functions.MinHashSig(
-        TextFunctions.tokens(col(textCol)), shingleSize, numHashes).as("__sig"))
-    val banded = sigDf
-      .select(
-        col("__id"),
-        posexplode(transform(
-          sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("__sig"), b * rows + 1, lit(rows)), b))))
-      .select(col("pos").as("band"), col("col").as("band_hash"), col("__id"))
+    val banded = minhashBands(src, idCol, textCol, "__id", numHashes, bands, shingleSize)
     if (maxBucketSize <= 0) {
       val a = banded.select(col("band"), col("band_hash"), col("__id").as("id_a"))
       val b = banded.select(col("band"), col("band_hash"), col("__id").as("id_b"))
@@ -196,6 +167,32 @@ object Dedup {
         .select(col("__rep").as("id_a"), col("__id").as("id_b"))
       allPairs.union(starred).distinct()
     }
+  }
+
+  /** MinHash-LSH band keys: one (band, band_hash, `out`) row per band
+   * of each row's `numHashes`-slot [[graft.functions.MinHashSig]] over
+   * word `shingleSize`-shingles, `out` being `idCol` renamed. The one
+   * signing pass of [[minhashCandidates]] and [[incrementalNearDup]]. */
+  private def minhashBands(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      out: String,
+      numHashes: Int,
+      bands: Int,
+      shingleSize: Int): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must divide into bands")
+    val rows = numHashes / bands
+    df.select(
+        col(idCol).as(out),
+        graft.functions.MinHashSig(
+          TextFunctions.tokens(col(textCol)), shingleSize, numHashes).as("__sig"))
+      .select(
+        col(out),
+        posexplode(transform(
+          sequence(lit(0), lit(bands - 1)),
+          b => xxhash64(slice(col("__sig"), b * rows + 1, lit(rows)), b))))
+      .select(col("pos").as("band"), col("col").as("band_hash"), col(out))
   }
 
   /**
@@ -519,13 +516,14 @@ object Dedup {
       srcCol: String,
       dstCol: String,
       maxIter: Int): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val raw = edges
       .select(col(srcCol).cast(LongType).as("u"), col(dstCol).cast(LongType).as("v"))
+    // the returned labels reference it: tracked, so an enclosing
+    // Scoped.withCached releases it with the action
     val nodes = raw.select(col("u").as("node"))
       .union(raw.select(col("v").as("node")))
       .distinct()
-      .persist(MEMORY_AND_DISK)
+      .transform(Scoped.persistTracked)
     // canonical state: distinct edges oriented hi > lo (self-loops
     // carry no connectivity; `nodes` remembers their endpoints).
     // Each round's plan references `e` ~16× (sym twice, large four
@@ -921,26 +919,13 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.9,
       maxBucketSize: Int = 0): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rows = numHashes / bands
+    def banded(df: DataFrame, out: String): DataFrame =
+      minhashBands(df, idCol, textCol, out, numHashes, bands, shingleSize)
+    val oldBanded0 = banded(oldDocs, "id_a")
     // today's batch is consumed three times (signing, word-set verify,
     // final left join) and is small relative to the corpus index —
-    // persist it once; the eager pin guards the broadcast-verify race
-    val newProj = newDocs.select(col(idCol), col(textCol))
-      .transform(Scoped.persistTracked)
-    newProj.count()
-    def banded(df: DataFrame, out: String): DataFrame = df
-      .select(
-        col(idCol).as(out),
-        graft.functions.MinHashSig(
-          TextFunctions.tokens(col(textCol)), shingleSize, numHashes).as("__sig"))
-      .select(
-        col(out),
-        posexplode(transform(
-          sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("__sig"), b * rows + 1, lit(rows)), b))))
-      .select(col("pos").as("band"), col("col").as("band_hash"), col(out))
-    val oldBanded0 = banded(oldDocs, "id_a")
+    // persist it once; the pin guards the broadcast-verify race
+    val newProj = Scoped.pinned(newDocs.select(col(idCol), col(textCol)))
     // the minhashCandidates gate: a window count over the bucket key,
     // not a groupBy joined back, so the old corpus is signed once
     val oldBanded =
@@ -1009,9 +994,9 @@ object Dedup {
       .filter(size(col("__t")) >= n)
       .select(col("__id"),
         explode(array_distinct(graft.functions.WordShingles(col("__t"), n))).as("__g"))
+    // feeds sizes and the posting-group pass
     val sh = keyed.select(col("__id"), xxhash64(col("__g")).as("__g"))
-      .transform(Scoped.persistTracked)
-    sh.count() // pin: feeds sizes and the posting-group pass
+      .transform(Scoped.pinned)
     val sizes = sh.groupBy("__id").agg(count(lit(1)).as("sz"))
     sharedKeyPairs(sh, "__g", "__id", dfCap).withColumnRenamed("n", "inter")
       .join(sizes.select(col("__id").as("id_a"), col("sz").as("sz_a")), "id_a")
@@ -1044,8 +1029,6 @@ object Dedup {
    * gate runs before the collect). Pair multiplicity per key is
    * exactly 1 (postings are doc-distinct), so the count-per-(a,b)
    * aggregate is the same capped intersection as the old self-join's.
-   * editDistancePairs keeps its own struct-payload variant: its gate
-   * comes from a joined stats table its star path also needs.
    *
    * @return (id_a, id_b, n) with id_a < id_b
    */
@@ -1064,7 +1047,9 @@ object Dedup {
    * partitioned on `keys` (a window over `keys`), so the collect adds
    * no exchange and per-group state is bounded by the gate. An owner
    * that appears twice in a group yields (x, x); callers whose rows
-   * are not owner-distinct filter id_a < id_b. */
+   * are not owner-distinct filter id_a < id_b. A struct `owner` whose
+   * first field is the id sorts by that id and carries its payload
+   * into both pair sides (editDistancePairs). */
   private def sortedIdPairs(gated: DataFrame, keys: Seq[String], owner: String): DataFrame =
     gated
       .groupBy(keys.map(col): _*).agg(sort_array(collect_list(col(owner))).as("__ids"))
@@ -1165,13 +1150,13 @@ object Dedup {
       if (samplePpm >= 1000000L) docs
       else docs.filter(
         TextFunctions.md5Bucket(col(idCol).cast(StringType), 1000000) < samplePpm)
+    // feeds sizes, the df table and the pair path (the sig path is
+    // map-only over the sampled docs since r20)
     val hs = sampled
       .select(col(idCol).cast(LongType).as("id"),
         explode(TextFunctions.shingles(col(textCol), n)).as("g"))
       .select(col("id"), Md5HexSlice.md552(col("g")).as("h")).distinct()
-      .transform(Scoped.persistTracked)
-    hs.count() // pin: sizes, df table and the pair path (the sig
-               // path is map-only over the sampled docs since r20)
+      .transform(Scoped.pinned)
     val sizes = hs.groupBy("id").agg(count(lit(1)).as("sz"))
     val pairs = sharedKeyPairs(hs, "h", "id", dfCap).withColumnRenamed("n", "inter")
       .join(sizes.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
@@ -1263,12 +1248,12 @@ object Dedup {
       thresholdPpm: Long = 800000L,
       shingle: Int = 3): DataFrame = {
     require(thresholdPpm > 0L && thresholdPpm <= 1000000L, "t in (0, 1]")
+    // feeds df + prefix + both verify sides
     val toks = docs
       .select(col(idCol).cast(LongType).as("id"),
         explode(TextFunctions.shingles(col(textCol), shingle)).as("g"))
       .select(col("id"), Md5HexSlice.md552(col("g")).as("h")).distinct()
-      .transform(Scoped.persistTracked)
-    toks.count() // feeds df + prefix + both verify sides
+      .transform(Scoped.pinned)
     val dfTbl = toks.groupBy("h").agg(count(lit(1)).as("df"))
     val sizes = toks.groupBy("id").agg(count(lit(1)).as("n"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1278,8 +1263,7 @@ object Dedup {
       .filter(col("__r") <=
         col("n") - expr(s"($thresholdPpm * n + 999999) div 1000000") + 1)
       .select(col("id"), col("n"), col("h"), col("__r").as("r"))
-      .transform(Scoped.persistTracked)
-    prefix.count()
+      .transform(Scoped.pinned)
     // positional filter: bound ≥ α ⇔ bound·(1+t) ≥ t·(|x|+|y|) since
     // the bound is integral (cross-multiplied in ppm, overflow-safe:
     // n ≤ shingle count ≪ 2⁶³/2e6).
@@ -1392,9 +1376,9 @@ object Dedup {
         // join all disappear (guide §2.4: remove shuffles outright).
         graft.functions.Md5MinhashSig(
           TextFunctions.tokens(col(textCol)), shingle, sigs).as("__sig"))
-      .transform(Scoped.persistTracked)
-    base.count() // pin: evalTot, three rung branches and both minhash
-                 // consumers race inside the caller's single action
+      // evalTot, three rung branches and both minhash consumers race
+      // inside the caller's single action
+      .transform(Scoped.pinned)
     val evalTot = base.filter(!col("tr"))
       .groupBy("src").agg(count(lit(1)).as("eval_docs"))
     def rungLeak(keys: Seq[String]): DataFrame = {
@@ -1571,15 +1555,12 @@ object Dedup {
           TextFunctions.tokens(col("__txt")), shingle, sigs))).as("__sig"))
       .select(col("id") +: (0 until sigs).map(j =>
         element_at(col("__sig"), j + 1).as(s"s$j")): _*)
-      .transform(Scoped.persistTracked)
-    // ONE eager pin materializes the whole upstream chain: sigK's
-    // plan reaches through fam2 (semi-join build side) and base, so
-    // this single action populates all three caches — separate
-    // base/fam2 pin counts were two redundant full passes (sequential
-    // jobs populate persisted plans themselves; eager pins only pay
-    // when consumers race inside ONE action). The final rollup action
-    // then reads warm caches on every branch.
-    sigK.count()
+      // ONE pin materializes the whole upstream chain: sigK's plan
+      // reaches through fam2 (semi-join build side) and base, so this
+      // single action populates all three caches — separate base/fam2
+      // pin counts were two redundant full passes. The final rollup
+      // action then reads warm caches on every branch.
+      .transform(Scoped.pinned)
     val bandRows = sigK.select(col("id"),
       posexplode(array(sigBandStructs(sigs, bands): _*)).as(Seq("band", "bk")))
     val bucketMin = bandRows.groupBy("band", "bk").agg(min("id").as("own3"))

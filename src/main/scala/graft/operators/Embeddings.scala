@@ -235,9 +235,9 @@ object Embeddings {
         .filter(col("rank") <= k)
         .select("query_id", "neighbor_id")
     }
+    // joined once per prefix length
     val full = topK(identity).withColumn("hit", lit(1L))
-      .transform(Scoped.persistTracked)
-    full.count() // pin: joined once per prefix length
+      .transform(Scoped.pinned)
     dims.map { m =>
       topK(v => slice(v, 1, m))
         .join(full, Seq("query_id", "neighbor_id"), "left")

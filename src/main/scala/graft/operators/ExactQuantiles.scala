@@ -122,8 +122,8 @@ object ExactQuantiles {
       .filter(col("g").isNotNull && col("v").isNotNull)
       .repartitionByRange(spark.sparkContext.defaultParallelism, col("g"), col("v"))
       .sortWithinPartitions("g", "v")
-    val positioned = withPosition(sorted, "pos").transform(Scoped.persistTracked)
-    positioned.count() // pin: feeds the offsets aggregate AND the rank join
+    // feeds the offsets aggregate AND the rank join
+    val positioned = withPosition(sorted, "pos").transform(Scoped.pinned)
     val stats = positioned.groupBy("g")
       .agg(min(col("pos")).as("p0"), count(lit(1)).as("cnt"))
     val fracs = spark.createDataFrame(fractions.map(Tuple1(_))).toDF("fraction")

@@ -61,15 +61,11 @@ object Privacy {
     // One pass over the rows; every level's aggregate and the join
     // back consume this frame, and the cascade's self-joins would
     // otherwise replay the big aggregate per level (the dupGramStats
-    // plan-replication class) — persist and pin eagerly.
-    // persistTracked, not a raw persist: Bench's per-query cache
-    // isolation (Scoped.withCached) must be able to release this frame
-    // when the enclosing action completes — a raw persist outlived the
-    // query and re-accumulated across the shared bench JVM (r16 advice).
+    // plan-replication class) — pinned, and tracked so Bench's
+    // per-query Scoped.withCached releases it.
     val tupleCounts = keyed.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__c"))
-      .transform(Scoped.persistTracked)
-    tupleCounts.count()
+      .transform(Scoped.pinned)
     // Cascade finest -> coarsest on the bounded tuple frame: level i
     // counts only rows that failed every finer level, so published
     // finer groups never bulk up coarser ones.

@@ -27,8 +27,9 @@ import org.apache.spark.storage.StorageLevel
  *
  * Plan construction is driver-side and synchronous, so a ThreadLocal
  * collector is sufficient; scopes nest (inner scopes release only
- * their own intermediates). Outside any scope, [[persistTracked]]
- * degrades to a plain persist — the documented
+ * their own intermediates). [[pinned]] is [[persistTracked]] plus an
+ * eager count, for frames that several branches of one action read.
+ * Outside any scope, both degrade to a plain persist — the documented
  * "`spark.catalog.clearCache()` between corpora" contract still
  * applies to bare operator calls.
  *
@@ -44,6 +45,19 @@ object Scoped {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     val buf = collector.get()
     if (buf != null) buf += p
+    p
+  }
+
+  /** [[persistTracked]] plus an eager `count()`: the cache is populated
+   * before `df` is returned. A persisted frame that several branches
+   * of ONE later action read gets recomputed per branch when the
+   * branches' broadcast threads race the cold cache; the pin makes
+   * them all read the cache (sourceDivergence: 33 → 23 s wall, ~4×
+   * less CPU at 1M docs). Sequential consumers populate a plain
+   * persist themselves and need no pin. */
+  private[graft] def pinned(df: DataFrame): DataFrame = {
+    val p = persistTracked(df)
+    p.count()
     p
   }
 

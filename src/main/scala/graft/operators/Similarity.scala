@@ -572,11 +572,6 @@ object Similarity {
     pairs.distinct()
   }
 
-  /** Dot of a vector column with a driver-side constant vector via the
-   * codegen'd [[graft.functions.VectorDot]]. */
-  private def dotConst(v: Column, c: Array[Double]): Column =
-    graft.functions.VectorDot(v.cast("array<double>"), typedLit(c))
-
   /**
    * C72: hard-negative mining — for each query, the top-k most-similar
    * candidates whose label DIFFERS from the query's (the contrastive-
@@ -709,10 +704,9 @@ object Similarity {
       .select("x_id", "y_id", "cos6")
     val wx = Window.partitionBy("x_id").orderBy(col("cos6").desc, col("y_id"))
     val wy = Window.partitionBy("y_id").orderBy(col("cos6").desc, col("x_id"))
-    val ranked = Scoped.persistTracked(pairs
+    val ranked = Scoped.pinned(pairs
       .withColumn("rx", row_number().over(wx))
       .withColumn("ry", row_number().over(wy)))
-    ranked.count() // pin before the three consumers (sourceDivergence note)
     val nnx = ranked.groupBy("x_id").agg(
       max(when(col("rx") === 1, col("cos6"))).as("n1"),
       max(when(col("rx") === 2, col("cos6"))).as("n2"))

@@ -614,9 +614,9 @@ object CQueries {
       val png = Multimodal.withSyntheticEdgePng(
         docs(s, dir).select(col("doc_id"))
           .repartition(s.sparkContext.defaultParallelism), "doc_id")
+      // the rep aggregate AND the join-back both consume it
       val sig = Multimodal.dHash(png, "img").select(col("doc_id"), col("dhash"))
-        .transform(graft.operators.Scoped.persistTracked)
-      sig.count() // pin: the rep aggregate AND the join-back both consume it
+        .transform(graft.operators.Scoped.pinned)
       val own = graft.operators.Dedup.signatureOwners(sig, "doc_id", "dhash", maxHamming = 6)
       sig.join(own, "dhash")
         .select(col("doc_id"), col("dhash"), col("owner"))

@@ -1318,11 +1318,11 @@ object PipeQueries {
         lit("\">next</a> and <a href=\"/doc/"),
         expr("doc_id div 2").cast(StringType),
         lit("\">parent</a>.</p></body>"))
+      // feeds n_links, the out-aggregate, and the in-degree
       val base = docsPar(s, dir)
         .select(col("doc_id"),
           HtmlExtract(page).getField("links").as("ls"))
-        .transform(graft.operators.Scoped.persistTracked)
-      base.count() // feeds n_links, the out-aggregate, and the in-degree
+        .transform(graft.operators.Scoped.pinned)
       val edges = base
         .select(col("doc_id").as("src"), explode(col("ls")).as("l"))
         .filter(col("l").startsWith("/doc/"))
@@ -1682,8 +1682,7 @@ object PipeQueries {
       val sf = planted
         .select(col("source"), TF.fingerprintMd5(col("text2")).as("fp"))
         .distinct()
-        .transform(graft.operators.Scoped.persistTracked)
-      sf.count()
+        .transform(graft.operators.Scoped.pinned)
       sf.as("a").join(sf.as("b"), Seq("fp"))
         .filter(col("a.source") < col("b.source"))
         .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
@@ -1703,8 +1702,7 @@ object PipeQueries {
       // the sdf branch re-ran the corpus explode+aggregate — pin the
       // vocab×sources-bounded tf table (the sourceDivergence pattern)
       val tf = tok.groupBy("source", "term").agg(count(lit(1)).as("tf"))
-        .transform(graft.operators.Scoped.persistTracked)
-      tf.count()
+        .transform(graft.operators.Scoped.pinned)
       val df = tf.groupBy("term").agg(count(lit(1)).as("sdf"))
       val scored = tf.join(df, "term")
         .withColumn("score", expr("tf * 1000 div sdf"))

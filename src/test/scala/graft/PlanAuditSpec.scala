@@ -166,11 +166,13 @@ class PlanAuditSpec extends SparkSpec {
     // q_c69 = 3: upper bound — the persisted+pinned doc-fingerprint
     // set (1 scan) is referenced three times; executed documents
     // reads: 1 (cache populated by the eager pin count).
-    // q_c70 = 6: same class — the persisted block table's cached
-    // subplan (a 2-branch union, 2 scans) is referenced three times;
-    // executed reads happen at pin time, 0 after. q_c71 = 1: the
-    // ablation aggregate runs over the fit's cached centered frame.
-    "q_c69_winnow" -> 3, "q_c70_edit_neardup" -> 6,
+    // q_c70 = 4: no cache — the block window's exchange over the
+    // 2-branch union (2 scans) feeds the small-block pairs and the
+    // star rows: 2 × 2 in the unexecuted plan; once run, the star
+    // branch reads it as a reused exchange (2 executed reads).
+    // q_c71 = 1: the ablation aggregate runs over the fit's cached
+    // centered frame.
+    "q_c69_winnow" -> 3, "q_c70_edit_neardup" -> 4,
     "q_c71_ablation" -> 1,
     // q_c72 = 2: broadcast probe scan + one candidate scan (the q_c6
     // brute shape with the label filter riding the join). q_c73 = 6:

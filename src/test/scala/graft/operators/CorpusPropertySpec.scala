@@ -177,7 +177,8 @@ class CorpusPropertySpec extends SparkSpec {
 
   test("property: edit-distance pairs == brute-force blocked Levenshtein") {
     // arbitrary docs over a tiny vocab; brute-force replays the block
-    // key, length prefilter, and full DP distance
+    // key, length prefilter, full DP distance and the oversized-block
+    // star against the block's min id
     def lev(a: String, b: String): Int = {
       val d = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
         if (i == 0) j else if (j == 0) i else 0 }
@@ -189,21 +190,46 @@ class CorpusPropertySpec extends SparkSpec {
     def norm(t: String): String =
       t.toLowerCase.replaceAll("[^\\p{L}\\p{N}\\s]", "")
         .replaceAll("\\s+", " ").trim.take(60)
-    val docs = (0L until 120L).map(i => (i, doc(99000 + i, 2, 6)))
+    // a planted block outside the vocab: edited members of varied
+    // length, so the star's length filter (502, 507) and distance
+    // bound (503, 506) both cut pairs against the rep 500
+    val planted = Seq(
+      500L -> "Zulu yankee alpha beta gamma",
+      501L -> "zulu yankee alpha beta gamma x",
+      502L -> "zulu yankee alpha beta gamma delta eps",
+      503L -> "zulu yankex alphx bety gamnz",
+      504L -> "zulu yankee, alpha beta gamma!",
+      505L -> "zulu yankee alpha bet gamma",
+      506L -> "zulu yankee omega beta gamma",
+      507L -> "zulu yankee alpha beta gamma eps",
+      508L -> "zulu yankee alpha beta gam")
+    val docs = (0L until 120L).map(i => (i, doc(99000 + i, 2, 6))) ++ planted
     val maxDist = 3
     val byKey = docs.map { case (id, t) => (id, norm(t)) }
       .groupBy { case (_, c) => c.take(8) }
-    val expected = byKey.values.flatMap { grp =>
+    def expected(cap: Int): Set[(Long, Long, Long)] = byKey.values.flatMap { grp =>
+      val pairs =
+        if (grp.size <= cap) for ((ia, ca) <- grp; (ib, cb) <- grp if ia < ib) yield (ia, ca, ib, cb)
+        else {
+          val (ir, cr) = grp.minBy(_._1)
+          for ((ib, cb) <- grp if ib != ir) yield (ir, cr, ib, cb)
+        }
       for {
-        (ia, ca) <- grp; (ib, cb) <- grp
-        if ia < ib && math.abs(ca.length - cb.length) <= maxDist
+        (ia, ca, ib, cb) <- pairs
+        if math.abs(ca.length - cb.length) <= maxDist
         d = lev(ca, cb) if d <= maxDist
       } yield (ia, ib, d.toLong)
     }.toSet
-    val out = Dedup.editDistancePairs(docs.toDF("doc_id", "text"), "doc_id", "text",
-        maxDist = maxDist, prefixLen = 8, compareLen = 60, maxBucketSize = 1000)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(out == expected)
+    // the cap equals a smaller block's size: that block still pairs
+    // in full (the <= boundary) while the planted block stars
+    val cap = byKey.values.map(_.size).filter(_ < planted.size).max
+    assert(expected(cap).filter(_._1 == 500L).map(_._2) == Set(501L, 504L, 505L, 508L))
+    for (c <- Seq(1000, cap)) {
+      val out = Dedup.editDistancePairs(docs.toDF("doc_id", "text"), "doc_id", "text",
+          maxDist = maxDist, prefixLen = 8, compareLen = 60, maxBucketSize = c)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(out == expected(c), s"cap $c: missing=${expected(c) -- out} extra=${out -- expected(c)}")
+    }
   }
 
   test("property: jaccardJoinExact == brute-force all-pairs Jaccard (complete AND sound)") {

@@ -95,6 +95,12 @@ class ScopedCacheSpec extends SparkSpec {
         "source", "len", Seq(0.0, 0.5, 1.0)))
   }
 
+  test("connectedComponentsStar under withCached leaves no cached plans") {
+    // the returned labels join the persisted node set
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 7L)).toDF("id_a", "id_b")
+    assertScopedClean(Dedup.connectedComponentsStar(edges))
+  }
+
   test("CorpusPipeline.run under withCached leaves no cached plans") {
     // the persisted exact-dedup intermediate is released with the scope
     assertScopedClean(CorpusPipeline.run(docs, nearDupThreshold = 0.9))
