@@ -48,10 +48,10 @@ object Dedup {
    *    banded DP proves dist > maxDist — O(compareLen·maxDist) per
    *    pair, not O(compareLen²).
    *
-   * The only shuffle is the block-keyed window exchange, which the
-   * small-block pairs and the star rows both read; a length pre-filter
-   * (|len_a − len_b| ≤ maxDist, a lower bound on edit distance) culls
-   * pairs before any DP runs. Returns (id_a, id_b, dist), id_a < id_b.
+   * The only shuffle is the block-keyed exchange of [[cappedPairs]]; a
+   * length pre-filter (|len_a − len_b| ≤ maxDist, a lower bound on
+   * edit distance) culls pairs before any DP runs. Returns (id_a,
+   * id_b, dist), id_a < id_b.
    */
   def editDistancePairs(
       df: DataFrame,
@@ -62,38 +62,18 @@ object Dedup {
       compareLen: Int = 400,
       maxBucketSize: Int = 64): DataFrame = {
     require(maxDist >= 0 && prefixLen > 0 && compareLen > prefixLen)
-    // one (block key, member payload) row per doc: both branches read
-    // only these two columns, so they share the block window's exchange
+    // one (block key, member payload) row per doc: the pair sides carry
+    // the compare form, so no pair joins back to the docs
     val base = df.select(
       col(idCol).as("__id"),
       substring(TextFunctions.normalizeText(col(textCol)), 1, compareLen).as("__c"))
       .select(substring(col("__c"), 1, prefixLen).as("__k"),
         struct(col("__id"), col("__c"), length(col("__c")).as("__len")).as("__p"))
-    // the [[minhashCandidates]] gate: a window over the block tags each
-    // row with the block size and the min-id member's payload
-    val block = Window.partitionBy("__k")
-    val tagged = base
-      .withColumn("__n", count(lit(1)).over(block))
-      .withColumn("__rep", min_by(col("__p"), col("__p.__id")).over(block))
-    // small blocks: every i<j pair of the ≤ cap members, the compare
-    // form crossing no further exchange (sorted structs order by __id)
-    val allPairs = sortedIdPairs(
-        tagged.filter(col("__n") <= maxBucketSize), Seq("__k"), "__p")
+    cappedPairs(base, Seq("__k"), "__p", maxBucketSize)
+      .filter(abs(col("id_a.__len") - col("id_b.__len")) <= maxDist)
       .select(col("id_a.__id").as("id_a"), col("id_b.__id").as("id_b"),
-        col("id_a.__c").as("__ca"), col("id_b.__c").as("__cb"),
-        col("id_a.__len").as("__la"), col("id_b.__len").as("__lb"))
-    // oversized blocks: star against the representative only (linear)
-    val starred = tagged
-      .filter(col("__n") > maxBucketSize && col("__p.__id") =!= col("__rep.__id"))
-      .select(col("__rep.__id").as("id_a"), col("__p.__id").as("id_b"),
-        col("__rep.__c").as("__ca"), col("__p.__c").as("__cb"),
-        col("__rep.__len").as("__la"), col("__p.__len").as("__lb"))
-    allPairs.union(starred)
-      .filter(abs(col("__la") - col("__lb")) <= maxDist)
-      .withColumn("dist",
-        levenshtein(col("__ca"), col("__cb"), maxDist).cast(LongType))
+        levenshtein(col("id_a.__c"), col("id_b.__c"), maxDist).cast(LongType).as("dist"))
       .filter(col("dist") >= 0)
-      .select("id_a", "id_b", "dist")
   }
 
   /**
@@ -116,21 +96,13 @@ object Dedup {
    * emit every i<j pair.
    *
    * Plan shape of the capped arm: the signatures are computed once and
-   * shuffled once, on (band, band_hash). A window count and min over
-   * that key tag each row with its bucket's size `__n` and min id
-   * `__rep`. An aggregate joined back to the banded frame would
-   * evaluate the signature and shuffle the banded rows once per
-   * consumer. Spark's window buffer spills, so a huge boilerplate
-   * bucket stays safe. The small buckets collect their ≤ cap sorted
-   * ids on the already-partitioned window output and explode the i<j
-   * pairs map-side ([[sortedIdPairs]], the [[sharedKeyPairs]] device:
-   * n(n−1)/2 rows per bucket where a self-join emits n² before its
-   * filter); the star rows read the same exchange (reused). One
-   * `distinct` over the union removes pairs that collide in several
-   * bands.
+   * shuffled once, on (band, band_hash), and [[cappedPairs]] reads
+   * that exchange once. One `distinct` removes pairs that collide in
+   * several bands.
    *
    * The uncapped arm (`maxBucketSize` ≤ 0) stays a plain bucket
-   * self-join: with nothing to gate, a window costs more than it saves.
+   * self-join: with nothing to gate it measured faster than the
+   * collect-and-explode pass.
    * `parallelism` > 0 spreads the signature compute when the input has
    * few splits (single-row-group files locally); at cluster scale
    * inputs are already partitioned and 0 (no extra shuffle) is right.
@@ -153,20 +125,7 @@ object Dedup {
         .filter(col("id_a") < col("id_b"))
         .select("id_a", "id_b")
         .distinct()
-    } else {
-      val bucket = Window.partitionBy("band", "band_hash")
-      val tagged = banded
-        .withColumn("__n", count(lit(1)).over(bucket))
-        .withColumn("__rep", min(col("__id")).over(bucket))
-      val allPairs = sortedIdPairs(
-          tagged.filter(col("__n") <= maxBucketSize), Seq("band", "band_hash"), "__id")
-        .filter(col("id_a") < col("id_b"))
-      // __rep is the bucket min, so (rep, id) is already (lo, hi)
-      val starred = tagged
-        .filter(col("__n") > maxBucketSize && col("__id") =!= col("__rep"))
-        .select(col("__rep").as("id_a"), col("__id").as("id_b"))
-      allPairs.union(starred).distinct()
-    }
+    } else cappedPairs(banded, Seq("band", "band_hash"), "__id", maxBucketSize).distinct()
   }
 
   /** MinHash-LSH band keys: one (band, band_hash, `out`) row per band
@@ -881,13 +840,23 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
+      threshold: Double): DataFrame =
+    verifyPairs(candidates, docs, docs, idCol, textCol, threshold)
+
+  /** [[verifyJaccard]] reading id_a's texts from `docsA` and id_b's
+   * from `docsB`. */
+  private def verifyPairs(
+      candidates: DataFrame,
+      docsA: DataFrame,
+      docsB: DataFrame,
+      idCol: String,
+      textCol: String,
       threshold: Double): DataFrame = {
-    val words = docs.select(
-      col(idCol).as("__jid"),
-      array_distinct(TextFunctions.tokens(col(textCol))).as("__words"))
+    def words(docs: DataFrame, side: String, w: String): DataFrame = docs.select(
+      col(idCol).as(side), array_distinct(TextFunctions.tokens(col(textCol))).as(w))
     candidates
-      .join(words.withColumnRenamed("__jid", "id_a").withColumnRenamed("__words", "wa"), Seq("id_a"))
-      .join(words.withColumnRenamed("__jid", "id_b").withColumnRenamed("__words", "wb"), Seq("id_b"))
+      .join(words(docsA, "id_a", "wa"), Seq("id_a"))
+      .join(words(docsB, "id_b", "wb"), Seq("id_b"))
       .withColumn("jaccard", jaccard(col("wa"), col("wb")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
@@ -937,19 +906,13 @@ object Dedup {
     val candidates = banded(newProj, "id_b")
       .join(oldBanded, Seq("band", "band_hash"))
       .select("id_a", "id_b").distinct()
-    val words = (df: DataFrame, side: String, w: String) => df.select(
-      col(idCol).as(side), array_distinct(TextFunctions.tokens(col(textCol))).as(w))
-    val verified = candidates
-      .join(words(oldDocs, "id_a", "wa"), Seq("id_a"))
-      .join(words(newProj, "id_b", "wb"), Seq("id_b"))
-      .withColumn("__j", jaccard(col("wa"), col("wb")))
-      .filter(col("__j") >= threshold)
+    val verified = verifyPairs(candidates, oldDocs, newProj, idCol, textCol, threshold)
       .groupBy(col("id_b"))
       .agg(
         min(col("id_a")).as("matched_old_id"),
         // the jaccard OF the kept (smallest-id) match, not the max over
         // all matches — keeps the row a deterministic function of ids
-        expr("min_by(__j, id_a)").as("jaccard"))
+        min_by(col("jaccard"), col("id_a")).as("jaccard"))
     newProj.select(col(idCol).as("new_id"))
       .join(verified.withColumnRenamed("id_b", "new_id"), Seq("new_id"), "left")
   }
@@ -989,18 +952,19 @@ object Dedup {
       minContainPpm: Long = 500000L): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     require(dfCap >= 2, s"dfCap must be >= 2 (pairs need both sides), got $dfCap")
-    val keyed = docs
+    // each posting carries its doc's distinct-shingle count as the
+    // owner payload, so the sizes need no aggregate joined back
+    val sh = docs
       .select(col(idCol).as("__id"), TextFunctions.tokens(col(textCol)).as("__t"))
       .filter(size(col("__t")) >= n)
-      .select(col("__id"),
-        explode(array_distinct(graft.functions.WordShingles(col("__t"), n))).as("__g"))
-    // feeds sizes and the posting-group pass
-    val sh = keyed.select(col("__id"), xxhash64(col("__g")).as("__g"))
-      .transform(Scoped.pinned)
-    val sizes = sh.groupBy("__id").agg(count(lit(1)).as("sz"))
-    sharedKeyPairs(sh, "__g", "__id", dfCap).withColumnRenamed("n", "inter")
-      .join(sizes.select(col("__id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("__id").as("id_b"), col("sz").as("sz_b")), "id_b")
+      .select(col("__id"), array_distinct(graft.functions.WordShingles(col("__t"), n)).as("__gs"))
+      // exploding an expression, not the bare column, keeps Spark from
+      // inferring a size(__gs) > 0 filter that rebuilds the shingles
+      .select(struct(col("__id"), size(col("__gs")).cast(LongType).as("sz")).as("__o"),
+        explode(transform(col("__gs"), xxhash64(_))).as("__g"))
+    sharedKeyPairs(sh, "__g", "__o", dfCap)
+      .select(col("id_a.__id").as("id_a"), col("id_b.__id").as("id_b"), col("n").as("inter"),
+        col("id_a.sz").as("sz_a"), col("id_b.sz").as("sz_b"))
       .withColumn("contain_a_ppm", expr("inter * 1000000L div sz_a"))
       .withColumn("contain_b_ppm", expr("inter * 1000000L div sz_b"))
       .filter(greatest(col("contain_a_ppm"), col("contain_b_ppm")) >= minContainPpm)
@@ -1041,18 +1005,49 @@ object Dedup {
         Seq(key), owner)
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n"))
 
+  /**
+   * The capped-bucket pair device ([[minhashCandidates]],
+   * [[editDistancePairs]]): every i<j `owner` pair of each `keys` bucket
+   * of at most `cap` rows, and in a bigger (boilerplate) bucket each
+   * member paired with the bucket's min owner only, a linear star.
+   * One window over `keys` gives the bucket size `__n` and min owner
+   * `__rep`; then ONE aggregate keyed `keys` plus, in an oversized
+   * bucket, the row's own owner collects the sorted owners. The
+   * window's partitioning satisfies that key: no second exchange and no
+   * second Sort + Window. A small bucket explodes its i<j pairs, an
+   * oversized-bucket member (`__rep`, member). A struct `owner` orders
+   * by its first field, the id; id_a < id_b strictly on that id, so a
+   * duplicated id never pairs with itself. The window buffer spills.
+   */
+  private def cappedPairs(
+      frame: DataFrame, keys: Seq[String], owner: String, cap: Int): DataFrame = {
+    val id: String => Column = frame.schema(owner).dataType match {
+      case s: StructType => side => col(side).getField(s.head.name)
+      case _ => side => col(side)
+    }
+    val bucket = Window.partitionBy(keys.map(col): _*)
+    val tagged = frame
+      .withColumn("__n", count(lit(1)).over(bucket))
+      .withColumn("__rep", min(col(owner)).over(bucket))
+      .filter(col("__n") >= 2)
+      .withColumn("__solo", when(col("__n") > cap, col(owner)))
+    sortedIdPairs(tagged, keys :+ "__solo", owner,
+        ids => when(col("__solo").isNull, ids).otherwise(array(min(col("__rep")), col("__solo"))))
+      .filter(id("id_a") < id("id_b"))
+  }
+
   /** Every (id_a, id_b) position pair i<j of each `keys` group's
-   * sorted `owner` list: one collect per group, then a map-side
-   * explode. Call it on rows already gated to small groups and
+   * sorted `owner` list (rewritten by `list` before the explode): one
+   * collect per group, then a map-side explode. Call it on rows
    * partitioned on `keys` (a window over `keys`), so the collect adds
-   * no exchange and per-group state is bounded by the gate. An owner
+   * no exchange, and gated so per-group state stays bounded. An owner
    * that appears twice in a group yields (x, x); callers whose rows
-   * are not owner-distinct filter id_a < id_b. A struct `owner` whose
-   * first field is the id sorts by that id and carries its payload
-   * into both pair sides (editDistancePairs). */
-  private def sortedIdPairs(gated: DataFrame, keys: Seq[String], owner: String): DataFrame =
+   * are not owner-distinct filter id_a < id_b. A struct `owner` sorts
+   * by its first field and carries the rest into both pair sides. */
+  private def sortedIdPairs(gated: DataFrame, keys: Seq[String], owner: String,
+      list: Column => Column = identity): DataFrame =
     gated
-      .groupBy(keys.map(col): _*).agg(sort_array(collect_list(col(owner))).as("__ids"))
+      .groupBy(keys.map(col): _*).agg(list(sort_array(collect_list(col(owner)))).as("__ids"))
       .select(col("__ids"), posexplode(col("__ids")).as(Seq("__pa", "id_a")))
       .select(col("id_a"),
         explode(slice(col("__ids"), col("__pa") + lit(2), size(col("__ids"))))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions.col
 
 /**
@@ -78,10 +79,10 @@ class PlanAuditSpec extends SparkSpec {
     // q_b18 = 1: two same-key windows + same-key per-user aggregate +
     // one-row rollup, single scan.
     "q_b18_funnel" -> 1,
-    // q_c91 = 6: the ONE persisted shingle frame (base ∪ excerpt, 2
-    // scans) is referenced three times: 3 × 2 (upper bound, one
-    // executed scan pair; PlanAuditSpec scaladoc).
-    "q_c91_containment" -> 6,
+    // q_c91 = 2: no cache — the posting frame over base ∪ excerpt (2
+    // scans) feeds one posting-group pass; each posting carries its
+    // doc's size, so no sizes aggregate is joined back.
+    "q_c91_containment" -> 2,
     // q_c83 = 1: single scan, codegen canonicalization, one aggregate.
     "q_c83_url_canon" -> 1,
     // q_log_scan_stats = 0 parquet scans: the final plan reads only the
@@ -166,13 +167,11 @@ class PlanAuditSpec extends SparkSpec {
     // q_c69 = 3: upper bound — the persisted+pinned doc-fingerprint
     // set (1 scan) is referenced three times; executed documents
     // reads: 1 (cache populated by the eager pin count).
-    // q_c70 = 4: no cache — the block window's exchange over the
-    // 2-branch union (2 scans) feeds the small-block pairs and the
-    // star rows: 2 × 2 in the unexecuted plan; once run, the star
-    // branch reads it as a reused exchange (2 executed reads).
+    // q_c70 = 2: no cache — one block window over the 2-branch union
+    // (2 scans) feeds the one capped-pair aggregate.
     // q_c71 = 1: the ablation aggregate runs over the fit's cached
     // centered frame.
-    "q_c69_winnow" -> 3, "q_c70_edit_neardup" -> 4,
+    "q_c69_winnow" -> 3, "q_c70_edit_neardup" -> 2,
     "q_c71_ablation" -> 1,
     // q_c72 = 2: broadcast probe scan + one candidate scan (the q_c6
     // brute shape with the label filter riding the join). q_c73 = 6:
@@ -450,6 +449,27 @@ class PlanAuditSpec extends SparkSpec {
     p.expressions.map(_.collect { case m: MinHashSig => m }.size).sum
   }
 
+  /** `WindowExec` nodes: each one sorts and windows its input again. */
+  private def windows(plan: SparkPlan): Int = planSum(plan) {
+    case _: WindowExec => 1
+    case _ => 0
+  }
+
+  test("capped pair operators read their bucket exchange through one Window") {
+    // one window over the bucket key tags size and min owner; the
+    // small-bucket pairs and the star pairs come out of one aggregate
+    // on the same partitioning, so no second Sort + Window over a
+    // reused exchange
+    def executedWindows(df: DataFrame): Int = {
+      df.collect()
+      windows(df.queryExecution.executedPlan)
+    }
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    assert(executedWindows(
+      Dedup.minhashCandidates(docs, "doc_id", "text", maxBucketSize = 3)) == 1)
+    assert(executedWindows(SparkEntry.queries("q_c70_edit_neardup")(spark, sfDir)) == 1)
+  }
+
   test("capped MinHash-LSH operators evaluate MinHashSig once") {
     // the final (AQE) plan exists only after the action runs, and only
     // then are repeated exchanges replaced by reused ones
@@ -461,8 +481,7 @@ class PlanAuditSpec extends SparkSpec {
     val older = docs.filter(col("doc_id") % 2 === 0)
     val newer = docs.filter(col("doc_id") % 2 === 1)
     // candidates: one signature select feeds one exchange on (band,
-    // band_hash); the window's small-bucket and star branches share it
-    // (the star branch reads it as a reused exchange) = 1
+    // band_hash), read by one window = 1
     try {
       assert(evals(Dedup.minhashCandidates(docs, "doc_id", "text", maxBucketSize = 3)) == 1)
       // drop = candidates 1 + verify (tokens only) 0 + anti join 0 = 1

@@ -203,7 +203,10 @@ class CorpusPropertySpec extends SparkSpec {
       506L -> "zulu yankee omega beta gamma",
       507L -> "zulu yankee alpha beta gamma eps",
       508L -> "zulu yankee alpha beta gam")
-    val docs = (0L until 120L).map(i => (i, doc(99000 + i, 2, 6))) ++ planted
+    // 505 appears twice with one text: it pairs with every other
+    // member, never with itself (id_a < id_b), whether its block pairs
+    // in full or stars
+    val docs = (0L until 120L).map(i => (i, doc(99000 + i, 2, 6))) ++ planted :+ planted(5)
     val maxDist = 3
     val byKey = docs.map { case (id, t) => (id, norm(t)) }
       .groupBy { case (_, c) => c.take(8) }

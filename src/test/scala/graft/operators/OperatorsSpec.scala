@@ -729,6 +729,52 @@ class OperatorsSpec extends SparkSpec {
     assert(uncapped.nonEmpty)
   }
 
+  test("C91 containmentPairs equal a Scala reference: pairs, inter, sizes and ppm") {
+    val n = 5
+    val rng = new scala.util.Random(91)
+    val vocab = Seq("ka", "lo", "mi", "nu", "pe", "ro")
+    def words(k: Int): String = Seq.fill(k)(vocab(rng.nextInt(vocab.size))).mkString(" ")
+    def prefix(t: String, k: Int): String = t.split(" ").take(k).mkString(" ")
+    val footer = (1 to 12).map(i => s"foot$i").mkString(" ")
+    val banner = (1 to 9).map(i => s"banner$i").mkString(" ")
+    val base = (0 until 70).map(i => i.toLong -> words(6 + rng.nextInt(14)))
+    val corpus =
+      // a footer in 60 docs: its shingles exceed both dfCaps
+      base.take(60).map { case (id, t) => id -> s"$t $footer" } ++ base.drop(60) ++
+      // a banner in 20 docs: kept at dfCap 50, dropped at dfCap 2
+      (100 until 120).map(i => i.toLong -> s"$banner ${words(4)}") ++
+      // excerpts: a doc's 8-token prefix (every shingle shared by 2)
+      (0 until 10).map(i => (200L + i) -> prefix(base(i)._2, 8)) ++
+      // fewer than n tokens: gated out
+      Seq(300L -> "ka lo mi", 301L -> "")
+    val sets = corpus.map { case (id, t) =>
+      val toks = t.trim.split("\\s+").filter(_.nonEmpty).toSeq
+      id -> (if (toks.size < n) Set.empty[String]
+             else toks.sliding(n).map(_.mkString(" ")).toSet)
+    }.filter(_._2.nonEmpty)
+    val df = sets.flatMap(_._2).groupBy(identity).map { case (g, v) => g -> v.size }
+    def reference(dfCap: Int, minPpm: Long): Set[(Long, Long, Long, Long, Long, Long, Long)] =
+      (for {
+        (a, sa) <- sets; (b, sb) <- sets if a < b
+        inter = (sa & sb).count(g => df(g) <= dfCap).toLong if inter > 0
+        ca = inter * 1000000L / sa.size; cb = inter * 1000000L / sb.size
+        if math.max(ca, cb) >= minPpm
+      } yield (a, b, inter, sa.size.toLong, sb.size.toLong, ca, cb)).toSet
+    assert(df.values.exists(_ > 50) && df.values.exists(d => d > 2 && d <= 50) &&
+      df.values.exists(_ == 2), "corpus must hit both sides of dfCaps 2 and 50")
+    val dd = corpus.toDF("doc_id", "text")
+    for ((dfCap, minPpm) <- Seq((2, 1L), (50, 1L), (2, 500000L), (50, 500000L))) {
+      val got = Dedup.containmentPairs(dd, dfCap = dfCap, minContainPpm = minPpm)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6)))
+      assert(got.length == got.distinct.length, s"dfCap $dfCap: duplicate pairs")
+      val want = reference(dfCap, minPpm)
+      assert(want.nonEmpty)
+      assert(got.toSet == want,
+        s"dfCap $dfCap, minPpm $minPpm: missing=${want -- got} extra=${got.toSet -- want}")
+    }
+  }
+
   test("C95 lshRecallAudit: per-decile recall equals an independent md5 replay; exact dups always caught") {
     def md5Hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")
