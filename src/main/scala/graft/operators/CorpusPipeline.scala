@@ -1342,18 +1342,17 @@ object CorpusPipeline {
    *
    * Determinism/parity: hashes are the 52-bit md5 prefix (the
    * [[sourceMinhash]] hash both engines replay); the per-position
-   * minimum is a doc-keyed ROWS window (`[pos, pos+w−1]`, full
-   * windows only via a frame count), and the fingerprint SET is the
-   * distinct minima values — value-set semantics sidestep the
-   * rightmost-tie rule of the paper, which no SQL window can express
-   * portably and which only matters for positional attribution.
+   * minimum is a window over one row's grams (`[pos, pos+w−1]`, full
+   * windows only), and the fingerprint SET is the distinct minima
+   * values — value-set semantics sidestep the rightmost-tie rule of
+   * the paper, which no SQL window can express portably and which only
+   * matters for positional attribution. Rows sharing an id are one
+   * document: its set is the union of its rows' fingerprints.
    *
-   * Scale shape: the window pass is doc-partitioned (state = w
-   * hashes); the doc-fingerprint set is persisted+pinned because
-   * BOTH sides of the pair join and the per-doc totals consume it
-   * (df⋈aggregate(df) recompute rule — at 100 TB this table is the
-   * thing you'd write to storage between stages); fingerprints shared
-   * by more than `maxDocsPerFp` docs are dropped before pairing (the
+   * Scale shape: the window pass is row-partitioned (state = w
+   * hashes); the fingerprints go through [[Dedup.sharedKeyPairs]],
+   * which merges them per doc, sizes each set and drops fingerprints
+   * shared by more than `maxDocsPerFp` docs before pairing (the
    * [[invertedIndex]] dfCap rule: boilerplate fingerprints otherwise
    * make the pair step quadratic in the hottest key); output is the
    * deterministic top-`topPairs` by (shared DESC, ids).
@@ -1371,27 +1370,23 @@ object CorpusPipeline {
     val W = org.apache.spark.sql.expressions.Window
     val grams = docs
       .filter(size(TF.tokens(col(textCol))) >= k + w - 1)
-      .select(col(idCol).as("__id"),
+      .select(col(idCol).as("__id"), xxhash64(col(textCol)).as("__t"),
         posexplode(TF.shingles(col(textCol), k)).as(Seq("pos", "g")))
-      .select(col("__id"), col("pos"),
+      .select(col("__id"), col("__t"), col("pos"),
         Md5HexSlice.md552(col("g")).as("h"))
-    val frame = W.partitionBy("__id").orderBy("pos")
-      .rowsBetween(W.currentRow, w - 1)
+    // a RANGE frame over one row's positions: a repeated (id, text)
+    // row doubles each position without widening the window
+    val frame = W.partitionBy("__id", "__t").orderBy("pos")
+      .rangeBetween(W.currentRow, w - 1)
     val fps = grams
       .withColumn("__mn", min(col("h")).over(frame))
-      .withColumn("__cw", count(lit(1)).over(frame))
-      .filter(col("__cw") === w)
+      .withColumn("__last", max(col("pos")).over(frame))
+      .filter(col("__last") === col("pos") + (w - 1))
       .select(col("__id"), col("__mn").as("fp"))
-      .distinct()
-      .transform(Scoped.pinned)
-    val totals = fps.groupBy("__id").agg(count(lit(1)).as("nfp"))
-    val pairs = Dedup.sharedKeyPairs(fps, "fp", "__id", maxDocsPerFp)
+    Dedup.sharedKeyPairs(fps, "fp", "__id", maxDocsPerFp)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
-        col("n").as("shared_fps"))
+        col("n").as("shared_fps"), col("sz_a").as("fps_a"), col("sz_b").as("fps_b"))
       .filter(col("shared_fps") >= minShared)
-    pairs
-      .join(totals.select(col("__id").as("doc_a"), col("nfp").as("fps_a")), "doc_a")
-      .join(totals.select(col("__id").as("doc_b"), col("nfp").as("fps_b")), "doc_b")
       .withColumn("containment_ppm",
         expr("shared_fps * 1000000 div least(fps_a, fps_b)"))
       .select("doc_a", "doc_b", "shared_fps", "fps_a", "fps_b", "containment_ppm")

@@ -841,24 +841,35 @@ object Dedup {
       idCol: String,
       textCol: String,
       threshold: Double): DataFrame =
-    verifyPairs(candidates, docs, docs, idCol, textCol, threshold)
+    verifyPairs(candidates, wordSets(docs, idCol, textCol), Seq("__id"), threshold)
 
-  /** [[verifyJaccard]] reading id_a's texts from `docsA` and id_b's
-   * from `docsB`. */
+  /** (`__id`, `__w`): each row's distinct-word set. */
+  private def wordSets(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("__id"), array_distinct(TextFunctions.tokens(col(textCol))).as("__w"))
+
+  /** [[verifyJaccard]] reading `words` once: both endpoints of each
+   * distinct candidate pair (side `__s`: 0 = id_a, 1 = id_b) meet it in
+   * ONE join on `on` and regroup per pair. Each (a-row, b-row) pair of
+   * word sets yields a row per candidate copy: the multiset of joining
+   * `words` to each side. */
   private def verifyPairs(
       candidates: DataFrame,
-      docsA: DataFrame,
-      docsB: DataFrame,
-      idCol: String,
-      textCol: String,
+      words: DataFrame,
+      on: Seq[String],
       threshold: Double): DataFrame = {
-    def words(docs: DataFrame, side: String, w: String): DataFrame = docs.select(
-      col(idCol).as(side), array_distinct(TextFunctions.tokens(col(textCol))).as(w))
+    def side(s: Int): Column = collect_list(when(col("__s") === s, col("__w")))
     candidates
-      .join(words(docsA, "id_a", "wa"), Seq("id_a"))
-      .join(words(docsB, "id_b", "wb"), Seq("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("__m"))
+      .select(col("id_a"), col("id_b"), col("__m"), inline(array(
+        struct(col("id_a").as("__id"), lit(0).as("__s")),
+        struct(col("id_b").as("__id"), lit(1).as("__s")))))
+      .join(words, on)
+      .groupBy("id_a", "id_b", "__m").agg(side(0).as("__as"), side(1).as("__bs"))
+      .select(col("*"), explode(col("__as")).as("wa"))
+      .select(col("*"), explode(col("__bs")).as("wb"))
       .withColumn("jaccard", jaccard(col("wa"), col("wb")))
       .filter(col("jaccard") >= threshold)
+      .withColumn("__copy", explode(array_repeat(lit(0), col("__m").cast(IntegerType))))
       .select("id_a", "id_b", "jaccard")
   }
 
@@ -876,7 +887,7 @@ object Dedup {
    * bucket join, exact distinct-word Jaccard); `maxBucketSize` drops
    * boilerplate buckets on the OLD side (same cap semantics as
    * [[minhashCandidates]]). The only shuffles are the bucket join and
-   * the two verify joins — new-batch-sized, not corpus-sized.
+   * the verify join and regroup — new-batch-sized, not corpus-sized.
    */
   def incrementalNearDup(
       oldDocs: DataFrame,
@@ -906,7 +917,11 @@ object Dedup {
     val candidates = banded(newProj, "id_b")
       .join(oldBanded, Seq("band", "band_hash"))
       .select("id_a", "id_b").distinct()
-    val verified = verifyPairs(candidates, oldDocs, newProj, idCol, textCol, threshold)
+    // each table is read once; the side tag keeps an id present in
+    // both corpora from meeting its other-side text
+    val words = wordSets(oldDocs, idCol, textCol).withColumn("__s", lit(0))
+      .unionByName(wordSets(newProj, idCol, textCol).withColumn("__s", lit(1)))
+    val verified = verifyPairs(candidates, words, Seq("__id", "__s"), threshold)
       .groupBy(col("id_b"))
       .agg(
         min(col("id_a")).as("matched_old_id"),
@@ -952,19 +967,12 @@ object Dedup {
       minContainPpm: Long = 500000L): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     require(dfCap >= 2, s"dfCap must be >= 2 (pairs need both sides), got $dfCap")
-    // each posting carries its doc's distinct-shingle count as the
-    // owner payload, so the sizes need no aggregate joined back
     val sh = docs
       .select(col(idCol).as("__id"), TextFunctions.tokens(col(textCol)).as("__t"))
       .filter(size(col("__t")) >= n)
-      .select(col("__id"), array_distinct(graft.functions.WordShingles(col("__t"), n)).as("__gs"))
-      // exploding an expression, not the bare column, keeps Spark from
-      // inferring a size(__gs) > 0 filter that rebuilds the shingles
-      .select(struct(col("__id"), size(col("__gs")).cast(LongType).as("sz")).as("__o"),
-        explode(transform(col("__gs"), xxhash64(_))).as("__g"))
-    sharedKeyPairs(sh, "__g", "__o", dfCap)
-      .select(col("id_a.__id").as("id_a"), col("id_b.__id").as("id_b"), col("n").as("inter"),
-        col("id_a.sz").as("sz_a"), col("id_b.sz").as("sz_b"))
+      .select(col("__id"),
+        explode(transform(graft.functions.WordShingles(col("__t"), n), xxhash64(_))).as("__g"))
+    sharedKeyPairs(sh, "__g", "__id", dfCap).withColumnRenamed("n", "inter")
       .withColumn("contain_a_ppm", expr("inter * 1000000L div sz_a"))
       .withColumn("contain_b_ppm", expr("inter * 1000000L div sz_b"))
       .filter(greatest(col("contain_a_ppm"), col("contain_b_ppm")) >= minContainPpm)
@@ -974,36 +982,32 @@ object Dedup {
 
   /**
    * The posting-group pair device (containmentPairs, lshRecallAudit,
-   * CorpusPipeline.winnowFingerprints): over doc-distinct `postings`
-   * (`owner`, `key`), every owner pair sharing a key whose df ≤ `cap`,
-   * with the number of such shared keys.
+   * CorpusPipeline.winnowFingerprints): over (`id`, `key`) postings,
+   * where rows sharing an id are ONE document's set, every id pair
+   * sharing a key whose df ≤ `cap`, with the number of such keys and
+   * both sets' sizes. One id-keyed collect makes each set distinct and
+   * sizes it before the cap (exact sizes, conservative intersections);
+   * the size rides the owner struct into one key exchange, a same-key
+   * window df count (near-unique keys), the cap gate and
+   * [[sortedIdPairs]]. A key lists each id once, so id_a < id_b.
    *
-   * r19: ONE pass over the postings instead of the kept = p⋈dfTbl
-   * SELF-join — that shape evaluated dfTbl and the join once PER pair
-   * side (the df⋈agg(df) recompute class) and moved the
-   * 25M-row ×100 posting frame through ~5 full-size exchanges for a
-   * pair stream that is only Σ df(df−1)/2 ≈ 1.7M rows (measured at
-   * sf10: Σ df² 28.8M vs Σ df 25.4M — nearly all grams are df=1).
-   * Now: one exchange on the key, a same-key window df count
-   * (near-unique keys — the window ≈ aggregate regime of the BASELINE
-   * r16 appendix, and it saves the join's second exchange), the cap
-   * gate, then the dupGramStats device — collect the ≤ cap sorted
-   * owner list per key WITHOUT a new exchange and explode the i<j
-   * combinations map-side. Per-key state is bounded by cap ids (the
-   * gate runs before the collect). Pair multiplicity per key is
-   * exactly 1 (postings are doc-distinct), so the count-per-(a,b)
-   * aggregate is the same capped intersection as the old self-join's.
-   *
-   * @return (id_a, id_b, n) with id_a < id_b
+   * @return (id_a, id_b, n, sz_a, sz_b)
    */
   private[operators] def sharedKeyPairs(
-      postings: DataFrame, key: String, owner: String, cap: Int): DataFrame =
+      postings: DataFrame, key: String, id: String, cap: Int): DataFrame = {
+    val owned = postings
+      .groupBy(col(id).as("__id")).agg(collect_set(col(key)).as("__ks"))
+      .select(struct(col("__id"), size(col("__ks")).cast(LongType).as("sz")).as("__o"),
+        explode(col("__ks")).as("__k"))
     sortedIdPairs(
-        postings
-          .withColumn("__df", count(lit(1)).over(Window.partitionBy(key)))
+        owned
+          .withColumn("__df", count(lit(1)).over(Window.partitionBy("__k")))
           .filter(col("__df") <= cap),
-        Seq(key), owner)
+        Seq("__k"), "__o")
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n"))
+      .select(col("id_a.__id").as("id_a"), col("id_b.__id").as("id_b"), col("n"),
+        col("id_a.sz").as("sz_a"), col("id_b.sz").as("sz_b"))
+  }
 
   /**
    * The capped-bucket pair device ([[minhashCandidates]],
@@ -1040,10 +1044,10 @@ object Dedup {
    * sorted `owner` list (rewritten by `list` before the explode): one
    * collect per group, then a map-side explode. Call it on rows
    * partitioned on `keys` (a window over `keys`), so the collect adds
-   * no exchange, and gated so per-group state stays bounded. An owner
-   * that appears twice in a group yields (x, x); callers whose rows
-   * are not owner-distinct filter id_a < id_b. A struct `owner` sorts
-   * by its first field and carries the rest into both pair sides. */
+   * no exchange, and gated so per-group state stays bounded. A struct
+   * `owner` sorts by its first field, the id, and carries the rest into
+   * both pair sides; an id twice in one group yields (x, x), which
+   * [[cappedPairs]] filters. */
   private def sortedIdPairs(gated: DataFrame, keys: Seq[String], owner: String,
       list: Column => Column = identity): DataFrame =
     gated
@@ -1097,9 +1101,10 @@ object Dedup {
    * curve, which is exactly what this audit exists to catch.
    *
    * The md5 signature chain (h = md5₅₂(g), slot_j = md5₅₂(h ∥ "_j"))
-   * is the C68/C93 replayable device; ground truth reads ONE persisted
-   * distinct-(id, h) frame and the signatures one map-only pass over
-   * the sampled docs. The catch test never materializes the LSH pair
+   * is the C68/C93 replayable device; ground truth is one pass of the
+   * (id, h) postings through [[sharedKeyPairs]] (rows sharing an id
+   * are one document) and the signatures one map-only pass over the
+   * sampled docs. The catch test never materializes the LSH pair
    * explosion: both endpoints of every true pair (bounded by the df
    * cap) join the per-id signature table once, and a pair is caught
    * iff ANY band's sig-tuple matches — 2·|true pairs| rows, never
@@ -1145,17 +1150,11 @@ object Dedup {
       if (samplePpm >= 1000000L) docs
       else docs.filter(
         TextFunctions.md5Bucket(col(idCol).cast(StringType), 1000000) < samplePpm)
-    // feeds sizes, the df table and the pair path (the sig path is
-    // map-only over the sampled docs since r20)
     val hs = sampled
       .select(col(idCol).cast(LongType).as("id"),
         explode(TextFunctions.shingles(col(textCol), n)).as("g"))
-      .select(col("id"), Md5HexSlice.md552(col("g")).as("h")).distinct()
-      .transform(Scoped.pinned)
-    val sizes = hs.groupBy("id").agg(count(lit(1)).as("sz"))
+      .select(col("id"), Md5HexSlice.md552(col("g")).as("h"))
     val pairs = sharedKeyPairs(hs, "h", "id", dfCap).withColumnRenamed("n", "inter")
-      .join(sizes.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
       .withColumn("j_ppm", expr("inter * 1000000L div (sz_a + sz_b - inter)"))
       .filter(col("j_ppm") >= minJaccardPpm)
     // r20: signatures compute MAP-ONLY per sampled row (Md5MinhashSig
@@ -1171,18 +1170,22 @@ object Dedup {
           TextFunctions.tokens(col(textCol)), n, sigs))).as("__sig"))
     // Both endpoints of a pair meet sigTbl in ONE join, so the sampled
     // scan and the signatures run once (one reference per side would
-    // run them twice); the pair's two signatures (every hs id has one)
-    // regroup under the pair key, caught when any band's slots agree.
+    // run them twice); each side's row signatures regroup under the
+    // pair key. A side whose id has several rows is one document: the
+    // slot-wise min of its row signatures is its set's signature. The
+    // pair is caught when any band's slots agree.
     val rpb = sigs / bands
     def band(sig: Column, b: Int) = slice(sig, b * rpb + 1, rpb)
+    def side(id: String): Column = aggregate(collect_list(when(col("id") === col(id), col("__sig"))),
+      array_repeat(lit(Long.MaxValue), sigs), (acc, s) => zip_with(acc, s, least(_, _)))
     pairs
       .select(col("id_a"), col("id_b"), col("j_ppm"),
         explode(array(col("id_a"), col("id_b"))).as("id"))
       .join(sigTbl, "id")
       .groupBy("id_a", "id_b", "j_ppm")
-      .agg(collect_list(col("__sig")).as("__s"))
+      .agg(side("id_a").as("__sa"), side("id_b").as("__sb"))
       .withColumn("caught", (0 until bands)
-        .map(b => band(element_at(col("__s"), 1), b) === band(element_at(col("__s"), 2), b))
+        .map(b => band(col("__sa"), b) === band(col("__sb"), b))
         .reduce(_ || _).cast(LongType))
       .withColumn("decile", expr("j_ppm div 100000L"))
       .groupBy("decile")
@@ -1249,11 +1252,15 @@ object Dedup {
         explode(TextFunctions.shingles(col(textCol), shingle)).as("g"))
       .select(col("id"), Md5HexSlice.md552(col("g")).as("h")).distinct()
       .transform(Scoped.pinned)
+    // the df join stays a join: boilerplate hashes are hot keys and
+    // need the AQE skew split
     val dfTbl = toks.groupBy("h").agg(count(lit(1)).as("df"))
-    val sizes = toks.groupBy("id").agg(count(lit(1)).as("n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("df"), col("h"))
-    val prefix = toks.join(dfTbl, "h").join(sizes, "id")
+    // |x| is a whole-partition count in the rank window's own spec, so
+    // one Window node computes both, with no sizes aggregate joined back
+    val w = Window.partitionBy("id").orderBy(col("df"), col("h"))
+    val prefix = toks.join(dfTbl, "h")
+      .withColumn("n",
+        count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .withColumn("__r", row_number().over(w))
       .filter(col("__r") <=
         col("n") - expr(s"($thresholdPpm * n + 999999) div 1000000") + 1)

@@ -164,14 +164,13 @@ class PlanAuditSpec extends SparkSpec {
     // signature table (1 scan each); executed reads: 1.
     "q_c66_perceptron" -> 1, "q_c67_top_component" -> 0,
     "q_c68_source_minhash" -> 2,
-    // q_c69 = 3: upper bound — the persisted+pinned doc-fingerprint
-    // set (1 scan) is referenced three times; executed documents
-    // reads: 1 (cache populated by the eager pin count).
+    // q_c69 = 1: no cache — the fingerprint window (1 scan) feeds one
+    // posting-pair pass, which carries each doc's fingerprint count.
     // q_c70 = 2: no cache — one block window over the 2-branch union
     // (2 scans) feeds the one capped-pair aggregate.
     // q_c71 = 1: the ablation aggregate runs over the fit's cached
     // centered frame.
-    "q_c69_winnow" -> 3, "q_c70_edit_neardup" -> 2,
+    "q_c69_winnow" -> 1, "q_c70_edit_neardup" -> 2,
     "q_c71_ablation" -> 1,
     // q_c72 = 2: broadcast probe scan + one candidate scan (the q_c6
     // brute shape with the label filter riding the join). q_c73 = 6:
@@ -335,13 +334,14 @@ class PlanAuditSpec extends SparkSpec {
     // q_c107 = 0: the L-row mixture table is a LocalRelation (the
     // stats aggregate collects at build — temperatureMixture pattern).
     "q_c106_ccnet_filter" -> 0, "q_c107_unimax" -> 0,
-    // q_c108 = 24: upper bound (q_c70/q_c91 class) — the persisted
+    // q_c108 = 18: upper bound (q_c70/q_c91 class) — the persisted
     // (id, hash) set is a 3-branch planted union (3 scans); the
-    // persisted prefix frame built from three references to it (9) is
-    // referenced twice, and the two verify sides reference the set
-    // once each: 2 × 9 + 2 × 3; executed documents reads: 3 at pin
-    // time, cached after.
-    "q_c108_jaccard_join" -> 24,
+    // persisted prefix frame built from two references to it (6: the
+    // set and its df aggregate; the size is a count in the rank
+    // window) is referenced twice, and the two verify sides reference
+    // the set once each: 2 × 6 + 2 × 3; executed documents reads: 3 at
+    // pin time, cached after.
+    "q_c108_jaccard_join" -> 18,
     // q_c109 = 1: one documents scan; synthesis + extraction are one
     // map-only codegen pass (HtmlExtract static call), no exchange.
     "q_c109_html_extract" -> 1,
@@ -380,13 +380,11 @@ class PlanAuditSpec extends SparkSpec {
     // r20; was a shingle explode+agg), both materialized by the
     // single sigK pin at build; the returned plan reads caches.
     "q_c93_attrition_funnel" -> 56,
-    // q_c95 = 16: the persisted distinct-(id, h) frame's child is a
-    // 4-branch union (4 scans) referenced 3 times (sharedKeyPairs,
-    // sizes x2), plus the map-only signature pass's own 4-scan union
-    // read — joined ONCE by both pair endpoints: 3 × 4 + 4. Reference
-    // multiplication on ONE cached frame, one executed scan set
-    // (q_c91/q_c93 class).
-    "q_c95_lsh_recall" -> 16,
+    // q_c95 = 8: no cache — the (id, h) postings over a 4-branch union
+    // (4 scans) feed one posting-pair pass, which carries both sides'
+    // sizes, plus the map-only signature pass's own 4-scan union read,
+    // joined ONCE by both pair endpoints: 4 + 4.
+    "q_c95_lsh_recall" -> 8,
     // q_c96 = 16: four prefix-length branches each scan the embeddings
     // twice (probe broadcast + corpus candidates) and reference the
     // persisted full-dim ground truth (2 scans per reference) — the
@@ -484,8 +482,12 @@ class PlanAuditSpec extends SparkSpec {
     // band_hash), read by one window = 1
     try {
       assert(evals(Dedup.minhashCandidates(docs, "doc_id", "text", maxBucketSize = 3)) == 1)
-      // drop = candidates 1 + verify (tokens only) 0 + anti join 0 = 1
-      assert(evals(Dedup.dropNearDuplicates(docs, "doc_id", "text")) == 1)
+      // drop = candidates 1 + verify (tokens only) 0 + anti join 0 = 1;
+      // it reads the corpus 3 times: signatures, one verify word-set
+      // pass for both pair sides, and the anti join
+      val drop = Dedup.dropNearDuplicates(docs, "doc_id", "text")
+      assert(evals(drop) == 1)
+      assert(parquetScans(drop.queryExecution.executedPlan) == 3)
       // incremental = old corpus 1 (window gate, no groupBy joined
       // back) + new batch 1 = 2: each corpus is signed once
       assert(evals(Dedup.incrementalNearDup(older, newer, "doc_id", "text",

@@ -158,6 +158,11 @@ class CorpusPropertySpec extends SparkSpec {
     // contributes at least one common fingerprint (k=4, w=4 → run 7)
     val k = 4; val w = 4
     val rnd = new scala.util.Random(77)
+    // brute-force winnowing of one text: md5₅₂ k-gram hashes, the min of
+    // every full window of w, as a set
+    def fps(t: String): Set[Long] = t.split(" ").toSeq.sliding(k)
+      .map(g => java.lang.Long.parseLong(md5Hex(g.mkString(" ")).take(13), 16))
+      .toSeq.sliding(w).map(_.min).toSet
     (0 until 10).foreach { trial =>
       // distinct vocabularies per side so ONLY the planted run matches
       val run = (0 until (w + k - 1)).map(j => s"r${trial}_$j").mkString(" ")
@@ -166,12 +171,17 @@ class CorpusPropertySpec extends SparkSpec {
           (0 until post).map(j => s"${tag}b${trial}_$j")).mkString(" ")
       val a = side("x", rnd.nextInt(20), rnd.nextInt(20))
       val b = side("y", rnd.nextInt(20), rnd.nextInt(20))
+      // doc 1 has a second row: rows sharing an id are one document,
+      // whose fingerprints are the union of its rows' fingerprints
+      val c = (0 until 8 + rnd.nextInt(20)).map(j => s"z${trial}_$j").mkString(" ")
       val out = CorpusPipeline.winnowFingerprints(
-        Seq((1L, a), (2L, b)).toDF("doc_id", "text"), "doc_id", "text",
+        Seq((1L, a), (2L, b), (1L, c)).toDF("doc_id", "text"), "doc_id", "text",
         k = k, w = w, minShared = 1)
         .collect()
-      assert(out.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L),
-        s"trial $trial: planted $run run produced no shared fingerprint\nA=$a\nB=$b")
+      val (f1, f2) = (fps(a) ++ fps(c), fps(b))
+      assert(out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+          .toSeq == Seq((1L, 2L, (f1 & f2).size.toLong, f1.size.toLong, f2.size.toLong)),
+        s"trial $trial: planted $run run\nA=$a\nB=$b\nC=$c")
     }
   }
 
@@ -248,10 +258,14 @@ class CorpusPropertySpec extends SparkSpec {
       gs.map(md5h).toSet
     }
     for (round <- 0 until 3) {
-      val docs = (0L until 40L).map(i => (i, doc(88000 + 1000 * round + i, 1, 12)))
-      val sets = docs.map { case (id, t) => id -> shingleSet(t) }.toMap
+      // id 7 has a second row: rows sharing an id are one document,
+      // whose set is the union of its rows' shingle sets
+      val docs = (0L until 40L).map(i => (i, doc(88000 + 1000 * round + i, 1, 12))) :+
+        (7L, doc(88000 + 1000 * round + 99, 1, 12))
+      val sets = docs.groupBy(_._1).map { case (id, rows) => id -> rows.flatMap(r => shingleSet(r._2)).toSet }
+      val ids = sets.keys.toSeq
       val expected = (for {
-        a <- docs.map(_._1); b <- docs.map(_._1) if a < b
+        a <- ids; b <- ids if a < b
         ia = sets(a); ib = sets(b)
         inter = (ia & ib).size.toLong
         uni = (ia | ib).size.toLong

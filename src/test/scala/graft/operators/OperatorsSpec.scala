@@ -746,11 +746,15 @@ class OperatorsSpec extends SparkSpec {
       // excerpts: a doc's 8-token prefix (every shingle shared by 2)
       (0 until 10).map(i => (200L + i) -> prefix(base(i)._2, 8)) ++
       // fewer than n tokens: gated out
-      Seq(300L -> "ka lo mi", 301L -> "")
-    val sets = corpus.map { case (id, t) =>
-      val toks = t.trim.split("\\s+").filter(_.nonEmpty).toSeq
-      id -> (if (toks.size < n) Set.empty[String]
-             else toks.sliding(n).map(_.mkString(" ")).toSet)
+      Seq(300L -> "ka lo mi", 301L -> "") :+
+      // a second row for excerpt 200, overlapping its first row and doc
+      // 0: rows sharing an id are one document, never paired with itself
+      (200L -> s"${prefix(base(0)._2, 10)} tail1 tail2")
+    val sets = corpus.groupBy(_._1).map { case (id, rows) =>
+      id -> rows.flatMap { case (_, t) =>
+        val toks = t.trim.split("\\s+").filter(_.nonEmpty).toSeq
+        if (toks.size < n) Nil else toks.sliding(n).map(_.mkString(" "))
+      }.toSet
     }.filter(_._2.nonEmpty)
     val df = sets.flatMap(_._2).groupBy(identity).map { case (g, v) => g -> v.size }
     def reference(dfCap: Int, minPpm: Long): Set[(Long, Long, Long, Long, Long, Long, Long)] =
@@ -790,7 +794,11 @@ class OperatorsSpec extends SparkSpec {
       (2L, "a b c d e f g h i j"),   // exact dup of 1 → J=1, decile 10
       (3L, "a b c d e f g h i j k"), // appended token → J=8/9, decile 8
       (4L, "a b c d e"),             // excerpt → J=3/8, decile 3
-      (5L, "totally different words nobody shares at all"))
+      (5L, "totally different words nobody shares at all"),
+      // two rows of one id are one document: its set is the union, its
+      // signature the slot-wise min of both rows' signatures
+      (6L, "a b c d e f g h i j k"),
+      (6L, "different words nobody shares at all"))
     val sigs = 16; val bands = 8
     val out = Dedup.lshRecallAudit(corpus.toDF("doc_id", "text"),
         sigs = sigs, bands = bands, dfCap = 50, minJaccardPpm = 100000L)
@@ -798,10 +806,10 @@ class OperatorsSpec extends SparkSpec {
       .toMap
 
     // independent replay: exact Jaccard pairs + the md5 sig chain
-    val hsets = corpus.map { case (id, t) => id -> sh3(t) }.toMap
+    val hsets = corpus.groupBy(_._1).map { case (id, rows) => id -> rows.flatMap(r => sh3(r._2)).toSet }
     def sig(id: Long): Seq[Long] =
       (0 until sigs).map(j => hsets(id).map(h => h52(s"${h}_$j")).min)
-    val ids = corpus.map(_._1)
+    val ids = corpus.map(_._1).distinct
     val truePairs = for {
       a <- ids; b <- ids if a < b
       inter = (hsets(a) & hsets(b)).size.toLong if inter > 0

@@ -84,9 +84,21 @@ class ScopedCacheSpec extends SparkSpec {
   }
 
   test("lshRecallAudit under withCached leaves no cached plans") {
-    // persists the distinct (id, h) frame, also on the sampled path
     assertScopedClean(Dedup.lshRecallAudit(docs, sigs = 8, bands = 4))
     assertScopedClean(Dedup.lshRecallAudit(docs, sigs = 8, bands = 4, samplePpm = 500000L))
+  }
+
+  test("lshRecallAudit and winnowFingerprints cache nothing, even unscoped") {
+    // their set sizes come out of the posting-pair pass: no pinned
+    // frame is left to release
+    def assertNoCache(build: => org.apache.spark.sql.DataFrame): Unit = {
+      spark.catalog.clearCache()
+      assert(build.count() >= 0)
+      assert(Shim.cacheManagerIsEmpty(spark), "a cached plan was left behind")
+    }
+    assertNoCache(Dedup.lshRecallAudit(docs, sigs = 8, bands = 4))
+    assertNoCache(Dedup.lshRecallAudit(docs, sigs = 8, bands = 4, samplePpm = 500000L))
+    assertNoCache(CorpusPipeline.winnowFingerprints(docs, "doc_id", "text", minShared = 1))
   }
 
   test("ExactQuantiles.byGroup under withCached leaves no cached plans") {

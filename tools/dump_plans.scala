@@ -1,4 +1,5 @@
-// spark-shell -I script: dump .explain("formatted") for selected queries.
+// spark-shell -I script: dump the executed .explain("formatted") plan
+// of selected queries.
 //   /opt/spark/bin/spark-shell --master 'local[32]' --driver-memory 12g \
 //     --driver-class-path target/scala-2.13/classes \
 //     -I tools/dump_plans.scala
@@ -7,6 +8,12 @@
 //   SPARK_GRAFT_QUERIES  comma-separated query names (required)
 //   SPARK_GRAFT_PLAN_OUT output dir (default plans/r19)
 //   SPARK_GRAFT_PLAN_TAG file suffix, e.g. before/after (default before)
+// Each query runs once first, every row discarded (a noop sink on the
+// DataFrame's own QueryExecution), so under AQE the file holds the
+// FINAL plan — reused exchanges, broadcast choices and coalesced
+// stages as executed, the plan PlanAuditSpec walks — not the initial
+// one. A `format("noop")` write would run a separate QueryExecution
+// whose plan the DataFrame never sees.
 // Streaming-harness queries (MemoryStream inside the builder) still
 // produce a useful plan: the final returned DataFrame is batch.
 {
@@ -21,10 +28,12 @@
   names.foreach { n =>
     try {
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
+      df.queryExecution.executedPlan.execute().foreach(_ => ())
       val plan = df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       val p = java.nio.file.Paths.get(outDir, s"${n}_$tag.txt")
       java.nio.file.Files.write(p, plan.getBytes("UTF-8"))
       println(s"[plans] wrote $p (${plan.length} chars)")
     } catch { case e: Throwable => println(s"[plans] $n FAILED: ${e.getMessage}") }
+    spark.catalog.clearCache()
   }
 }
