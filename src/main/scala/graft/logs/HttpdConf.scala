@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
-import scala.collection.mutable.ArrayBuffer
 
 /**
  * Apache httpd.conf LogFormat extraction — the Spark-native equivalent

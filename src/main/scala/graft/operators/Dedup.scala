@@ -612,7 +612,7 @@ object Dedup {
       cellCols: Seq[String],
       idCol: String,
       threshold: Double,
-      maxCellSize: Int = 0): DataFrame = {
+      maxCellSize: Int): DataFrame = {
     val dropped =
       if (maxCellSize <= 0) allPairsDroppedIds(assigned, cellCols, idCol, threshold)
       else cappedDroppedIds(assigned, cellCols, idCol, threshold, maxCellSize)
@@ -928,7 +928,8 @@ object Dedup {
         // the jaccard OF the kept (smallest-id) match, not the max over
         // all matches — keeps the row a deterministic function of ids
         min_by(col("jaccard"), col("id_a")).as("jaccard"))
-    newProj.select(col(idCol).as("new_id"))
+    // one row per new document: rows sharing an id are one document
+    newProj.select(col(idCol).as("new_id")).distinct()
       .join(verified.withColumnRenamed("id_b", "new_id"), Seq("new_id"), "left")
   }
 

@@ -387,7 +387,7 @@ object Similarity {
       m: Int = 8,
       ks: Int = 16,
       rerankDepth: Int = 32): DataFrame = {
-    import graft.functions.{PqAdcTable, PqCodes, PqTableDist}
+    import graft.functions.PqCodes
     val nSeedRows = math.max(nSeeds, ks)
     val seedRows: Array[Array[Long]] = candidates
       .filter(col(idCol) < nSeedRows).orderBy(idCol)

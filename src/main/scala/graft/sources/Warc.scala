@@ -395,13 +395,16 @@ object Warc {
    * rename is only accepted as a peer's commit when the present file
    * has OUR length; a stale member from a prior run with CHANGED data
    * is deleted and the rename retried once, so the fallback never
-   * silently keeps old bytes. */
+   * silently keeps old bytes. A local path skips FileContext: without
+   * native libhadoop its rename forks `readlink` per call, and
+   * `LocalCheckpointFileManager.replaceLocal` is one atomic rename(2)
+   * (FileContext deletes, then renames). */
   private def commitMember(
       f: org.apache.hadoop.fs.FileSystem,
       conf: org.apache.hadoop.conf.Configuration,
       tmp: org.apache.hadoop.fs.Path,
       fin: org.apache.hadoop.fs.Path): Unit = {
-    try {
+    if (!graft.streaming.LocalCheckpointFileManager.replaceLocal(f, tmp, fin)) try {
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(fin.toUri, conf)
       fc.rename(tmp, fin, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     } catch {

@@ -27,6 +27,19 @@ import org.apache.spark.sql.SparkSession
  *    sf0.1 rows (q_d31 5.95/5.15 → 5.15/4.33, q_d32 6.54/5.26 →
  *    5.46/4.89, one-JVM toggled A/B ×2) and the per-put lookup grows
  *    with state size at 100 TB/day.
+ *  - LocalCheckpointFileManager: checkpoint files on a local path are
+ *    written with java.nio, not Hadoop's local `FileContext`. Without
+ *    native libhadoop that `FileContext` forks a `readlink` or `chmod`
+ *    process per file: a 2 KB atomic create cost 29-37 ms against
+ *    0.25 ms through java.nio, and the perfbench `stream` workload
+ *    (4 vCPU) spent 313 of its 341 ms median trigger in the RocksDB
+ *    state commit, nearly all of it changelog file writes (with this
+ *    manager: commit ~12 ms, run_s 0.60 → 0.30 s, 10/10 pairs). Spark's
+ *    `FileSystemBasedCheckpointFileManager` (a conf-only switch) still
+ *    forks `chmod` per create and mkdirs and took 1.2-1.3x the nio time
+ *    per file. Other schemes (HDFS, object stores) keep Spark's
+ *    default manager; the file formats are unchanged, so a checkpoint
+ *    resumes across either manager (spec-pinned both ways).
  */
 object StateStoreConf {
 
@@ -36,7 +49,9 @@ object StateStoreConf {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
       "true",
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" ->
-      "false")
+      "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[LocalCheckpointFileManager].getName)
 
   /** Fold the recommended confs into a session builder. */
   def applyTo(b: SparkSession.Builder): SparkSession.Builder =

@@ -99,6 +99,20 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("C62 incrementalNearDup returns one row per new document, even for a duplicated id") {
+    // new id 5 arrives as two rows: rows sharing an id are one document
+    val nu = Seq(
+      (2L, "the quick brown fox jumps over the lazy cat"),
+      (5L, "unrelated text with words nobody else uses"),
+      (5L, "a second row of the same document"),
+      (7L, "nothing here matches the old corpus at all")).toDF("doc_id", "text")
+    val got = Dedup.incrementalNearDup(docs, nu, "doc_id", "text", threshold = 0.5)
+      .select("new_id", "matched_old_id").as[(Long, Option[Long])].collect()
+    assert(got.map(_._1).sorted.toSeq == Seq(2L, 5L, 7L), got.toSeq)
+    assert(got.toMap.apply(2L).contains(1L)) // the smallest matching old id
+    assert(got.toMap.apply(7L).isEmpty)
+  }
+
   test("C70 edit-distance pairs: planted suffix typo found at its exact distance") {
     val d = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.io.File
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** D1/D2 streaming specs: parse-in-stream + watermarked windows, and
  * stateful gap sessionization (SURVEY.md §2 D1-D2). */
@@ -284,33 +285,72 @@ class LogStreamSpec extends SparkSpec {
     Seq((14L, "a1 a2 a3 a4 a5 a6 a7 a8 trailer"), (15L, "g1 g2 g3 g4 g5 g6 g7 g8 g9")),
     Seq((16L, "g1 g2 g3 g4 g5 g6 g7 g8 g9 tail16"), (17L, "f1 f2 f3 f4 f5 f6 f7 f8 f9 f10")))
 
+  /** The D31/D32 gates, each with a post-resume verdict that needs
+   * restored state: 14 copies a warm-start corpus doc, and 17 repeats
+   * doc 11 from before the kill. */
+  private def resumeGates: Seq[(String, DataFrame => Dataset[_], (Long, Int))] = {
+    val corpus = resumeCorpus.toDF("doc_id", "text")
+    Seq(
+      ("D31", LogStream.exactSubstrStream(_, corpus), (17L, 0)),
+      ("D32", LogStream.leakageGateStream(_, corpus), (14L, 0)))
+  }
+
+  /** Feed the resume chunks to `gate` on one checkpoint: the chunks up
+   * to `killAfter` under the confs `before`, then stop ("kill") and
+   * resume with the rest under `after`. killAfter = 0 is one
+   * uninterrupted run under `after`. Returns the output rows and the
+   * checkpoint dir. */
+  private def resumeRun(gate: DataFrame => Dataset[_], killAfter: Int,
+      before: Seq[(String, String)], after: Seq[(String, String)]): (Set[(Long, Int)], File) = {
+    val root = java.nio.file.Files.createTempDirectory("graft_resume_").toFile
+    root.deleteOnExit()
+    resumeChunks.zipWithIndex.foreach { case (rows, i) =>
+      writeChunk(root, i, rows)
+      if (i + 1 == killAfter)
+        graft.operators.Scoped.withConf(spark, before: _*)(runAvailable(root, gate))
+    }
+    graft.operators.Scoped.withConf(spark, after: _*)(runAvailable(root, gate))
+    (spark.read.parquet(new File(root, "out").getAbsolutePath).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet, new File(root, "ckpt"))
+  }
+
   test("D31/D32 kill-and-resume equals one uninterrupted run") {
     // Under StateStoreConf.recommended (RocksDB + changelog).
     // Interrupted: feed half the chunks, stop, resume from the same
-    // checkpoint with the rest. Each row names a post-resume verdict that
-    // needs restored state: 14 copies a warm-start corpus doc, and 17
-    // repeats doc 11 from before the kill.
-    val corpus = resumeCorpus.toDF("doc_id", "text")
-    val gates: Seq[(String, DataFrame => Dataset[_], (Long, Int))] = Seq(
-      ("D31", LogStream.exactSubstrStream(_, corpus), (17L, 0)),
-      ("D32", LogStream.leakageGateStream(_, corpus), (14L, 0)))
-    def run(gate: DataFrame => Dataset[_], killAfter: Int): Set[(Long, Int)] = {
-      val root = java.nio.file.Files.createTempDirectory("graft_resume_").toFile
-      root.deleteOnExit()
-      resumeChunks.zipWithIndex.foreach { case (rows, i) =>
-        writeChunk(root, i, rows)
-        if (i + 1 == killAfter) runAvailable(root, gate) // "kill" here
-      }
-      runAvailable(root, gate)
-      spark.read.parquet(new File(root, "out").getAbsolutePath).collect()
-        .map(r => (r.getLong(0), r.getInt(1))).toSet
+    // checkpoint with the rest.
+    val rec = StateStoreConf.recommended
+    resumeGates.foreach { case (name, gate, needsState) =>
+      val (cut, _) = resumeRun(gate, resumeChunks.length / 2, rec, rec)
+      val (whole, _) = resumeRun(gate, 0, rec, rec)
+      assert(cut == whole, s"$name interrupted vs uninterrupted:\n$cut\n$whole")
+      assert(cut.contains(needsState), s"$name: state lost on resume: $cut")
     }
-    graft.operators.Scoped.withConf(spark, StateStoreConf.recommended: _*) {
-      gates.foreach { case (name, gate, needsState) =>
-        val cut = run(gate, killAfter = resumeChunks.length / 2)
-        val whole = run(gate, killAfter = 0)
-        assert(cut == whole, s"$name interrupted vs uninterrupted:\n$cut\n$whole")
-        assert(cut.contains(needsState), s"$name: state lost on resume: $cut")
+  }
+
+  test("D31/D32 kill-and-resume across checkpoint file managers equals one uninterrupted run") {
+    // A checkpoint written by Spark's default manager resumes under
+    // graft's LocalCheckpointFileManager, and the reverse: the file
+    // formats are the same, only the write path differs.
+    val rec = StateStoreConf.recommended
+    val sparkDefault = rec.filterNot(_._1 == "spark.sql.streaming.checkpointFileManagerClass")
+    assert(sparkDefault.length == rec.length - 1)
+    // Hadoop's checksummed local FS leaves a `.<name>.crc` sidecar per
+    // file (Spark's own state-file checksums are `<name>.crc`)
+    def crcFiles(d: File): Seq[String] = {
+      val s = java.nio.file.Files.walk(d.toPath)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith(".") && n.endsWith(".crc")).toList
+      finally s.close()
+    }
+    resumeGates.foreach { case (name, gate, needsState) =>
+      val (whole, wholeCkpt) = resumeRun(gate, 0, rec, rec)
+      // every checkpoint writer took graft's manager: no checksum sidecar
+      assert(crcFiles(wholeCkpt).isEmpty, s"$name: written through Hadoop's FS: ${crcFiles(wholeCkpt)}")
+      for ((first, second, dir) <- Seq((sparkDefault, rec, "default -> graft"),
+          (rec, sparkDefault, "graft -> default"))) {
+        val (cut, _) = resumeRun(gate, resumeChunks.length / 2, first, second)
+        assert(cut == whole, s"$name $dir interrupted vs uninterrupted:\n$cut\n$whole")
+        assert(cut.contains(needsState), s"$name $dir: state lost on resume: $cut")
       }
     }
   }
@@ -354,6 +394,9 @@ class LogStreamSpec extends SparkSpec {
       == "true")
     assert(m("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows")
       == "false")
+    // checkpoint files on local paths skip Hadoop's forking local FileContext
+    assert(m("spark.sql.streaming.checkpointFileManagerClass")
+      == classOf[LocalCheckpointFileManager].getName)
     // applyTo(session) must set every conf on a live session
     val prev = StateStoreConf.recommended.map { case (k, _) =>
       k -> spark.conf.getOption(k) }
